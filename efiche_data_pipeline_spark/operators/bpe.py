@@ -106,6 +106,15 @@ def _batch_safe_merges(
        COLLECTED pair (p, q) with count ≥ c has q == l or p == r, a
        child of it could outrank the candidate — stop and recount.
        Parents below the collection horizon are < c by rule 1.
+    4. **No aliasing**: rule 3 assumes every pair holding s is born
+       from the merge. If s already exists as a symbol — it appears in
+       a collected row, is END_OF_WORD (the literal text ``</w>``
+       rebuilds it), or an earlier accepted merge made it (``t+he``
+       then ``th+e``) — the created sites ADD to the pairs s already
+       has, and their sum can overtake a later candidate. Such a
+       merge is accepted but ends the batch. (:func:`bpe_learn` cuts
+       the batch the same way at a symbol an earlier round made,
+       whose pairs may all sit below the collection horizon.)
 
     Walking stops at the first violation (an AFFECTED candidate's
     count may have shrunk, so later candidates cannot be ordered
@@ -113,6 +122,7 @@ def _batch_safe_merges(
     bit-identical to the one-merge-at-a-time loop."""
     out: list[tuple[str, str, int]] = []
     floor = int(rows[-1]["c"]) if not complete else None
+    existing = {x for p in rows for x in (p["l"], p["r"])} | {END_OF_WORD}
     sym: set[str] = set()
     for row in rows:
         if len(out) >= budget:
@@ -134,6 +144,8 @@ def _batch_safe_merges(
             if conflict:
                 break
         out.append((l, r, c))
+        if l + r in existing or l + r in sym:
+            break
         sym.update((l, r, l + r))
     return out
 
@@ -171,6 +183,7 @@ def bpe_learn(
         .localCheckpoint(eager=True)
     )
     merge_rows: list[tuple[int, str, str, int, str]] = []
+    made: set[str] = set()
     top = max(1, int(batch_top))
     rounds = 0
     while len(merge_rows) < n_merges:
@@ -199,6 +212,8 @@ def bpe_learn(
             budget=n_merges - len(merge_rows),
         )
         for l, r, c in safe:
+            aliased = l + r in made
+            made.add(l + r)
             merge_rows.append((len(merge_rows) + 1, l, r, c, l + r))
             seqs = seqs.select(
                 "word",
@@ -207,6 +222,8 @@ def bpe_learn(
                     F.col("seq"), F.lit(f"({l})({r})"), F.lit(f"({l}{r})")
                 ).alias("seq"),
             )
+            if aliased:
+                break  # rule 4 of _batch_safe_merges, across rounds
         rounds += 1
         if rounds % 4 == 0 and len(merge_rows) < n_merges:
             seqs = seqs.localCheckpoint(eager=True)

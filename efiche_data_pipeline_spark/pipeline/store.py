@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.parquet import read_parquet
+
 
 class ConcurrentWriteError(RuntimeError):
     """Raised when a second writer races a versioned commit on the same
@@ -117,7 +119,7 @@ class Store:
 
     def read(self, table: str) -> DataFrame:
         self._recover_compact(table)
-        return self.spark.read.parquet(self.path(table))
+        return read_parquet(self.spark, self.path(table))
 
     # -- layout metadata ------------------------------------------------
     # A small JSON sidecar (`<table>/_LAYOUT.json`) recording layout
@@ -581,7 +583,7 @@ class Store:
                 "committed with append_version); its _v directory holds "
                 "only the delta — use read_union to see the full table"
             )
-        return self.spark.read.parquet(self._vdir(table, v))
+        return read_parquet(self.spark, self._vdir(table, v))
 
     def rollback(self, table: str, version: int) -> None:
         """Point the table back at an older snapshot (the newer
@@ -827,14 +829,14 @@ class Store:
                 )
             ]
             dfs = [
-                self.spark.read.option("basePath", d).parquet(d)
+                read_parquet(self.spark, d, basePath=d)
                 for d in (live or dirs)
             ]
             out = dfs[0]
             for x in dfs[1:]:
                 out = out.unionByName(x)
             return out
-        return self.spark.read.parquet(*dirs)
+        return read_parquet(self.spark, *dirs)
 
     def delete_keys(
         self, table: str, keys: DataFrame, key_col: str, pinned: bool = False
@@ -932,7 +934,7 @@ class Store:
                     # (the bucketed dedup/novelty folds).
                     pcols = self._layer_partition_columns(table, layer)
                     cleaned = clean(
-                        self.spark.read.parquet(self._vdir(table, layer))
+                        read_parquet(self.spark, self._vdir(table, layer))
                     ).localCheckpoint(eager=True)
                     w = cleaned.write.mode("overwrite")
                     if pcols:

@@ -538,7 +538,17 @@ def build_warehouse(
     dominant time-filtered access path. With ``stats=True`` returns
     per-table row counts (reference: get_warehouse_stats, :238-253) —
     11 extra count jobs; pass ``stats=False`` when the caller only
-    needs the tables (e.g. an MV readback query path)."""
+    needs the tables (e.g. an MV readback query path).
+
+    Caller contract for ``operational``: its frames must not be
+    lineage over this store's own table paths (for example
+    ``store.read("encounters")``). Downstream builds plan against
+    those source frames from t=0 with no ordering edge on the
+    operational copy-writes (``_need`` returns nothing), so a frame
+    that reads the path its own copy-write overwrites would read it
+    mid-write. Pass frames built from an independent source (a
+    generator, another store, staging files), or write the
+    operational tables first and omit ``operational``."""
     from concurrent.futures import Future, ThreadPoolExecutor
 
     done: dict[str, Future] = {}
@@ -546,6 +556,8 @@ def build_warehouse(
     # producer created right after committing, instead of paying parquet
     # footer/schema inference per store.read on the critical path
     # (measured ~0.1 s per read × 7 reads ahead of the fact build).
+    # The schema cache behind store.read does not help here: a read
+    # right after a write opens new files, so it still infers.
     written: dict[str, DataFrame] = {}
 
     def _get(name: str) -> DataFrame:

@@ -35,6 +35,26 @@ def oracle():
     con.close()
 
 
+def jobs_launched(spark, fn):
+    """(jobs ``fn()`` launched, its result). Job ids are dense from 0,
+    so the count is the move of the newest id in the status store's
+    ``jobsList`` (sorted by id; newest first in Spark 4). The listener
+    bus is drained first so every job submitted so far is in the
+    store."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        if jobs.isEmpty():
+            return -1
+        return max(jobs.head().jobId(), jobs.last().jobId())
+
+    before = newest()
+    out = fn()
+    return newest() - before, out
+
+
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     """Driver-style normalization: columns sorted by name, rows sorted
     by all columns, index dropped."""

@@ -163,14 +163,40 @@ def test_bpe_iterations_never_rescan_the_corpus(spark):
     assert "Generate" not in plan  # the explode ran once, pre-checkpoint
 
 
+def test_batch_safe_merges_stops_at_aliased_symbol():
+    """t+he and th+e both make 'the': after the second, every (the, y)
+    pair holds the created sites of BOTH merges, so their sum may
+    outrank (a,b) although neither parent does. The batch must end at
+    the aliasing merge; likewise at a merge whose symbol a collected
+    row already holds."""
+    from efiche_data_pipeline_spark.operators.bpe import _batch_safe_merges
+
+    def rows(*triples):
+        return [{"l": l, "r": r, "c": c} for l, r, c in triples]
+
+    alias = rows(("t", "he", 9), ("th", "e", 8), ("a", "b", 7), ("he", "x", 2))
+    assert _batch_safe_merges(alias, complete=True, budget=10) == [
+        ("t", "he", 9),
+        ("th", "e", 8),
+    ]
+    held = rows(("a", "bc", 9), ("x", "y", 8), ("abc", "z", 2))
+    assert _batch_safe_merges(held, complete=True, budget=10) == [("a", "bc", 9)]
+    plain = rows(("a", "bc", 9), ("x", "y", 8), ("q", "z", 2))
+    assert _batch_safe_merges(plain, complete=True, budget=10) == [
+        ("a", "bc", 9),
+        ("x", "y", 8),
+        ("q", "z", 2),
+    ]
+
+
 def test_batched_argmax_equals_sequential(spark):
     """The top-M batched merge extraction (bpe_learn's one-job-many-
     merges round) must be BIT-IDENTICAL to the one-merge-per-job
     sequential loop (batch_top=1 degenerates to it). Planted shapes
     cover the hazards: chained merges (each depends on the previous —
     never batchable), self-merges ((a,a) — created-pair bound must
-    stop the batch), count ties broken by lex order, and a realistic
-    mixed corpus."""
+    stop the batch), count ties broken by lex order, a realistic
+    mixed corpus, and a merge whose new symbol already exists."""
     corpora = [
         ([" ".join(_WORDS)], 8),  # chained est-merges + ties
         (["a a a a a b a b b c c d"], 4),  # self-merge + tiny tail
@@ -184,6 +210,17 @@ def test_batched_argmax_equals_sequential(spark):
             10,
         ),
         (["xy xy xy zw zw zw xz wy"], 6),  # disjoint equal-count pairs
+        # aliasing: the literal text "</w>" rebuilds END_OF_WORD via
+        # <+/w>, so (e,</w>) gains the created sites on top of its own
+        # and overtakes (h,e) — the t+he / th+e hazard plain words can
+        # reach
+        (
+            [
+                "he</w> he</w> hhe</w> hhe</w> hhe</w> hhe</w> </w>he",
+                "tt tt tt tt th th th th",
+            ],
+            6,
+        ),
     ]
     for texts, n in corpora:
         vocab = word_vocab(_docs(spark, texts)).localCheckpoint(eager=True)

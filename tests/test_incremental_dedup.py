@@ -1574,11 +1574,11 @@ class _CrashAfterUpsertStore(Store):
         super().__init__(spark, root)
         self.armed = False
 
-    def delete_keys(self, table, keys, key_col):
+    def delete_keys(self, table, keys, key_col, pinned=False):
         if self.armed and table == "span_reports":
             self.armed = False
             raise RuntimeError("injected crash before report delete")
-        return super().delete_keys(table, keys, key_col)
+        return super().delete_keys(table, keys, key_col, pinned=pinned)
 
 
 def test_forget_span_documents_crash_retry_converges(spark, tmp_path):

@@ -13,7 +13,7 @@ import pytest
 
 from efiche_data_pipeline_spark.plans.registry import QUERIES
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_launched
 
 
 def _executed(name, spark):
@@ -217,3 +217,28 @@ def test_heavy_hitter_recount_broadcasts_candidates(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan, plan
+
+
+# Job budgets: re-opening unchanged parquet costs 0 jobs. Every
+# inferring ``spark.read.parquet`` launches a footer-scan job; the
+# schema cache behind load_table and the Store reads skips it while
+# the files are unchanged. A refactor that routes these reads around
+# the cache brings that job back on every query of a session.
+
+
+def test_reloading_fixture_table_launches_no_job(spark):
+    from efiche_data_pipeline_spark.sources.catalog import load_table
+
+    load_table(spark, SF_DIR, "lineitem")
+    n, _ = jobs_launched(spark, lambda: load_table(spark, SF_DIR, "lineitem"))
+    assert n == 0
+
+
+def test_rereading_unchanged_store_table_launches_no_job(spark, tmp_path):
+    from efiche_data_pipeline_spark.pipeline.store import Store
+
+    store = Store(spark, str(tmp_path / "store"))
+    store.overwrite(spark.range(10).selectExpr("id", "id % 3 AS k"), "t")
+    store.read("t")
+    n, _ = jobs_launched(spark, lambda: store.read("t"))
+    assert n == 0

@@ -15,6 +15,7 @@ overwrite mode.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,25 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class Store:
+    """A root directory of parquet tables (see the module docstring).
+
+    Fault seam: every public write or delete method — ``overwrite``,
+    ``overwrite_partitions``, ``append``, ``append_new``,
+    ``merge_upsert``, ``overwrite_sorted``, ``compact``,
+    ``append_evolved``, ``write_version``, ``append_version``,
+    ``compact_layers``, ``rewrite_layers``, ``rollback``,
+    ``delete_keys``, ``delete_where``, ``vacuum_versions`` — first calls
+    ``self._fault(op, table)`` with its own name as ``op``, before any
+    I/O. Methods that delegate (``append_new`` → ``append``,
+    ``merge_upsert`` → ``overwrite``, ``compact_layers`` →
+    ``rewrite_layers``, ...) fire again under the callee's name. A
+    layered ``delete_keys``/``delete_where`` also fires
+    ``"<op>:commit"`` after its layer rewrites, just before it claims
+    the slot for its manifest + pointer commit. The class method is a
+    no-op; crash tests arm one instance by assigning an instance
+    attribute (``tests/conftest.py:crash_once``), so a crash window is
+    named by ``(op, table)`` and never re-types a method signature."""
+
     def __init__(self, spark: SparkSession, root: str, audit: bool = False):
         import threading
 
@@ -43,6 +63,24 @@ class Store:
         # its writes serialize (concurrent appends to one parquet path
         # share a _temporary staging dir and can clobber each other).
         self._audit_lock = threading.Lock()
+
+    def _fault(self, op: str, table: str) -> None:
+        """Fault-injection seam (see the class docstring): a no-op."""
+
+    @staticmethod
+    def _write(
+        df: DataFrame,
+        path: str,
+        partition_by: list[str] | None = None,
+        mode: str = "overwrite",
+        **options,
+    ) -> None:
+        """The one parquet writer: ``df`` to ``path``, hive-partitioned
+        when ``partition_by`` is set."""
+        w = df.write.mode(mode).options(**options)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
 
     def _log(self, table: str, operation: str) -> None:
         """Append one row to the append-only ``audit_log`` table — the
@@ -161,21 +199,19 @@ class Store:
         if self.is_layered(table):
             return self.layer_partitioning(table)
         if self.exists(table):
-            return self._partition_columns(table)
+            return self._dir_partition_columns(self.path(table))
         cur = self.current_version(table)
         if cur is not None:
             return self._dir_partition_columns(self._vdir(table, cur))
         return []
 
     def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
+        self._fault("overwrite", table)
         # Spark's static overwrite truncates the directory — carry the
         # layout sidecar across (it describes the layout the caller is
         # re-creating; layout MIGRATIONS re-stamp it explicitly after).
         meta = self.read_layout_meta(table)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+        self._write(df, self.path(table), partition_by)
         if meta is not None:
             self.write_layout_meta(table, meta)
         self._log(table, "overwrite")
@@ -192,19 +228,15 @@ class Store:
         intended content of each touched partition; if the new content
         derives from reading those same partitions, pin it
         (``localCheckpoint``) before calling."""
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(self.path(table))
+        self._fault("overwrite_partitions", table)
+        self._write(
+            df, self.path(table), partition_by, partitionOverwriteMode="dynamic"
         )
         self._log(table, "overwrite_partitions")
 
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
+        self._fault("append", table)
+        self._write(df, self.path(table), partition_by, mode="append")
         self._log(table, "append")
 
     def append_new(
@@ -222,6 +254,7 @@ class Store:
         (column pruning keeps this cheap at scale). ``partition_by``
         lays new files under partition directories (readers with a
         matching literal filter then prune at the directory level)."""
+        self._fault("append_new", table)
         if self.exists(table):
             existing = self.read(table).select(key)
             df = df.join(existing, key, "left_anti")
@@ -235,6 +268,7 @@ class Store:
         Idempotent: re-merging the same updates is a no-op. Used by the
         streaming foreachBatch sink (streaming/incremental.py), where
         idempotent batch replay is the exactly-once-ish contract."""
+        self._fault("merge_upsert", table)
         if self.exists(table):
             existing = self.read(table)
             keep = existing.join(updates.select(*keys), keys, "left_anti")
@@ -260,6 +294,7 @@ class Store:
         this is the data-skipping half of partitioning: range filters on
         the sort key skip whole files/row-groups without any partition
         directories (the poor man's Z-order for the 1-key case)."""
+        self._fault("overwrite_sorted", table)
         n = partitions or df.sparkSession.sparkContext.defaultParallelism
         clustered = df.repartitionByRange(n, *sort_by).sortWithinPartitions(*sort_by)
         self.overwrite(clustered, table)
@@ -291,34 +326,16 @@ class Store:
         partition pruning — the layout IS the index."""
         import shutil
 
-        from pyspark.sql import functions as F
-
+        self._fault("compact", table)
         self._recover_compact(table)
         final = self.path(table)
-        part_cols = self._partition_columns(table)
-        df = self.read(table)
+        part_cols = self._dir_partition_columns(final)
         tmp = self.path(f"_compact_{table}")
-        if part_cols:
-            # partitionBy re-creates the directory layout; the shuffle
-            # key is (partition cols, row-hash % target_files) so each
-            # partition's rows land in at most ``target_files`` write
-            # tasks — per-partition file count is capped at
-            # ``target_files`` (exactly 1 when target_files=1; salt
-            # values can share a task, so it is a cap, not an exact
-            # count).
-            data_cols = [c for c in df.columns if c not in part_cols]
-            salt = F.pmod(
-                F.xxhash64(*[F.col(c) for c in data_cols] or [F.lit(0)]),
-                F.lit(target_files),
-            )
-            (
-                df.repartition(*[F.col(c) for c in part_cols], salt)
-                .write.mode("overwrite")
-                .partitionBy(*part_cols)
-                .parquet(tmp)
-            )
-        else:
-            df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+        self._write(
+            self._cap_files(self.read(table), part_cols, target_files),
+            tmp,
+            part_cols,
+        )
         meta = self.read_layout_meta(table)
         old = self.path(f"_precompact_{table}")
         os.rename(final, old)
@@ -334,20 +351,34 @@ class Store:
             if f.endswith(".parquet")
         )
 
-    def _partition_columns(self, table: str) -> list[str]:
-        """Detect a hive-partitioned layout from the first level of
-        ``col=value`` directory names (possibly nested for multi-column
-        partitioning)."""
-        return self._dir_partition_columns(self.path(table))
+    @staticmethod
+    def _cap_files(
+        df: DataFrame, part_cols: list[str], target_files: int
+    ) -> DataFrame:
+        """``df`` shuffled so a write of it makes at most
+        ``target_files`` files — per hive partition when ``part_cols``
+        is set. The shuffle key is (partition cols, row-hash %
+        target_files), so each partition's rows land in at most
+        ``target_files`` write tasks (exactly 1 when target_files=1;
+        salt values can share a task, so it is a cap, not an exact
+        count) and partitionBy re-creates the layout. Unpartitioned
+        frames just coalesce (no shuffle)."""
+        if not part_cols:
+            return df.coalesce(target_files)
+        from pyspark.sql import functions as F
 
-    def _layer_partition_columns(self, table: str, version: int) -> list[str]:
-        """Hive partition columns of ONE layer directory — layered
-        tables carry the layout per layer (every layer of a table uses
-        the same one; :meth:`append_version` enforces it)."""
-        return self._dir_partition_columns(self._vdir(table, version))
+        data_cols = [c for c in df.columns if c not in part_cols]
+        salt = F.pmod(
+            F.xxhash64(*[F.col(c) for c in data_cols] or [F.lit(0)]),
+            F.lit(target_files),
+        )
+        return df.repartition(*[F.col(c) for c in part_cols], salt)
 
     @staticmethod
     def _dir_partition_columns(d: str) -> list[str]:
+        """Detect a hive-partitioned layout under directory ``d`` from
+        the first level of ``col=value`` directory names (possibly
+        nested for multi-column partitioning)."""
         cols: list[str] = []
         while True:
             subs = [
@@ -385,6 +416,7 @@ class Store:
         the parquet-native form of ``ALTER TABLE ADD COLUMN`` (the
         reference evolves its schema with ALTER statements,
         sql/01_schema.sql)."""
+        self._fault("append_evolved", table)
         if self.exists(table):
             existing = set(self.read(table).columns)
             missing = existing - set(df.columns)
@@ -471,6 +503,31 @@ class Store:
         except FileNotFoundError:
             pass
 
+    @contextlib.contextmanager
+    def _claimed(self, table: str):
+        """Hold the next version slot (:meth:`_claim_next_version`) for
+        the ``with`` body; the claim is released however it exits."""
+        nxt = self._claim_next_version(table)
+        try:
+            yield nxt
+        finally:
+            self._release_claim(table, nxt)
+
+    def _publish(
+        self, table: str, version: int, layers: list[int] | None = None
+    ) -> None:
+        """The commit point: write ``version``'s layer manifest
+        (layered commits pass ``layers``), then swap the ``_CURRENT``
+        pointer to ``version`` by atomic rename. Readers see the old or
+        the new version, never a partial one."""
+        if layers is not None:
+            with open(self._manifest_file(table, version), "w") as f:
+                f.write(" ".join(str(x) for x in layers))
+        tmp = self._current_file(table) + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(version))
+        os.replace(tmp, self._current_file(table))
+
     def is_layered(self, table: str) -> bool:
         """True iff the table's CURRENT version was committed through
         the layered API (``append_version``/``compact_layers``) — i.e.
@@ -490,10 +547,9 @@ class Store:
         accessor — callers (streaming/dedup_stream.py) size
         ``compact_every`` against this instead of reaching into the
         manifest internals."""
-        cur = self.current_version(table)
-        if cur is None or not os.path.exists(self._manifest_file(table, cur)):
+        if not self.is_layered(table):
             return 0
-        return len(self._layers(table, cur))
+        return len(self._layers(table, self.current_version(table)))
 
     def current_version(self, table: str) -> int | None:
         try:
@@ -502,28 +558,9 @@ class Store:
         except (FileNotFoundError, ValueError):
             return None
 
-    def _heal_legacy_versions(self, table: str) -> None:
-        """Migrate a store written by the pre-round-6 layout, whose
-        version directories were named ``_v<N>``: without this, such a
-        table reports ``versions() == []`` while ``_CURRENT`` points at
-        a version whose ``v<N>`` dir doesn't exist — ``read_version``
-        fails confusingly and a writer would re-claim slot 1. The
-        rename is cheap, idempotent, and safe under the single-writer
-        contract; a ``v<N>`` dir already present wins (never
-        clobbered)."""
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return
-        for d in os.listdir(root):
-            if d.startswith("_v") and d[2:].isdigit():
-                new = os.path.join(root, d[1:])
-                if not os.path.exists(new):
-                    os.rename(os.path.join(root, d), new)
-
     def versions(self, table: str) -> list[int]:
         """Committed snapshot versions (those at or below the pointer,
         plus any older ones not yet vacuumed)."""
-        self._heal_legacy_versions(table)
         root = self.path(table)
         if not os.path.isdir(root):
             return []
@@ -548,6 +585,7 @@ class Store:
         committed snapshot means a post-rollback write becomes v4 and
         the rolled-back-over versions remain intact (orphaned forward
         history; vacuum reclaims it)."""
+        self._fault("write_version", table)
         if self.is_layered(table):
             raise ValueError(
                 f"{table} was committed with append_version (layered): "
@@ -555,22 +593,15 @@ class Store:
                 "— use append_version, or compact_layers then vacuum to "
                 "migrate"
             )
-        nxt = self._claim_next_version(table)
-        try:
-            df.write.mode("overwrite").parquet(self._vdir(table, nxt))
-            tmp = self._current_file(table) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(nxt))
-            os.replace(tmp, self._current_file(table))  # atomic pointer swap
-        finally:
-            self._release_claim(table, nxt)
+        with self._claimed(table) as nxt:
+            self._write(df, self._vdir(table, nxt))
+            self._publish(table, nxt)
         self._log(table, f"write_version:{nxt}")
         return nxt
 
     def read_version(self, table: str, version: int | None = None) -> DataFrame:
         """Read a snapshot — the current one by default, or any
         still-vacuumed-in historical ``version`` (time travel)."""
-        self._heal_legacy_versions(table)
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"{table}: no versioned snapshots")
@@ -588,13 +619,23 @@ class Store:
     def rollback(self, table: str, version: int) -> None:
         """Point the table back at an older snapshot (the newer
         snapshots remain until vacuumed — rollback of the rollback is
-        possible)."""
+        possible).
+
+        On a layered table the target must carry a layer manifest: a
+        layered delete rewrites each affected layer into a new committed
+        directory, but only the last one becomes a version — the others
+        each hold one cleaned layer, not the table."""
+        self._fault("rollback", table)
         if not os.path.exists(os.path.join(self._vdir(table, version), "_SUCCESS")):
             raise FileNotFoundError(f"{table}: no committed snapshot v{version}")
-        tmp = self._current_file(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._current_file(table))
+        if self.is_layered(table) and not os.path.exists(
+            self._manifest_file(table, version)
+        ):
+            raise FileNotFoundError(
+                f"{table}: v{version} is a rewritten layer, not a committed "
+                "version (it has no layer manifest)"
+            )
+        self._publish(table, version)
         self._log(table, f"rollback:{version}")
 
     def diff_versions(
@@ -665,6 +706,7 @@ class Store:
         flight, per the single-writer contract."""
         import shutil
 
+        self._fault("vacuum_versions", table)
         cur = self.current_version(table)
         committed = self.versions(table)
         keep = set(committed[-keep_last:]) | ({cur} if cur is not None else set())
@@ -725,36 +767,21 @@ class Store:
         use (partition by a hash prefix, read only the batch's
         prefixes). All layers of one table must agree on the layout
         (enforced here); delete/compact rewrites preserve it."""
-        cur = self.current_version(table)
-        if cur is not None and not os.path.exists(
-            self._manifest_file(table, cur)
-        ):
+        self._fault("append_version", table)
+        if self.current_version(table) is not None and not self.is_layered(table):
             raise ValueError(
                 f"{table} was committed with write_version (snapshot): "
                 "snapshot and layered APIs cannot be mixed on one table "
                 "— keep using write_version, or start the layered table "
                 "under a different name"
             )
-        nxt = self._claim_next_version(table)
-        try:
+        with self._claimed(table) as nxt:
             # Re-read the base AFTER the claim: the claim is the
             # serialization point, so the manifest this commit extends
             # is guaranteed to be the latest.
             cur = self.current_version(table)
             base = self._layers(table, cur) if cur is not None else []
-            # Layout consistency: detect from the first layer that has
-            # content (an EMPTY delta layer writes no partition dirs
-            # and must not be mistaken for an unpartitioned layout).
-            have: list[str] | None = None
-            for x in base:
-                d = self._vdir(table, x)
-                cols = self._dir_partition_columns(d)
-                if cols:
-                    have = cols
-                    break
-                if any(f.endswith(".parquet") for f in os.listdir(d)):
-                    have = []
-                    break
+            have = self._layout(table)
             if have is not None and have != list(partition_by or []):
                 raise ValueError(
                     f"{table}: layer partitioning mismatch — existing "
@@ -762,45 +789,41 @@ class Store:
                     f"commit asked for {list(partition_by or []) or 'none'}; "
                     "read_union cannot mix layouts in one table"
                 )
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(self._vdir(table, nxt))
-            with open(self._manifest_file(table, nxt), "w") as f:
-                f.write(" ".join(str(x) for x in base + [nxt]))
-            tmp = self._current_file(table) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(nxt))
-            os.replace(tmp, self._current_file(table))
-        finally:
-            self._release_claim(table, nxt)
+            self._write(df, self._vdir(table, nxt), partition_by)
+            self._publish(table, nxt, base + [nxt])
         self._log(table, f"append_version:{nxt}")
         return nxt
 
-    def layer_partitioning(self, table: str) -> list[str]:
-        """Hive partition columns of a LAYERED table — detected from
-        the first layer with content in the current manifest ([] if
-        the table is absent, empty, or unpartitioned). Callers use it
-        to pick between the pruned (bucketed) and legacy read paths;
-        :meth:`append_version` enforces that all layers agree."""
+    def _layout(self, table: str) -> list[str] | None:
+        """Hive partition columns of a layered table, detected from the
+        first layer of the current manifest that has parquet content:
+        ``[]`` for an unpartitioned layout, ``None`` when no layer has
+        content (or the table is absent) — an EMPTY delta layer writes
+        no partition dirs and must not be mistaken for an unpartitioned
+        layout. :meth:`append_version` enforces that all layers agree."""
         cur = self.current_version(table)
         if cur is None:
-            return []
+            return None
         for x in self._layers(table, cur):
-            cols = self._layer_partition_columns(table, x)
+            d = self._vdir(table, x)
+            cols = self._dir_partition_columns(d)
             if cols:
                 return cols
-            d = self._vdir(table, x)
             if any(f.endswith(".parquet") for f in os.listdir(d)):
                 return []
-        return []
+        return None
+
+    def layer_partitioning(self, table: str) -> list[str]:
+        """Hive partition columns of a LAYERED table ([] if the table
+        is absent, empty, or unpartitioned). Callers use it to pick
+        between the pruned (bucketed) and legacy read paths."""
+        return self._layout(table) or []
 
     def read_union(self, table: str, version: int | None = None) -> DataFrame:
         """Read a layered table at ``version`` (current by default):
         the union of exactly the layers its manifest pins — orphaned
         forward history after a rollback is invisible, same contract
         as :meth:`read_version`."""
-        self._heal_legacy_versions(table)
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"{table}: no committed versions")
@@ -877,6 +900,7 @@ class Store:
         skip one re-pin job per table."""
         from pyspark.sql import functions as F
 
+        self._fault("delete_keys", table)
         if not pinned:
             keys = keys.select(key_col).distinct().localCheckpoint(eager=True)
         locate = lambda df: df.join(F.broadcast(keys), key_col, "left_semi")
@@ -890,6 +914,7 @@ class Store:
         snapshot tables commit the filtered next version; physical
         purge completes at vacuum. ``condition`` is a Column
         predicate; rows where it is TRUE are deleted."""
+        self._fault("delete_where", table)
         locate = lambda df: df.filter(condition)
         # ~condition keeps NULL-predicate rows? NO: filter drops rows
         # where the predicate is NULL, which would silently delete
@@ -926,23 +951,19 @@ class Store:
                 return cur
             replacement: dict[int, int] = {}
             for layer in affected:
-                nxt = self._claim_next_version(table)
-                try:
+                with self._claimed(table) as nxt:
                     # Preserve the layer's hive layout through the
                     # rewrite: flattening it would break every reader
                     # whose partition-pruning filter IS the index
                     # (the bucketed dedup/novelty folds).
-                    pcols = self._layer_partition_columns(table, layer)
-                    cleaned = clean(
-                        read_parquet(self.spark, self._vdir(table, layer))
-                    ).localCheckpoint(eager=True)
-                    w = cleaned.write.mode("overwrite")
-                    if pcols:
-                        w = w.partitionBy(*pcols)
-                    w.parquet(self._vdir(table, nxt))
+                    src = self._vdir(table, layer)
+                    cleaned = clean(read_parquet(self.spark, src))
+                    self._write(
+                        cleaned.localCheckpoint(eager=True),
+                        self._vdir(table, nxt),
+                        self._dir_partition_columns(src),
+                    )
                     replacement[layer] = nxt
-                finally:
-                    self._release_claim(table, nxt)
             # The manifest + pointer commit runs under its OWN held
             # claim on the next free slot — the CAS serialization every
             # other versioned commit gets. Without it, an append_version
@@ -953,21 +974,14 @@ class Store:
             # rebuilt from the LATEST committed version under the claim,
             # so an append that landed before the barrier is preserved
             # (its layer carries through with the replacements applied).
-            barrier = self._claim_next_version(table)
-            try:
+            self._fault(f"{op}:commit", table)
+            with self._claimed(table):
                 latest = self.current_version(table)
                 new_layers = [
                     replacement.get(x, x) for x in self._layers(table, latest)
                 ]
                 commit = replacement[affected[-1]]  # last rewritten dir
-                with open(self._manifest_file(table, commit), "w") as f:
-                    f.write(" ".join(str(x) for x in new_layers))
-                tmp = self._current_file(table) + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write(str(commit))
-                os.replace(tmp, self._current_file(table))
-            finally:
-                self._release_claim(table, barrier)
+                self._publish(table, commit, new_layers)
             self._log(table, f"{op}:{commit}")
             return commit
         if self.current_version(table) is not None:  # snapshot-versioned
@@ -977,7 +991,7 @@ class Store:
         # cell-partitioned IVF index must not flatten the directories
         # the readers' partition pruning depends on (the same trap
         # compact() guards against).
-        part_cols = self._partition_columns(table)
+        part_cols = self._dir_partition_columns(self.path(table))
         remaining = clean(self.read(table)).localCheckpoint(eager=True)
         self.overwrite(remaining, table, partition_by=part_cols or None)
         self._log(table, op)
@@ -999,6 +1013,7 @@ class Store:
         preferred partition size at any scale; the measured sawtooth
         test (tests/test_dedup_stream.py) pins that compaction
         actually resets the per-fold listing cost."""
+        self._fault("compact_layers", table)
         cur = self.current_version(table)
         if cur is None:
             raise FileNotFoundError(f"{table}: no committed versions")
@@ -1013,28 +1028,11 @@ class Store:
                         if f.endswith(".parquet")
                     )
             target_files = max(1, -(-total // (128 << 20)))
-        pcols: list[str] = []
-        for layer in self._layers(table, cur):
-            pcols = self._layer_partition_columns(table, layer)
-            if pcols:
-                break
-        if pcols:
-            # Per-partition compaction, the compact() pattern: shuffle
-            # key (partition cols, row-hash % target_files) caps each
-            # hive partition's file count at target_files while
-            # PRESERVING the directory layout readers prune by.
-            from pyspark.sql import functions as F
-
-            df = self.read_union(table)
-            data_cols = [c for c in df.columns if c not in pcols]
-            salt = F.pmod(
-                F.xxhash64(*[F.col(c) for c in data_cols] or [F.lit(0)]),
-                F.lit(target_files),
-            )
-            # no pin here: rewrite_layers pins before overwriting
-            merged = df.repartition(*[F.col(c) for c in pcols], salt)
-        else:
-            merged = self.read_union(table).coalesce(target_files)
+        # Per-partition compaction PRESERVES the directory layout
+        # readers prune by; no pin here: rewrite_layers pins before
+        # overwriting.
+        pcols = self._layout(table) or []
+        merged = self._cap_files(self.read_union(table), pcols, target_files)
         return self.rewrite_layers(
             merged, table, partition_by=pcols or None, op="compact_layers"
         )
@@ -1058,22 +1056,12 @@ class Store:
         but an append whose content was read BEFORE the rewrite began
         is superseded — run migrations off the hot path. Old layers
         stay time-travelable until ``vacuum_versions``."""
+        self._fault("rewrite_layers", table)
         if self.current_version(table) is None:
             raise FileNotFoundError(f"{table}: no committed versions")
         pinned = df.localCheckpoint(eager=True)
-        nxt = self._claim_next_version(table)
-        try:
-            w = pinned.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(self._vdir(table, nxt))
-            with open(self._manifest_file(table, nxt), "w") as f:
-                f.write(str(nxt))
-            tmp = self._current_file(table) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(nxt))
-            os.replace(tmp, self._current_file(table))
-        finally:
-            self._release_claim(table, nxt)
+        with self._claimed(table) as nxt:
+            self._write(pinned, self._vdir(table, nxt), partition_by)
+            self._publish(table, nxt, [nxt])
         self._log(table, f"{op}:{nxt}")
         return nxt

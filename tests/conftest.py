@@ -55,6 +55,20 @@ def jobs_launched(spark, fn):
     return newest() - before, out
 
 
+def crash_once(store, op: str, table: str, msg: str) -> None:
+    """Arm ``store``'s fault seam (``Store._fault``): the next ``op``
+    on ``table`` raises ``RuntimeError(msg)`` before it touches any
+    file, and the seam disarms. ``op`` is a Store write/delete method
+    name, or ``"<delete op>:commit"`` for a layered delete's commit."""
+
+    def fault(fired_op: str, fired_table: str) -> None:
+        if (fired_op, fired_table) == (op, table):
+            del store._fault
+            raise RuntimeError(msg)
+
+    store._fault = fault
+
+
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     """Driver-style normalization: columns sorted by name, rows sorted
     by all columns, index dropped."""

@@ -24,6 +24,8 @@ from efiche_data_pipeline_spark.streaming.expectations_stream import (
     run_expectations_gate_stream,
 )
 
+from .conftest import crash_once
+
 _SCHEMA = "id long, price double, status string"
 
 
@@ -116,24 +118,14 @@ def test_gate_stream_routes_and_restarts(spark, tmp_path):
     } == _expected_tags(_rows(0, 50))
 
 
-class _CrashBeforeAuditStore(Store):
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append(self, df, table, partition_by=None):
-        if self.armed and table == "expectations_audit":
-            self.armed = False
-            raise RuntimeError("injected crash before audit commit")
-        return super().append(df, table, partition_by=partition_by)
-
-
 def test_gate_fold_crash_converges(spark, tmp_path):
-    store = _CrashBeforeAuditStore(spark, str(tmp_path / "store"))
+    store = Store(spark, str(tmp_path / "store"))
     b1 = spark.createDataFrame(_rows(0, 10), _SCHEMA)
     b2 = spark.createDataFrame(_rows(10, 20), _SCHEMA)
     assert expectations_gate_fold(b1, store, _RULES, _HARD, "id") == 10
-    store.armed = True
+    crash_once(
+        store, "append", "expectations_audit", "injected crash before audit commit"
+    )
     with pytest.raises(RuntimeError, match="injected"):
         expectations_gate_fold(b2, store, _RULES, _HARD, "id")
     # replay: row sinks idempotent, audit multiset collapses, then

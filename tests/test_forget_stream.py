@@ -35,6 +35,8 @@ from efiche_data_pipeline_spark.streaming.forget_stream import (
     run_forget_stream,
 )
 
+from .conftest import crash_once
+
 # ids ending in 0 are the gate's trusted reference slice; pool ids
 # 1 and 21 copy reference texts so the gate KEEPS them (the
 # test_quality_gate _POOL trick — a tiny reference leaves no room for
@@ -149,18 +151,6 @@ def test_forget_stream_refuses_emptying_gate_slice(spark, tmp_path):
     assert not store.exists("forget_requests")
 
 
-class _CrashBeforeLedgerStore(Store):
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append_new(self, df, table, key, partition_by=None):
-        if self.armed and table == "forget_requests":
-            self.armed = False
-            raise RuntimeError("injected crash before ledger commit")
-        return super().append_new(df, table, key, partition_by=partition_by)
-
-
 def test_forget_stream_crash_before_ledger_converges(spark, tmp_path):
     """All family forgets applied, ledger not committed → the restart
     replays the batch against already-forgotten ids (each family
@@ -169,10 +159,12 @@ def test_forget_stream_crash_before_ledger_converges(spark, tmp_path):
 
     root = str(tmp_path / "crash")
     _seed_estates(spark, root)
-    store = _CrashBeforeLedgerStore(spark, root)
+    store = Store(spark, root)
     src, ckpt = str(tmp_path / "req"), str(tmp_path / "ckpt")
     _write_requests(spark, src, [1, 10])
-    store.armed = True
+    crash_once(
+        store, "append_new", "forget_requests", "injected crash before ledger commit"
+    )
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     with pytest.raises(StreamingQueryException, match="injected crash"):

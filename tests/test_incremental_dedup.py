@@ -23,6 +23,8 @@ from efiche_data_pipeline_spark.operators.dedup import (
 )
 from efiche_data_pipeline_spark.pipeline.store import Store
 
+from .conftest import crash_once
+
 _TAU = 0.5
 
 
@@ -303,26 +305,12 @@ def test_incremental_components_equal_global_and_merge(spark, tmp_path):
     } == expected
 
 
-class _CrashBeforeIndexCommitStore(Store):
-    """Injects ONE crash at the index-commit point (append_version on
-    the signature index) when armed — the exact window the round-5
-    advice flagged: labels already folded, index not yet committed."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append_version(self, df, table):
-        if self.armed and table == "minhash_sig_index":
-            self.armed = False
-            raise RuntimeError("injected crash before index commit")
-        return super().append_version(df, table)
-
-
 def test_components_crash_before_index_commit_converges(spark, tmp_path):
-    """Crash between the label fold and the index commit, then replay:
-    because the index commit is LAST (the replay trigger), the retried
-    batch re-derives the same pairs, re-folds them (idempotent), and
+    """Crash between the label fold and the index commit (append_version
+    on the signature index) — the window where labels are already
+    folded and the index is not yet committed — then replay: because
+    the index commit is LAST (the replay trigger), the retried batch
+    re-derives the same pairs, re-folds them (idempotent), and
     commits — final labels equal the global closure, same as a crash-
     free run. Under the old index-first order this crash permanently
     lost the batch's edges from the label table."""
@@ -340,11 +328,16 @@ def test_components_crash_before_index_commit_converges(spark, tmp_path):
             ).collect()
         ]
     )
-    store = _CrashBeforeIndexCommitStore(spark, str(tmp_path / "crash"))
+    store = Store(spark, str(tmp_path / "crash"))
     b1 = docs.filter(F.col("doc_id") <= 3)
     b2 = docs.filter(F.col("doc_id") > 3)
     incremental_neardup_components(b1, store, threshold=_TAU)
-    store.armed = True
+    crash_once(
+        store,
+        "append_version",
+        "minhash_sig_index",
+        "injected crash before index commit",
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -478,32 +471,17 @@ def test_incremental_novelty_batching_and_partition_invariant(spark, tmp_path):
     assert run([(0, 5), (6, 11)], 32) == expected
 
 
-class _CrashBeforeScoresSinkStore(Store):
-    """Injects ONE crash at the scores-sink append — the window the
-    round-6 advice flagged: with the OLD sink-first order, a crash
-    between the two q119 appends lost the batch's index delta forever
-    (replay saw the docs already scored and returned with n_new==0
-    before the index commit ever ran). Under the fixed index-first
-    order this window replays the whole batch and converges."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append_new(self, df, table, key, partition_by=None):
-        if self.armed and table == "novelty_scores":
-            self.armed = False
-            raise RuntimeError("injected crash before scores sink")
-        return super().append_new(df, table, key, partition_by=partition_by)
-
-
 def test_novelty_crash_between_index_and_sink_converges(spark, tmp_path):
     """Crash AFTER the introducer-index delta commit but BEFORE the
     scores sink, then replay: the sink is the replay watermark, so the
     retried batch re-derives everything (the index re-fold is an empty
     delta — nothing strictly improves a committed min) and commits the
     scores; final state equals a crash-free run, and later docs
-    re-using the crashed batch's shingles are NOT falsely credited."""
+    re-using the crashed batch's shingles are NOT falsely credited.
+    With the OLD sink-first order, a crash between the two q119
+    appends lost the batch's index delta forever (replay saw the docs
+    already scored and returned with n_new==0 before the index commit
+    ever ran)."""
     import pytest
 
     from efiche_data_pipeline_spark.operators.dedup import incremental_novelty
@@ -516,9 +494,11 @@ def test_novelty_crash_between_index_and_sink_converges(spark, tmp_path):
     ]
     docs = _docs(spark, rows)
     expected = _py_first_introducer(rows)
-    store = _CrashBeforeScoresSinkStore(spark, str(tmp_path / "novcrash"))
+    store = Store(spark, str(tmp_path / "novcrash"))
     incremental_novelty(docs.filter(F.col("doc_id") <= 1), store)
-    store.armed = True
+    crash_once(
+        store, "append_new", "novelty_scores", "injected crash before scores sink"
+    )
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_novelty(docs.filter(F.col("doc_id") >= 2), store)
     # the index delta IS committed (index-first order) but the scores
@@ -821,42 +801,6 @@ def test_incremental_spans_maintained_equals_global(spark, tmp_path):
     assert _span_reports(store) == expected
 
 
-class _CrashBeforePositionsCommitStore(Store):
-    """Injects ONE crash between the report upsert and the positions
-    append — the window where the batch's reports are committed but
-    neither the positions nor the seen-docs watermark are, so the
-    batch MUST fully replay."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append(self, df, table, partition_by=None):
-        if self.armed and table == "span_positions":
-            self.armed = False
-            raise RuntimeError("injected crash before positions commit")
-        return super().append(df, table, partition_by=partition_by)
-
-
-class _CrashBeforeSeenCommitStore(Store):
-    """Injects ONE crash between the positions append and the
-    seen-docs watermark commit — the window the r09 protocol change
-    OPENED: reports and positions are durable, the watermark is not,
-    so the replay folds the batch again with its grams already in the
-    history scan (the positional index becomes a multiset for this
-    batch; every reader must absorb the duplicates)."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append_new(self, df, table, key, partition_by=None):
-        if self.armed and table == "span_seen_docs":
-            self.armed = False
-            raise RuntimeError("injected crash before seen commit")
-        return super().append_new(df, table, key, partition_by=partition_by)
-
-
 def _expected_span_reports(docs, k=3, min_docs=2):
     from efiche_data_pipeline_spark.operators.dedup import (
         duplicated_span_report,
@@ -874,16 +818,22 @@ def _expected_span_reports(docs, k=3, min_docs=2):
 
 
 def test_incremental_spans_crash_before_positions_converges(spark, tmp_path):
+    """Crash between the report upsert and the positions append — the
+    window where the batch's reports are committed but neither the
+    positions nor the seen-docs watermark are, so the batch MUST fully
+    replay."""
     from efiche_data_pipeline_spark.operators.dedup import (
         incremental_duplicated_spans,
     )
 
     docs = _docs(spark, _SPAN_DOCS)
-    store = _CrashBeforePositionsCommitStore(spark, str(tmp_path / "crash"))
+    store = Store(spark, str(tmp_path / "crash"))
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
     )
-    store.armed = True
+    crash_once(
+        store, "append", "span_positions", "injected crash before positions commit"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -905,10 +855,13 @@ def test_incremental_spans_crash_before_positions_converges(spark, tmp_path):
 
 
 def test_incremental_spans_crash_before_seen_converges(spark, tmp_path):
-    """The r09 crash window: positions committed, seen watermark not.
-    The replay re-appends the batch's position rows (multiset index),
-    and the final reports must STILL equal the global one-shot — i.e.
-    every index reader (crossed/dup counts, _span_report) absorbs the
+    """The r09 crash window: positions committed, seen watermark not
+    (the window the r09 protocol change OPENED: reports and positions
+    are durable, the watermark is not, so the replay folds the batch
+    again with its grams already in the history scan). The replay
+    re-appends the batch's position rows (multiset index), and the
+    final reports must STILL equal the global one-shot — i.e. every
+    index reader (crossed/dup counts, _span_report) absorbs the
     duplicated rows."""
     from efiche_data_pipeline_spark.operators.dedup import (
         incremental_duplicated_spans,
@@ -916,11 +869,13 @@ def test_incremental_spans_crash_before_seen_converges(spark, tmp_path):
     )
 
     docs = _docs(spark, _SPAN_DOCS)
-    store = _CrashBeforeSeenCommitStore(spark, str(tmp_path / "seencrash"))
+    store = Store(spark, str(tmp_path / "seencrash"))
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
     )
-    store.armed = True
+    crash_once(
+        store, "append_new", "span_seen_docs", "injected crash before seen commit"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -1566,32 +1521,21 @@ def test_forget_span_documents_equals_survivor_one_shot(spark, tmp_path):
     assert _span_reports(store) == _expected_span_reports(docs)
 
 
-class _CrashAfterUpsertStore(Store):
-    """Injects ONE crash between forget_span_documents' holder-report
-    upsert (step 2) and the report delete (step 3)."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def delete_keys(self, table, keys, key_col, pinned=False):
-        if self.armed and table == "span_reports":
-            self.armed = False
-            raise RuntimeError("injected crash before report delete")
-        return super().delete_keys(table, keys, key_col, pinned=pinned)
-
-
 def test_forget_span_documents_crash_retry_converges(spark, tmp_path):
+    """Crash between forget_span_documents' holder-report upsert
+    (step 2) and the report delete (step 3)."""
     from efiche_data_pipeline_spark.operators.dedup import (
         forget_span_documents,
         incremental_duplicated_spans,
     )
 
     docs = _docs(spark, _SPAN_DOCS)
-    store = _CrashAfterUpsertStore(spark, str(tmp_path / "sfcrash"))
+    store = Store(spark, str(tmp_path / "sfcrash"))
     incremental_duplicated_spans(docs, store, k=3, min_docs=2)
     gone = spark.createDataFrame([(1,)], "doc_id long")
-    store.armed = True
+    crash_once(
+        store, "delete_keys", "span_reports", "injected crash before report delete"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -1762,22 +1706,9 @@ def test_extend_passage_watchlist_lifecycle(spark, tmp_path):
     assert store.read_version("watch_needles").count() == 2
 
 
-class _CrashBeforeSeedStore(Store):
-    """Injects ONE crash between the retro-flag append and the
-    watchlist re-seed (the write_version of watch_needles)."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def write_version(self, df, table):
-        if self.armed and table == "watch_needles":
-            self.armed = False
-            raise RuntimeError("injected crash before watchlist seed")
-        return super().write_version(df, table)
-
-
 def test_extend_passage_watchlist_crash_converges(spark, tmp_path):
+    """Crash between the retro-flag append and the watchlist re-seed
+    (the write_version of watch_needles)."""
     from efiche_data_pipeline_spark.operators.dedup import (
         extend_passage_watchlist,
         incremental_duplicated_spans,
@@ -1786,7 +1717,7 @@ def test_extend_passage_watchlist_crash_converges(spark, tmp_path):
     )
 
     docs = _docs(spark, _SPAN_DOCS)
-    store = _CrashBeforeSeedStore(spark, str(tmp_path / "extcrash"))
+    store = Store(spark, str(tmp_path / "extcrash"))
     batch1 = docs.filter("doc_id <= 3")
     incremental_duplicated_spans(batch1, store, k=3, min_docs=2)
     seed_passage_watchlist(
@@ -1800,7 +1731,9 @@ def test_extend_passage_watchlist_crash_converges(spark, tmp_path):
     new_needle = spark.createDataFrame(
         [(1, "alpha beta gamma")], "needle_id long, passage string"
     )
-    store.armed = True
+    crash_once(
+        store, "write_version", "watch_needles", "injected crash before watchlist seed"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -2019,34 +1952,22 @@ def test_incremental_spans_byid_projection_and_prune(spark, tmp_path):
     assert re.search(r"PartitionFilters: \[[^\]]*ip#\d+", plan), plan
 
 
-class _CrashBeforeByidCommitStore(Store):
-    """Injects ONE crash between the report upsert and the byid
-    projection append — the first mutation window of the r10
-    four-commit protocol: reports durable, neither projection nor
-    the watermark."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append(self, df, table, partition_by=None):
-        if self.armed and table == "span_positions_byid":
-            self.armed = False
-            raise RuntimeError("injected crash before byid commit")
-        return super().append(df, table, partition_by=partition_by)
-
-
 def test_incremental_spans_crash_before_byid_converges(spark, tmp_path):
+    """Crash between the report upsert and the byid projection append —
+    the first mutation window of the r10 four-commit protocol: reports
+    durable, neither projection nor the watermark."""
     from efiche_data_pipeline_spark.operators.dedup import (
         incremental_duplicated_spans,
     )
 
     docs = _docs(spark, _SPAN_DOCS)
-    store = _CrashBeforeByidCommitStore(spark, str(tmp_path / "byidcrash"))
+    store = Store(spark, str(tmp_path / "byidcrash"))
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
     )
-    store.armed = True
+    crash_once(
+        store, "append", "span_positions_byid", "injected crash before byid commit"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -2080,11 +2001,13 @@ def test_incremental_spans_crash_between_byid_and_primary(spark, tmp_path):
 
     docs = _docs(spark, _SPAN_DOCS)
     # crash on the PRIMARY append -> byid is already durable
-    store = _CrashBeforePositionsCommitStore(spark, str(tmp_path / "midcrash"))
+    store = Store(spark, str(tmp_path / "midcrash"))
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
     )
-    store.armed = True
+    crash_once(
+        store, "append", "span_positions", "injected crash before positions commit"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):

@@ -27,6 +27,8 @@ from efiche_data_pipeline_spark.streaming.postings_stream import (
     run_postings_stream,
 )
 
+from .conftest import crash_once
+
 _SCHEMA = "doc_id long, text string"
 _WORDS = ("vector", "join", "stream", "hash", "table", "scan", "merge")
 
@@ -85,25 +87,13 @@ def test_postings_stream_equals_one_shot_and_restarts(spark, tmp_path):
     assert rep4.n_docs_folded == 0 and rep4.n_docs_indexed == 15
 
 
-class _CrashBeforeDoclenStore(Store):
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append(self, df, table, partition_by=None):
-        if self.armed and table == "doc_lengths":
-            self.armed = False
-            raise RuntimeError("injected crash before doclen commit")
-        return super().append(df, table, partition_by=partition_by)
-
-
 def test_postings_stream_crash_converges(spark, tmp_path):
     src = str(tmp_path / "src")
-    store = _CrashBeforeDoclenStore(spark, str(tmp_path / "store"))
+    store = Store(spark, str(tmp_path / "store"))
     _write(spark, src, _rows(0, 6))
     run_postings_stream(spark, src, _SCHEMA, store, str(tmp_path / "c1"))
     _write(spark, src, _rows(6, 12))
-    store.armed = True
+    crash_once(store, "append", "doc_lengths", "injected crash before doclen commit")
     with pytest.raises(Exception, match="injected crash"):
         run_postings_stream(spark, src, _SCHEMA, store, str(tmp_path / "c2"))
     # the estate is in its refusing window (orphan postings) ...

@@ -28,6 +28,8 @@ from efiche_data_pipeline_spark.operators.retrieval import (
 )
 from efiche_data_pipeline_spark.pipeline.store import Store
 
+from .conftest import crash_once
+
 _DOCS = [
     (0, "vector join stream vector vector"),
     (1, "hash table scan hash"),
@@ -95,43 +97,14 @@ def test_index_read_prunes_to_term_prefixes(spark, tmp_path):
     assert got == _rows(bm25_topk(docs, _qf(spark), k=4))
 
 
-class _CrashBeforeDoclenStore(Store):
+def test_crash_before_doclen_refuses_then_converges(spark, tmp_path):
     """Crash between the postings and doc-length commits — the window
     where queries must REFUSE rather than silently drop the orphaned
     postings docs from scoring."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append(self, df, table, partition_by=None):
-        if self.armed and table == "doc_lengths":
-            self.armed = False
-            raise RuntimeError("injected crash before doclen commit")
-        return super().append(df, table, partition_by=partition_by)
-
-
-class _CrashBeforeSeenStore(Store):
-    """Crash between the doc-length and seen-watermark commits — the
-    replay re-appends the batch into both tables (tolerated
-    multisets; reads collapse by max-per-key)."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append_new(self, df, table, key, partition_by=None):
-        if self.armed and table == "postings_seen_docs":
-            self.armed = False
-            raise RuntimeError("injected crash before seen commit")
-        return super().append_new(df, table, key, partition_by=partition_by)
-
-
-def test_crash_before_doclen_refuses_then_converges(spark, tmp_path):
     docs = _docs(spark)
-    store = _CrashBeforeDoclenStore(spark, str(tmp_path / "bmc1"))
+    store = Store(spark, str(tmp_path / "bmc1"))
     incremental_term_postings(docs.filter(F.col("doc_id") <= 2), store)
-    store.armed = True
+    crash_once(store, "append", "doc_lengths", "injected crash before doclen commit")
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_term_postings(docs.filter(F.col("doc_id") > 2), store)
     # postings landed without lengths: scoring must refuse loudly
@@ -146,10 +119,15 @@ def test_crash_before_doclen_refuses_then_converges(spark, tmp_path):
 
 
 def test_crash_before_seen_multiset_converges(spark, tmp_path):
+    """Crash between the doc-length and seen-watermark commits — the
+    replay re-appends the batch into both tables (tolerated
+    multisets; reads collapse by max-per-key)."""
     docs = _docs(spark)
-    store = _CrashBeforeSeenStore(spark, str(tmp_path / "bmc2"))
+    store = Store(spark, str(tmp_path / "bmc2"))
     incremental_term_postings(docs.filter(F.col("doc_id") <= 2), store)
-    store.armed = True
+    crash_once(
+        store, "append_new", "postings_seen_docs", "injected crash before seen commit"
+    )
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_term_postings(docs.filter(F.col("doc_id") > 2), store)
     assert (
@@ -393,27 +371,19 @@ def test_positional_read_prunes_to_term_prefixes(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-class _CrashBeforePosSeenStore(Store):
+def test_positional_crash_before_seen_converges(spark, tmp_path):
     """Crash between the positional-postings and seen commits — the
     replay re-appends the batch (tolerated multiset; reads collapse
     by DISTINCT)."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.armed = False
-
-    def append_new(self, df, table, key, partition_by=None):
-        if self.armed and table == "positional_seen_docs":
-            self.armed = False
-            raise RuntimeError("injected crash before positional seen commit")
-        return super().append_new(df, table, key, partition_by=partition_by)
-
-
-def test_positional_crash_before_seen_converges(spark, tmp_path):
     docs = _pdocs(spark)
-    store = _CrashBeforePosSeenStore(spark, str(tmp_path / "poscrash"))
+    store = Store(spark, str(tmp_path / "poscrash"))
     incremental_positional_postings(docs.filter(F.col("doc_id") <= 0), store)
-    store.armed = True
+    crash_once(
+        store,
+        "append_new",
+        "positional_seen_docs",
+        "injected crash before positional seen commit",
+    )
     with pytest.raises(RuntimeError, match="injected"):
         incremental_positional_postings(
             docs.filter(F.col("doc_id") > 0), store

@@ -20,6 +20,8 @@ from efiche_data_pipeline_spark.streaming.savings_stream import (
     run_savings_stream,
 )
 
+from .conftest import crash_once
+
 _SCHEMA = "doc_id long, source string, text string"
 
 
@@ -69,15 +71,11 @@ def test_crash_between_keeper_and_sums_converges(spark, tmp_path):
     incremental_dedup_savings(docs.filter("doc_id < 6"), store)
 
     # inject a crash AFTER the keeper append, BEFORE the sums commit
-    real = store.append_version
-
-    def boom(df, table):
-        raise RuntimeError("injected crash before the sums commit")
-
-    store.append_version = boom
+    crash_once(
+        store, "append_version", "savings_sums", "injected crash before the sums commit"
+    )
     with pytest.raises(RuntimeError, match="injected"):
         incremental_dedup_savings(docs.filter("doc_id >= 6"), store)
-    store.append_version = real
 
     # replay: keeper re-append no-ops, sums commit — report converges
     n = incremental_dedup_savings(docs.filter("doc_id >= 6"), store)

@@ -20,7 +20,7 @@ from efiche_data_pipeline_spark.operators.similarity import (
 )
 from efiche_data_pipeline_spark.sources.catalog import load_table
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, crash_once
 
 
 def test_brute_force_topk_exact_ordering(spark):
@@ -641,28 +641,13 @@ def test_ivf_maintain_crash_windows_converge(clustered, tmp_path):
     maintain, cents_a, cents_b, folds = _maintain_args(clustered)
     spark = clustered.sparkSession
 
-    class CrashOnIndexOverwrite(Store):
-        armed = False
-
-        def overwrite(self, df, table, partition_by=None):
-            if self.armed and table == "ivf_cells":
-                self.armed = False
-                raise RuntimeError("injected crash before re-assign")
-            return super().overwrite(df, table, partition_by=partition_by)
-
-    class CrashOnMarker(Store):
-        armed = False
-
-        def write_version(self, df, table):
-            if self.armed and table == "ivf_assign_meta":
-                self.armed = False
-                raise RuntimeError("injected crash before marker")
-            return super().write_version(df, table)
-
-    for name, cls in (("a", CrashOnIndexOverwrite), ("b", CrashOnMarker)):
-        store = cls(spark, str(tmp_path / f"crash_{name}"))
+    for name, op, table, msg in (
+        ("a", "overwrite", "ivf_cells", "injected crash before re-assign"),
+        ("b", "write_version", "ivf_assign_meta", "injected crash before marker"),
+    ):
+        store = Store(spark, str(tmp_path / f"crash_{name}"))
         maintain(folds["seed"], store, centroids=cents_a)
-        store.armed = True
+        crash_once(store, op, table, msg)
         with pytest.raises(RuntimeError, match="injected crash"):
             maintain(folds["drift"], store, retrain_centroids=cents_b)
         # centroids point at the NEW regime, marker is stale

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from efiche_data_pipeline_spark.operators.sketch import kmv_distinct
 
+from .conftest import crash_once
+
 
 def _est(spark, n_distinct, k):
     df = spark.range(n_distinct * 3).select(
@@ -242,18 +244,11 @@ def test_incremental_card_crash_between_sketch_and_scalars_converges(
 
     docs = _card_docs(spark)
 
-    class CrashStore(Store):
-        armed = False
-
-        def write_version(self, df, table):
-            if self.armed and table == "card_scalars":
-                self.armed = False
-                raise RuntimeError("injected crash before scalar commit")
-            return super().write_version(df, table)
-
-    store = CrashStore(spark, str(tmp_path / "crash"))
+    store = Store(spark, str(tmp_path / "crash"))
     incremental_dataset_card(docs.filter(F.col("doc_id") <= 19), store, k=8)
-    store.armed = True
+    crash_once(
+        store, "write_version", "card_scalars", "injected crash before scalar commit"
+    )
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -534,19 +529,12 @@ def test_incremental_tfidf_crash_between_commits_converges(spark, tmp_path):
     from efiche_data_pipeline_spark.operators.sketch import incremental_tfidf
     from efiche_data_pipeline_spark.pipeline.store import Store
 
-    class CrashOnStats(Store):
-        armed = False
-
-        def write_version(self, df, table):
-            if self.armed and table == "tfidf_stats":
-                self.armed = False
-                raise RuntimeError("injected crash before stats commit")
-            return super().write_version(df, table)
-
     docs, rows = _tf_corpus(spark)
-    store = CrashOnStats(spark, str(tmp_path / "crash"))
+    store = Store(spark, str(tmp_path / "crash"))
     incremental_tfidf(docs.filter(F.col("doc_id") <= 2), store, _TF_TERMS)
-    store.armed = True
+    crash_once(
+        store, "write_version", "tfidf_stats", "injected crash before stats commit"
+    )
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_tfidf(docs.filter(F.col("doc_id") > 2), store, _TF_TERMS)
     out, _ = incremental_tfidf(docs.filter(F.col("doc_id") > 2), store, _TF_TERMS)
@@ -694,18 +682,11 @@ def test_incremental_source_rollup_equals_global_replays_and_survives_crash(
     out2, v2 = incremental_source_rollup(docs, store)
     assert v2 == v and snap(out2) == want
 
-    class CrashOnScalars(Store):
-        armed = False
-
-        def write_version(self, df, table):
-            if self.armed and table == "rollup_scalars":
-                self.armed = False
-                raise RuntimeError("injected crash before scalar commit")
-            return super().write_version(df, table)
-
-    cstore = CrashOnScalars(spark, str(tmp_path / "c"))
+    cstore = Store(spark, str(tmp_path / "c"))
     incremental_source_rollup(docs.filter(F.col("doc_id") <= 9), cstore)
-    cstore.armed = True
+    crash_once(
+        cstore, "write_version", "rollup_scalars", "injected crash before scalar commit"
+    )
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_source_rollup(docs.filter(F.col("doc_id") > 9), cstore)
     out3, _ = incremental_source_rollup(docs.filter(F.col("doc_id") > 9), cstore)

@@ -378,67 +378,32 @@ def test_delete_keys_layered_with_version_like_root_segment(spark, tmp_path):
     assert sorted(os.listdir(store._vdir("t", 2))) == files_l2
 
 
-class _AppendDuringDeleteStore(Store):
-    """Fires ``inject`` once, right before the delete's commit-slot
-    (barrier) claim — simulating an append_version landing in the
-    window between the last layer rewrite and the pointer swap."""
-
-    def __init__(self, spark, root):
-        super().__init__(spark, root)
-        self.claims = 0
-        self.inject = None
-
-    def _claim_next_version(self, table):
-        self.claims += 1
-        if self.claims == 2 and self.inject is not None:
-            inj, self.inject = self.inject, None
-            inj()
-        return super()._claim_next_version(table)
-
-
 def test_delete_commit_preserves_concurrently_appended_layer(spark, tmp_path):
     """The layered delete's manifest + pointer commit runs under a held
     CAS claim and rebuilds the manifest from the LATEST committed
     version — so a layer appended between the rewrite and the commit
-    survives in the final view instead of being silently dropped."""
+    survives in the final view instead of being silently dropped. The
+    fault seam's ``delete_keys:commit`` point (right before the
+    barrier claim) lands a second writer's append_version in the
+    window between the last layer rewrite and the pointer swap."""
     root = str(tmp_path / "race")
-    store = _AppendDuringDeleteStore(spark, root)
+    store = Store(spark, root)
     other = Store(spark, root)
     mk = lambda lo, hi: spark.createDataFrame(
         [(i,) for i in range(lo, hi)], "id long"
     )
     store.append_version(mk(0, 10), "t")
-    store.claims = 0
-    store.inject = lambda: other.append_version(mk(100, 110), "t")
+
+    def append_in_window(op, table):
+        if op == "delete_keys:commit":
+            del store._fault
+            other.append_version(mk(100, 110), "t")
+
+    store._fault = append_in_window
     store.delete_keys("t", _keys(spark, 3), "id")
     got = {r["id"] for r in store.read_union("t").collect()}
     assert got == (set(range(10)) - {3}) | set(range(100, 110)), got
     # and the table keeps working: a further append extends the view
-    store.inject = None
+    assert "_fault" not in vars(store)
     store.append_version(mk(200, 205), "t")
     assert store.read_union("t").count() == 9 + 10 + 5
-
-
-def test_legacy_underscore_version_layout_migrates(spark, tmp_path):
-    """A store written by the pre-round-6 layout (_v<N> version dirs)
-    is healed on first access: versions() reports the committed
-    history, read_version resolves the _CURRENT pointer, and the next
-    write claims the correct slot instead of re-claiming slot 1."""
-    import os
-
-    root = str(tmp_path / "legacy")
-    store = Store(spark, root)
-    mk = lambda tag: spark.createDataFrame([(1, tag)], "id long, tag string")
-    store.write_version(mk("a"), "t")
-    store.write_version(mk("b"), "t")
-    for d in list(os.listdir(store.path("t"))):
-        if d.startswith("v") and d[1:].isdigit():
-            os.rename(
-                os.path.join(store.path("t"), d),
-                os.path.join(store.path("t"), "_" + d),
-            )
-    fresh = Store(spark, root)
-    assert fresh.versions("t") == [1, 2]
-    assert fresh.read_version("t").first()["tag"] == "b"
-    assert fresh.write_version(mk("c"), "t") == 3
-    assert fresh.read_version("t", 1).first()["tag"] == "a"

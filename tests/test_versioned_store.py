@@ -142,6 +142,26 @@ def test_layered_append_version_union_and_rollback(spark, tmp_path):
     assert v3 > v2
 
 
+def test_layered_rollback_refuses_a_rewritten_layer(spark, tmp_path):
+    """A delete rewrites each affected layer into a new committed v<N>
+    directory, but only the last one gets a manifest and becomes a
+    version. Rolling back onto another one would point the table at a
+    single cleaned layer that read_union and append_version then refuse
+    as a snapshot table — rollback must refuse it and change nothing."""
+    store = Store(spark, str(tmp_path / "s"))
+    df = lambda lo: spark.createDataFrame([(i,) for i in range(lo, lo + 4)], "id long")
+    for lo in (0, 4, 8):
+        store.append_version(df(lo), "t")  # v1, v2, v3
+    store.delete_keys("t", spark.createDataFrame([(1,), (5,)], "id long"), "id")
+    assert store.current_version("t") == 5  # layers 1, 2 rewritten as v4, v5
+    with pytest.raises(FileNotFoundError, match="no layer manifest"):
+        store.rollback("t", 4)
+    assert store.current_version("t") == 5
+    assert {r["id"] for r in store.read_union("t").collect()} == set(range(12)) - {1, 5}
+    store.rollback("t", 3)  # a real version still rolls back
+    assert store.read_union("t").count() == 12
+
+
 def test_compact_layers_preserves_union(spark, tmp_path):
     store = Store(spark, str(tmp_path / "s"))
     df = lambda *ids: spark.createDataFrame([(i,) for i in ids], "id long")

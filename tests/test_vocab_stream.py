@@ -18,6 +18,8 @@ from efiche_data_pipeline_spark.operators.bpe import (
 from efiche_data_pipeline_spark.pipeline.store import Store
 from efiche_data_pipeline_spark.streaming.vocab_stream import run_vocab_stream
 
+from .conftest import crash_once
+
 _SCHEMA = "doc_id long, text string"
 _MERGES = 4
 
@@ -119,7 +121,7 @@ def test_forget_vocab_documents_equals_survivor_training(spark, tmp_path):
     assert forget_vocab_documents(store, [2]) == 0
 
 
-def test_forget_crash_then_blind_retry_subtracts_once(spark, tmp_path, monkeypatch):
+def test_forget_crash_then_blind_retry_subtracts_once(spark, tmp_path):
     """Crash between the negative-delta commit and the docs-sink
     delete, followed by a BLIND re-run of the same forget call: the
     marker ledger inside the negative layer must stop the retry from
@@ -131,22 +133,17 @@ def test_forget_crash_then_blind_retry_subtracts_once(spark, tmp_path, monkeypat
         forget_vocab_documents,
         vocab_from_store,
     )
-    from efiche_data_pipeline_spark.pipeline.store import Store as S
 
     src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
     _write(spark, src, _rows(0, 10))
     store = Store(spark, str(tmp_path / "store"))
     run_vocab_stream(spark, src, _SCHEMA, store, ckpt, n_merges=_MERGES)
 
-    real = S.delete_keys
-
-    def boom(self, table, keys, key_col):
-        raise RuntimeError("injected crash before the sink delete")
-
-    monkeypatch.setattr(S, "delete_keys", boom)
+    crash_once(
+        store, "delete_keys", "bpe_docs", "injected crash before the sink delete"
+    )
     with pytest.raises(RuntimeError, match="injected"):
         forget_vocab_documents(store, [2, 5, 7])
-    monkeypatch.setattr(S, "delete_keys", real)
     # half-done: negative layer committed, sink rows still present
     assert store.read("bpe_docs").count() == 10
     v_half = store.current_version("bpe_vocab")

@@ -1,4 +1,9 @@
-"""Structured Streaming / incremental processing."""
+"""Structured Streaming / incremental processing.
+
+Every ``run_*`` fold driver reads its source through
+:func:`.driver.file_stream` (one parquet file per micro-batch) and is
+driven to completion by :func:`.driver.run_fold_stream`
+(``availableNow`` + ``foreachBatch``)."""
 
 from .curation import curated_stream, stream_documents
 from .dedup_stream import run_incremental_dedup_stream

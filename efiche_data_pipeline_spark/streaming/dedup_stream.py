@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.dedup import incremental_minhash_dedup
 from ..pipeline.store import Store
 from .curation import stream_documents
+from .driver import run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -70,7 +71,6 @@ def run_incremental_dedup_stream(
     checkpoint_dir: str,
     kept_table: str = "dedup_kept_docs",
     index_table: str = "minhash_sig_index",
-    max_files_per_trigger: int = 1,
     threshold: float = 0.5,
     n_hashes: int = 16,
     bands: int = 4,
@@ -111,10 +111,9 @@ def run_incremental_dedup_stream(
     when running both methods against one store."""
     if method not in ("minhash", "simhash"):
         raise ValueError(f"unknown dedup method {method!r}")
-    totals = {"batches": 0, "new": 0, "dropped": 0}
+    totals = {"new": 0, "dropped": 0}
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         docs = batch.select("doc_id", "text")
         if canonicalize:
             from pyspark.sql import functions as F
@@ -165,18 +164,12 @@ def run_incremental_dedup_stream(
         totals["new"] += res.n_new
         totals["dropped"] += res.n_dup_vs_history + res.n_dup_within
 
-    q = (
-        stream_documents(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(dedup_batch)
-        .start()
+    n_batches, _ = run_fold_stream(
+        stream_documents(spark, source_dir), checkpoint_dir, dedup_batch
     )
-    q.awaitTermination()
     v = store.current_version(index_table)
     return StreamDedupReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_new=totals["new"],
         n_dropped=totals["dropped"],
         index_version=v if v is not None else 0,

@@ -33,6 +33,7 @@ from ..functions.text import token_count
 from ..operators.drift import psi_from_bucket_counts
 from ..pipeline.store import Store
 from .curation import stream_documents
+from .driver import file_stream, run_fold_stream
 
 _TOKEN_BUCKET_WIDTH = 50
 _TOKEN_BUCKET_MAX = 9
@@ -81,7 +82,6 @@ def run_drift_monitor(
     checkpoint_dir: str,
     table: str = "drift_reports",
     threshold: float = 0.25,
-    max_files_per_trigger: int = 1,
 ) -> DriftMonitorReport:
     """availableNow consumption of parquet document files: each
     micro-batch is PSI-scored per profile column against
@@ -92,10 +92,9 @@ def run_drift_monitor(
         .withColumnRenamed("cnt", "c_ref")
         .localCheckpoint(eager=True)
     )
-    totals = {"batches": 0, "alarms": 0}
+    totals = {"alarms": 0}
 
     def score(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         cur = doc_bucket_counts(batch).withColumnRenamed("cnt", "c_cur")
         per_bucket = (
             ref.join(cur, ["column_name", "bucket"], "full_outer")
@@ -113,18 +112,10 @@ def run_drift_monitor(
         store.merge_upsert(rep, table, keys=["batch_id", "column_name"])
         totals["alarms"] += rep.filter("alarm").count()
 
-    q = (
-        stream_documents(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(score)
-        .start()
+    n_batches, _ = run_fold_stream(
+        stream_documents(spark, source_dir), checkpoint_dir, score
     )
-    q.awaitTermination()
-    return DriftMonitorReport(
-        n_batches=totals["batches"], n_alarms=totals["alarms"]
-    )
+    return DriftMonitorReport(n_batches=n_batches, n_alarms=totals["alarms"])
 
 
 def run_embedding_drift_monitor(
@@ -138,7 +129,6 @@ def run_embedding_drift_monitor(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.25,
-    max_files_per_trigger: int = 1,
 ) -> DriftMonitorReport:
     """Streaming twin of the q113 embedding drift gate: every incoming
     micro-batch of vectors is assigned to the FROZEN ``centroids``
@@ -155,7 +145,7 @@ def run_embedding_drift_monitor(
     The reference profile is a bounded ≤K-row frame, localCheckpointed
     once and reused across batches."""
     from ..operators.similarity import assign_cells
-    from .embedding_stream import stream_vectors
+    from .embedding_stream import VECS_STREAM_SCHEMA
 
     ref = (
         assign_cells(reference_vectors, centroids, id_col, vec_col)
@@ -163,10 +153,9 @@ def run_embedding_drift_monitor(
         .agg(F.count(F.lit(1)).alias("c_ref"))
         .localCheckpoint(eager=True)
     )
-    totals = {"batches": 0, "alarms": 0}
+    totals = {"alarms": 0}
 
     def score(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         cur = (
             assign_cells(batch, centroids, id_col, vec_col)
             .groupBy("cell_id")
@@ -191,15 +180,7 @@ def run_embedding_drift_monitor(
         store.merge_upsert(rep, table, keys=["batch_id", "column_name"])
         totals["alarms"] += rep.filter("alarm").count()
 
-    q = (
-        stream_vectors(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(score)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, VECS_STREAM_SCHEMA), checkpoint_dir, score
     )
-    q.awaitTermination()
-    return DriftMonitorReport(
-        n_batches=totals["batches"], n_alarms=totals["alarms"]
-    )
+    return DriftMonitorReport(n_batches=n_batches, n_alarms=totals["alarms"])

@@ -37,18 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.similarity import incremental_embedding_dedup
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 VECS_STREAM_SCHEMA = "vec_id long, embedding array<double>"
-
-
-def stream_vectors(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    return (
-        spark.readStream.schema(VECS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
 
 @dataclass(frozen=True)
@@ -73,7 +64,6 @@ def run_incremental_embedding_stream(
     kept_table: str = "embdedup_kept_vecs",
     index_table: str = "semdedup_cells",
     centroid_table: str = "ivf_centroids",
-    max_files_per_trigger: int = 1,
     tau: float = 0.9,
     nprobe: int = 4,
 ) -> StreamEmbeddingDedupReport:
@@ -90,10 +80,9 @@ def run_incremental_embedding_stream(
     ``store.compact``/``overwrite_sorted`` as out-of-band maintenance
     when file counts warrant — the q104/q110 read path prunes to
     probed cell DIRECTORIES either way)."""
-    totals = {"batches": 0, "new": 0, "dropped": 0}
+    totals = {"new": 0, "dropped": 0}
 
     def dedup_batch(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         res = incremental_embedding_dedup(
             batch.select("vec_id", "embedding"),
             store,
@@ -113,17 +102,13 @@ def run_incremental_embedding_stream(
         totals["new"] += res.n_new
         totals["dropped"] += res.n_dup_vs_history + res.n_dup_within
 
-    q = (
-        stream_vectors(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(dedup_batch)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, VECS_STREAM_SCHEMA),
+        checkpoint_dir,
+        dedup_batch,
     )
-    q.awaitTermination()
     return StreamEmbeddingDedupReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_new=totals["new"],
         n_dropped=totals["dropped"],
         n_kept_total=store.count(kept_table),

@@ -50,6 +50,7 @@ from ..operators.expectations import (
     check_expectations,
 )
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -255,7 +256,6 @@ def run_expectations_gate_stream(
     quarantine_table: str = "expectations_quarantine",
     audit_table: str = "expectations_audit",
     watermark_table: str = "expectations_watermark",
-    max_files_per_trigger: int = 1,
 ) -> ExpectationsStreamReport:
     """availableNow consumption of parquet row files under
     ``source_dir``; audits each batch against ``rules``, routes rows
@@ -279,17 +279,9 @@ def run_expectations_gate_stream(
         if n > 0:
             totals["batches"] += 1
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(gate)
-        .start()
-    )
-    q.awaitTermination()
+    # n_batches counts committed, non-skipped batches only, not the
+    # driver's micro-batch count
+    run_fold_stream(file_stream(spark, source_dir, schema), checkpoint_dir, gate)
     n_acc = store.count(accepted_table) if store.exists(accepted_table) else 0
     n_q = (
         store.count(quarantine_table)

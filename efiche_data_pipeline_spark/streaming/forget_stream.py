@@ -63,6 +63,7 @@ from ..operators.retrieval import (
     forget_term_documents,
 )
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -80,7 +81,6 @@ def run_forget_stream(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     ledger_table: str = "forget_requests",
-    max_files_per_trigger: int = 1,
     vocab_text_col: str = "text",
     span_k: int = 6,
     span_min_docs: int = 2,
@@ -93,10 +93,8 @@ def run_forget_stream(
     estate was folded with — the retroactive report recompute derives
     span extents from ``k`` (a mismatched k silently rewrites every
     holder's span lengths at the wrong granularity)."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         ids = batch.select(id_col).distinct()
         if store.exists(ledger_table):
             ids = ids.join(store.read(ledger_table), id_col, "left_anti")
@@ -145,17 +143,9 @@ def run_forget_stream(
         # crash before this line replays them all to no-ops
         store.append_new(ids, ledger_table, key=id_col)
 
-    q = (
-        spark.readStream.schema(f"{id_col} long")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, f"{id_col} long"), checkpoint_dir, fold
     )
-    q.awaitTermination()
     fams = []
     if store.exists("dedup_kept_docs") or store.current_version(
         "minhash_sig_index"
@@ -173,7 +163,7 @@ def run_forget_stream(
         fams.append("positional")
     n_req = store.count(ledger_table) if store.exists(ledger_table) else 0
     return ForgetStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_requests=n_req,
         families=tuple(fams),
     )

@@ -12,8 +12,8 @@ Three pieces:
   and their windows finalized) — the scale lever that keeps state
   finite on an unbounded stream.
 - :func:`run_incremental_stream` — drives the aggregate through
-  ``foreachBatch`` into an idempotent keyed parquet sink with
-  ``availableNow`` + ``maxFilesPerTrigger``: each micro-batch merges
+  ``foreachBatch`` into an idempotent keyed parquet sink under
+  ``availableNow``, one file per micro-batch: each micro-batch merges
   (delete-by-key + insert) into the target, so replaying a batch after
   a failure converges to the same table — the exactly-once-ish story
   the reference approximates with ON CONFLICT + processed flags
@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from ..functions.numeric import money_sum
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, user_id long, event_type string, ts timestamp_ntz,"
@@ -68,18 +69,14 @@ def ensure_event_time(df: DataFrame, col: str) -> DataFrame:
     return df
 
 
-def stream_events(spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
-    """File-source stream over event parquet files. ``ts`` arrives as
+def stream_events(spark: SparkSession, source_dir: str) -> DataFrame:
+    """File-source stream over event parquet files, one file per
+    micro-batch (:func:`~.driver.file_stream`). ``ts`` arrives as
     TIMESTAMP_NTZ (parquet TIMESTAMP with or without UTC adjustment)
-    and is relabelled to event-time LTZ via :func:`ensure_event_time`.
-    ``maxFilesPerTrigger`` bounds micro-batch size — the streaming
-    analogue of the reference's ``LIMIT 5000`` (etl_pipeline.py:131)."""
-    raw = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    and is relabelled to event-time LTZ via :func:`ensure_event_time`."""
+    return ensure_event_time(
+        file_stream(spark, source_dir, EVENTS_STREAM_SCHEMA), "ts"
     )
-    return ensure_event_time(raw, "ts")
 
 
 def hourly_event_counts(
@@ -116,7 +113,6 @@ def run_incremental_stream(
     checkpoint_dir: str,
     table: str = "hourly_event_counts",
     watermark: str = "2 hours",
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Consume all currently-available files as a sequence of
     micro-batches (``availableNow``) and merge each windowed-aggregate
@@ -126,14 +122,9 @@ def run_incremental_stream(
     windows replace their previous rows (delete+insert keyed merge), so
     batch replays converge instead of double-counting — this plus the
     checkpoint is the exactly-once-ish contract."""
-    agg = hourly_event_counts(
-        stream_events(spark, source_dir, max_files_per_trigger), watermark
-    )
-    n_batches = 0
+    agg = hourly_event_counts(stream_events(spark, source_dir), watermark)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         # merge_upsert runs >1 action over `batch`; persist so the
         # stateful micro-batch plan executes once per batch instead of
         # once per action (same lever as streaming/late.py).
@@ -143,14 +134,9 @@ def run_incremental_stream(
         finally:
             batch.unpersist()
 
-    q = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(merge)
-        .start()
+    n_batches, _ = run_fold_stream(
+        agg, checkpoint_dir, merge, output_mode="update"
     )
-    q.awaitTermination()
     return n_batches
 
 

@@ -44,6 +44,7 @@ from ..operators.dedup import incremental_minhash_dedup
 from ..operators.sketch import incremental_dataset_card
 from ..pipeline.store import Store
 from .curation import stream_documents
+from .driver import run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -51,7 +52,9 @@ class IntakeStreamReport:
     n_batches: int
     n_contaminated_total: int  # store-derived
     n_kept_total: int  # store-derived
-    card: DataFrame  # the maintained release card after the run
+    # the maintained release card after the run; None before the
+    # first kept document (fresh store, empty or all-contaminated source)
+    card: DataFrame | None
 
 
 def run_intake_stream(
@@ -63,7 +66,6 @@ def run_intake_stream(
     flags_table: str = "decontam_flags",
     kept_table: str = "dedup_kept_docs",
     index_table: str = "minhash_sig_index",
-    max_files_per_trigger: int = 1,
     threshold: float = 0.5,
     canonicalize: bool = False,
     compact_every: int | None = None,
@@ -74,10 +76,7 @@ def run_intake_stream(
     the first run (the held-out set is fixed per release)."""
     from ..operators.dedup import incremental_decontamination
 
-    totals = {"batches": 0}
-
     def intake_batch(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         docs = batch
         if canonicalize:
             from ..functions.text import canonical_text
@@ -126,30 +125,32 @@ def run_intake_stream(
         # still feeds the card; the card's own watermark cuts rows
         # already folded. Runs even on res.n_new == 0 (the replay
         # path where the kept sink holds rows the card hasn't seen).
+        # Skipped while no batch has kept a doc yet (an all-contaminated
+        # first file): there is no kept sink to read back.
+        if not store.exists(kept_table):
+            return
         kept_docs = docs.join(
             store.read(kept_table).select("doc_id"), "doc_id", "left_semi"
         )
         if kept_docs.limit(1).count() > 0:
             incremental_dataset_card(kept_docs, store)
 
-    q = (
-        stream_documents(spark, source_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(intake_batch)
-        .start()
+    n_batches, _ = run_fold_stream(
+        stream_documents(spark, source_dir), checkpoint_dir, intake_batch
     )
-    q.awaitTermination()
     from ..operators.sketch import _card_row
 
     return IntakeStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_contaminated_total=(
             store.read(flags_table).filter("contaminated").count()
             if store.exists(flags_table)
             else 0
         ),
         n_kept_total=store.count(kept_table),
-        card=_card_row(store, "card_scalars", "card_kinds_sketch", 64),
+        card=(
+            _card_row(store, "card_scalars", "card_kinds_sketch", 64)
+            if store.current_version("card_scalars") is not None
+            else None
+        ),
     )

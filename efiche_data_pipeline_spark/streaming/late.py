@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ..pipeline.store import Store
+from .driver import run_fold_stream
 from .incremental import hourly_event_counts, stream_events
 
 
@@ -74,7 +75,7 @@ class _DropCountListener(StreamingQueryListener):
     Why a listener and not ``q.recentProgress`` after termination:
     recentProgress is a ring buffer capped at
     ``spark.sql.streaming.numRecentProgressUpdates`` (default 100).
-    With ``maxFilesPerTrigger=1`` a backlog of more files than the cap
+    With one file per micro-batch a backlog of more files than the cap
     silently evicts the earliest batches' progress — and their drop
     counts — which would make the "exact accounting" promise of this
     module quietly false on exactly the runs (big backlogs) where late
@@ -117,19 +118,13 @@ def run_with_late_accounting(
     checkpoint_dir: str,
     table: str = "hourly_event_counts_final",
     watermark: str = "30 minutes",
-    max_files_per_trigger: int = 1,
 ) -> LateReport:
     """availableNow consumption of ``source_dir``: FINALIZED windows
     are appended into the keyed merge sink, and every too-late row the
     watermark rejected is counted in the returned report."""
-    agg = hourly_event_counts(
-        stream_events(spark, source_dir, max_files_per_trigger), watermark
-    )
-    n_batches = 0
+    agg = hourly_event_counts(stream_events(spark, source_dir), watermark)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         # The keyed merge runs >1 action over `batch`; without a
         # persist each action RE-EXECUTES the stateful micro-batch
         # plan, double-counting numRowsDroppedByWatermark (observed:
@@ -144,14 +139,7 @@ def run_with_late_accounting(
     listener = _DropCountListener()
     spark.streams.addListener(listener)
     try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .foreachBatch(merge)
-            .start()
-        )
-        q.awaitTermination()
+        n_batches, q = run_fold_stream(agg, checkpoint_dir, merge)
         # Per-batch drop counts, from TWO sources united by batch id:
         # recentProgress is updated synchronously per trigger but is a
         # ring buffer (may have evicted early batches of a long

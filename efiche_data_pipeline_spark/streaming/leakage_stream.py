@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import incremental_split_leakage
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -45,16 +46,13 @@ def run_leakage_stream(
     train_pct: int = 80,
     val_pct: int = 10,
     leakage_table: str = "split_leakage",
-    max_files_per_trigger: int = 1,
 ) -> LeakageStreamReport:
     """availableNow consumption of parquet document files under
     ``source_dir``: each micro-batch runs the intake-time leakage
     check against the persisted signature index; the returned report
     reflects every file seen across all runs of this checkpoint."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         incremental_split_leakage(
             batch, store,
             leakage_table=leakage_table, id_col=id_col, text_col=text_col,
@@ -62,17 +60,9 @@ def run_leakage_stream(
             train_pct=train_pct, val_pct=val_pct,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     report = (
         store.read(leakage_table).select(
             "doc_a", "doc_b", "split_a", "split_b"
@@ -80,4 +70,4 @@ def run_leakage_stream(
         if store.exists(leakage_table)
         else None
     )
-    return LeakageStreamReport(n_batches=totals["batches"], report=report)
+    return LeakageStreamReport(n_batches=n_batches, report=report)

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.lm import incremental_lm, lm_model_from_store, ngram_lm_score
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 _EMPTY_MODEL_SCHEMA = "kind string, w1 string, w2 string, cnt long"
 
@@ -80,15 +81,13 @@ def run_lm_stream(
     model_table: str = "lm_model",
     docs_table: str = "lm_docs",
     scores_table: str = "lm_scores",
-    max_files_per_trigger: int = 1,
 ) -> LmStreamReport:
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned report reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0, "folded": 0}
+    totals = {"folded": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         docs = batch.select(id_col, text_col).localCheckpoint(eager=True)
         # 1. model fold (atomic, self-watermarked)
         r = incremental_lm(
@@ -112,23 +111,15 @@ def run_lm_stream(
         )
         store.append_new(scored, scores_table, id_col)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     if not store.exists(docs_table):
-        return LmStreamReport(totals["batches"], totals["folded"], 0, None, None)
+        return LmStreamReport(n_batches, totals["folded"], 0, None, None)
     seen = store.read(docs_table)
     model = current_lm_model(spark, store, model_table).localCheckpoint(eager=True)
     return LmStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_docs_folded=totals["folded"],
         n_docs_seen=seen.count(),
         report=ngram_lm_score(seen, model, id_col, text_col),

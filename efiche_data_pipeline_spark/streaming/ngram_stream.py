@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from ..operators.bpe import FORGOTTEN_MARKER
 from ..operators.sketch import incremental_ngram_counts, ngram_heavy_hitters
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -75,15 +76,13 @@ def run_ngram_stream(
     n: int = 2,
     den: int = 1000,
     counts_table: str = "ngram_counts",
-    max_files_per_trigger: int = 1,
 ) -> NgramStreamReport:
     """availableNow consumption of parquet document files under
     ``source_dir``; folds each batch's gram counts and returns the
     heavy-hitter read over everything ever seen."""
-    totals = {"batches": 0, "docs": 0}
+    totals = {"docs": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         stats = batch.agg(
             F.min(id_col).alias("mn"), F.max(id_col).alias("mx")
         ).first()
@@ -139,17 +138,9 @@ def run_ngram_stream(
             batch, store, id_col, text_col, n, counts_table
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     hh = None
     n_state = 0
     if store.current_version(counts_table) is not None:
@@ -165,7 +156,7 @@ def run_ngram_stream(
             .count()
         )
     return NgramStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_docs_folded=totals["docs"],
         n_grams_state=n_state,
         heavy_hitters=hh,

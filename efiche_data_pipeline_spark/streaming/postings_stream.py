@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.retrieval import incremental_term_postings
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -48,15 +49,13 @@ def run_postings_stream(
     postings_table: str = "term_postings",
     doclen_table: str = "doc_lengths",
     seen_table: str = "postings_seen_docs",
-    max_files_per_trigger: int = 1,
 ) -> PostingsStreamReport:
     """availableNow consumption of parquet document files under
     ``source_dir``; folds each batch into the postings estate and
     returns the all-time indexed-doc count."""
-    totals = {"batches": 0, "docs": 0}
+    totals = {"docs": 0}
 
     def fold(batch, batch_id: int) -> None:
-        totals["batches"] += 1
         totals["docs"] += incremental_term_postings(
             batch,
             store,
@@ -67,24 +66,16 @@ def run_postings_stream(
             seen_table=seen_table,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     n_indexed = (
         store.read(seen_table).select("_id").distinct().count()
         if store.exists(seen_table)
         else 0
     )
     return PostingsStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_docs_folded=totals["docs"],
         n_docs_indexed=n_indexed,
     )
@@ -100,7 +91,6 @@ def run_positional_postings_stream(
     text_col: str = "text",
     postings_table: str = "positional_postings",
     seen_table: str = "positional_seen_docs",
-    max_files_per_trigger: int = 1,
 ) -> PostingsStreamReport:
     """The positional twin: availableNow consumption of parquet
     document files folding into the POSITIONAL index estate (the live
@@ -111,10 +101,9 @@ def run_positional_postings_stream(
     the crash matrix is the fold's (tests/test_retrieval.py)."""
     from ..operators.retrieval import incremental_positional_postings
 
-    totals = {"batches": 0, "docs": 0}
+    totals = {"docs": 0}
 
     def fold(batch, batch_id: int) -> None:
-        totals["batches"] += 1
         totals["docs"] += incremental_positional_postings(
             batch,
             store,
@@ -124,24 +113,16 @@ def run_positional_postings_stream(
             seen_table=seen_table,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     n_indexed = (
         store.read(seen_table).select("_id").distinct().count()
         if store.exists(seen_table)
         else 0
     )
     return PostingsStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_docs_folded=totals["docs"],
         n_docs_indexed=n_indexed,
     )

@@ -21,12 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.sketch import incremental_quantiles, sample_quantiles
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
 class QuantileStreamReport:
     n_batches: int
-    estimates: DataFrame  # per-group quantiles after the run
+    # per-group quantiles after the run; None when the stream has
+    # never consumed a row (fresh store, empty source)
+    estimates: DataFrame | None
 
 
 def run_quantile_stream(
@@ -41,34 +44,25 @@ def run_quantile_stream(
     k: int = 256,
     table: str = "quantile_sample",
     quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    max_files_per_trigger: int = 1,
 ) -> QuantileStreamReport:
     """availableNow consumption of parquet files under ``source_dir``
     (``schema`` describes them): each micro-batch folds into the
     persisted sample; the returned estimates reflect every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         incremental_quantiles(
             batch, store, group_cols, key_col, value_col,
             k=k, table=table, quantiles=quantiles,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
+    if store.current_version(table) is None:
+        return QuantileStreamReport(n_batches, None)
     return QuantileStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         estimates=sample_quantiles(
             store.read_version(table), group_cols, quantiles
         ),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sketch import dedup_savings_result, incremental_dedup_savings
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -42,15 +43,13 @@ def run_savings_stream(
     id_col: str = "doc_id",
     source_col: str = "source",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
 ) -> SavingsStreamReport:
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned report reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0, "folded": 0}
+    totals = {"folded": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         ids = batch.select(id_col).distinct().localCheckpoint(eager=True)
         # Enforce the fold's monotone-id contract HERE, where
         # violations enter (file discovery order is mtime order, not
@@ -88,23 +87,15 @@ def run_savings_stream(
             text_col=text_col,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     # the sums table is LAYERED (append_version), so presence is a
     # committed version, not a plain _SUCCESS marker
     if store.current_version("savings_sums") is None:
-        return SavingsStreamReport(totals["batches"], totals["folded"], None)
+        return SavingsStreamReport(n_batches, totals["folded"], None)
     return SavingsStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_docs_folded=totals["folded"],
         report=dedup_savings_result(store),
     )

@@ -50,6 +50,7 @@ from ..operators.bpe import (
     vocab_from_store,
 )
 from ..pipeline.store import Store
+from .driver import file_stream, run_fold_stream
 
 
 @dataclass(frozen=True)
@@ -74,15 +75,13 @@ def run_vocab_stream(
     n_merges: int = 8,
     vocab_table: str = "bpe_vocab",
     docs_table: str = "bpe_docs",
-    max_files_per_trigger: int = 1,
 ) -> VocabStreamReport:
     """availableNow consumption of parquet document files under
     ``source_dir``; the returned report reflects every file seen
     across all runs of this checkpoint."""
-    totals = {"batches": 0, "folded": 0}
+    totals = {"folded": 0}
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        totals["batches"] += 1
         docs = batch.select(id_col, text_col).localCheckpoint(eager=True)
         # Enforce incremental_vocab's monotone-id contract BEFORE any
         # commit, where violations actually enter (file discovery
@@ -124,11 +123,12 @@ def run_vocab_stream(
                 # through: the sink append below backfills the docs,
                 # and incremental_vocab's own watermark filter folds
                 # nothing twice. Requires the batch⇆file mapping to
-                # be stable across the upgrade (availableNow +
-                # unchanged maxFilesPerTrigger — the checkpoint
-                # contract); a REGROUPED replay cannot be told apart
-                # from a violation and still raises — repair that by
-                # re-running with the original trigger size.
+                # be stable across the upgrade (availableNow + the
+                # fixed one-file micro-batch of streaming/driver.py —
+                # the checkpoint contract); a REGROUPED replay (a
+                # checkpoint whose batches spanned several files)
+                # cannot be told apart from a violation and still
+                # raises.
                 batch_max = docs.agg(F.max(id_col)).first()[0]
                 layer_wms = {
                     r[0]
@@ -160,23 +160,15 @@ def run_vocab_stream(
         )
         totals["folded"] += r.n_new
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .foreachBatch(fold)
-        .start()
+    n_batches, _ = run_fold_stream(
+        file_stream(spark, source_dir, schema), checkpoint_dir, fold
     )
-    q.awaitTermination()
     if not store.exists(docs_table):
-        return VocabStreamReport(totals["batches"], totals["folded"], 0, None, None)
+        return VocabStreamReport(n_batches, totals["folded"], 0, None, None)
     seen = store.read(docs_table)
     res = bpe_learn(vocab_from_store(store, vocab_table), n_merges)
     return VocabStreamReport(
-        n_batches=totals["batches"],
+        n_batches=n_batches,
         n_docs_folded=totals["folded"],
         n_docs_seen=seen.count(),
         bpe=res,

@@ -58,7 +58,7 @@ def test_funnel_stream_matches_batch_semantics(spark, tmp_path):
         )
 
     q = (
-        funnel_stream(stream_events(spark, src, 1))
+        funnel_stream(stream_events(spark, src))
         .writeStream.outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -105,7 +105,7 @@ def test_funnel_stream_each_stage_emitted_once(spark, tmp_path):
         rows.extend((r["user_id"], r["stage"]) for r in batch.collect())
 
     q = (
-        funnel_stream(stream_events(spark, src, 1))
+        funnel_stream(stream_events(spark, src))
         .writeStream.outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -130,7 +130,7 @@ def test_funnel_stream_restart_emits_nothing_new(spark, tmp_path):
             rows.extend((r["user_id"], r["stage"]) for r in batch.collect())
 
         q = (
-            funnel_stream(stream_events(spark, src, 1))
+            funnel_stream(stream_events(spark, src))
             .writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)

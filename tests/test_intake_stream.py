@@ -166,3 +166,26 @@ def test_intake_stream_crash_between_stage_commits_converges(spark, tmp_path):
     assert store.count("dedup_kept_docs") == len(kept)  # no double insert
     assert r.n_contaminated_total == len(g_cont)
     assert r.card.first().asDict() == g_card
+
+
+def test_all_contaminated_first_file_does_not_poison_the_stream(
+    spark, tmp_path
+):
+    """A first file whose documents are all contaminated keeps nothing,
+    so no kept sink exists yet: the card stage must skip instead of
+    reading the missing sink, or the batch fails on every rerun."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    store = Store(spark, str(tmp_path / "store"))
+    seed_benchmark_index(store, _bench_docs(spark))
+    _write_file(spark, src, [_doc(1, _BENCH + " with an appended tail")])
+    r1 = run_intake_stream(spark, src, store, ckpt)
+    assert r1.n_batches == 1
+    assert r1.n_contaminated_total == 1
+    assert r1.n_kept_total == 0 and r1.card is None
+    _write_file(spark, src, [_doc(2, _OTHER, source="books")])
+    r2 = run_intake_stream(spark, src, store, ckpt)
+    assert r2.n_batches == 1
+    kept = {row["doc_id"] for row in store.read("dedup_kept_docs").collect()}
+    assert kept == {2}
+    assert r2.card is not None

@@ -65,7 +65,6 @@ def test_late_rows_dropped_counted_and_window_finalized(spark, tmp_path):
         store,
         checkpoint_dir=str(tmp_path / "ckpt"),
         watermark="30 minutes",
-        max_files_per_trigger=1,
     )
     assert report.n_batches >= 4
     # two late events in two distinct windows -> two dropped state rows
@@ -138,7 +137,6 @@ def test_drop_count_survives_recent_progress_ring_buffer(spark, tmp_path):
             Store(spark, str(tmp_path / "sink")),
             checkpoint_dir=str(tmp_path / "ckpt"),
             watermark="30 minutes",
-            max_files_per_trigger=1,
         )
     finally:
         if prev is None:

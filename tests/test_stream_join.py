@@ -27,7 +27,7 @@ def event_files(spark, tmp_path_factory):
 def _collect_stream(spark, source, tmp_path):
     rows: list[tuple] = []
     stream = purchase_click_attribution(
-        stream_events(spark, source, max_files_per_trigger=1),
+        stream_events(spark, source),
         max_gap="30 minutes",
         watermark="3650 days",
     )

@@ -46,7 +46,6 @@ def test_stream_equals_batch(spark, tmp_path, event_files):
         store,
         checkpoint_dir=str(tmp_path / "ckpt"),
         watermark="3650 days",
-        max_files_per_trigger=1,
     )
     assert n >= 4  # one per file (+ possible empty finalization batch)
     got = store.read("hourly_event_counts")
@@ -162,7 +161,7 @@ def test_ohlc_stream_equals_batch(spark, tmp_path, event_files):
             )
 
     agg = ohlc_bars_stream(
-        stream_events(spark, event_files, 1), watermark="3650 days"
+        stream_events(spark, event_files), watermark="3650 days"
     )
     q = (
         agg.writeStream.outputMode("update")

@@ -1003,14 +1003,9 @@ def incremental_novelty(
         .select(id_col, portable_hash60(F.col("g")).alias("gh"))
         .distinct()
     )
-    already = (
-        store.read(scores_table).select(id_col)
-        if store.exists(scores_table)
-        else None
+    fresh_docs = store.unseen(
+        new_docs.select(id_col).distinct(), scores_table, id_col
     )
-    fresh_docs = new_docs.select(id_col).distinct()
-    if already is not None:
-        fresh_docs = fresh_docs.join(already, id_col, "left_anti")
     fresh_sh = shingles.join(fresh_docs, id_col, "left_semi").localCheckpoint(
         eager=True
     )
@@ -1492,9 +1487,7 @@ def incremental_duplicated_spans(
         ib = GH_BUCKETS
     fresh = new_docs.select(F.col(id_col).alias("_id")).distinct()
     if store.exists(seen_table):
-        fresh = fresh.join(
-            store.read(seen_table).select("_id"), "_id", "left_anti"
-        )
+        fresh = store.unseen(fresh, seen_table, "_id")
     elif have_index:
         # Upgrade path (index predates the seen table): backfill it
         # once from the index's distinct ids — the exact watermark the
@@ -1784,14 +1777,7 @@ def incremental_decontamination(
     the broadcast-size benchmark index, one O(batch) aggregate.
     History text is never touched."""
     bench = store.read_version(index_table)
-    already = (
-        store.read(flags_table).select(id_col)
-        if store.exists(flags_table)
-        else None
-    )
-    fresh = new_docs.select(id_col, text_col)
-    if already is not None:
-        fresh = fresh.join(already, id_col, "left_anti")
+    fresh = store.unseen(new_docs.select(id_col, text_col), flags_table, id_col)
     sh = fresh.select(
         F.col(id_col), F.explode(word_shingles(text_col, shingle_n)).alias("g")
     ).select(id_col, F.xxhash64("g").alias("gh"))
@@ -1945,10 +1931,7 @@ def incremental_chunk_index(
     chunks = content_chunks(
         new_docs.dropDuplicates([id_col]), id_col, text_col, mod
     )
-    if store.exists(table):
-        seen = store.read(table).select(id_col).distinct()
-        chunks = chunks.join(seen, id_col, "left_anti")
-    chunks = chunks.localCheckpoint(eager=True)
+    chunks = store.unseen(chunks, table, id_col).localCheckpoint(eager=True)
     n_new = chunks.select(id_col).distinct().count()
     if n_new:
         store.append(chunks, table)
@@ -3189,12 +3172,9 @@ def incremental_passage_flags(
             "incremental_passage_flags: no watchlist seeded — run "
             "seed_passage_watchlist first"
         )
-    fresh = new_docs.select(id_col, text_col)
-    if store.exists(seen_table):
-        fresh = fresh.join(
-            store.read(seen_table).select(id_col), id_col, "left_anti"
-        )
-    fresh = fresh.localCheckpoint(eager=True)
+    fresh = store.unseen(
+        new_docs.select(id_col, text_col), seen_table, id_col
+    ).localCheckpoint(eager=True)
     n_new = fresh.count()
     if n_new == 0:
         return 0

@@ -551,8 +551,8 @@ def calibrate_quality_gate(
                 .agg(F.max("batch_max_id"))
                 .first()[0]
             )
-            unseen_low = batch.filter(F.col(id_col) <= wm).join(
-                store.read(ref_table).select(id_col), id_col, "left_anti"
+            unseen_low = store.unseen(
+                batch.filter(F.col(id_col) <= wm), ref_table, id_col
             )
             if unseen_low.count() > 0:
                 raise ValueError(
@@ -654,11 +654,7 @@ def gate_pool_batch(
             "calibrate_quality_gate first"
         )
     calib = store.read_version(calib_table).first()
-    fresh = pool_docs.select(id_col, text_col)
-    if store.exists(scores_table):
-        fresh = fresh.join(
-            store.read(scores_table).select(id_col), id_col, "left_anti"
-        )
+    fresh = store.unseen(pool_docs.select(id_col, text_col), scores_table, id_col)
     model = (
         store.read_union(model_table, version=int(calib["model_version"]))
         .groupBy("kind", "w1", "w2")

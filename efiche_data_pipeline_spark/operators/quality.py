@@ -163,10 +163,7 @@ def incremental_repetition(
 
     Cost per fold: batch text tokenized once; history is touched only
     through the ≤40-byte report rows' id column (the anti-join)."""
-    fresh = new_docs.select(id_col, text_col)
-    if store.exists(reports_table):
-        seen = store.read(reports_table).select(id_col)
-        fresh = fresh.join(seen, id_col, "left_anti")
+    fresh = store.unseen(new_docs.select(id_col, text_col), reports_table, id_col)
     rows = repetition_report(fresh, id_col, text_col).localCheckpoint(
         eager=True
     )
@@ -238,21 +235,17 @@ def incremental_compression_ratio(
 ) -> int:
     """Maintain :func:`compression_ratio` scores across intake folds —
     the family's simplest shape, because the ratio is a pure per-doc
-    function of the text: one id-keyed idempotent ``append_new`` per
-    fold (the sink is its own replay watermark), maintained ≡ global
-    by construction, batch text compressed once and history never
-    re-read. Returns the number of newly scored documents."""
-    fresh = new_docs.select(id_col, text_col)
-    if store.exists(table):
-        fresh = fresh.join(
-            store.read(table).select(id_col), id_col, "left_anti"
-        )
+    function of the text: the unseen ids (``store.unseen``) scored and
+    appended once per fold (the sink is its own replay watermark),
+    maintained ≡ global by construction, batch text compressed once
+    and history never re-read. Returns the number of newly scored documents."""
+    fresh = store.unseen(new_docs.select(id_col, text_col), table, id_col)
     scored = compression_ratio(fresh, id_col, text_col, level).localCheckpoint(
         eager=True
     )
     n = scored.count()
     if n:
-        store.append_new(scored, table, key=id_col)
+        store.append(scored, table)
     return int(n)
 
 
@@ -310,11 +303,7 @@ def incremental_pii_flags(
 
     Cost per fold: batch text regex-scanned once; history is touched
     only through the flag rows' id column."""
-    fresh = new_docs.select(id_col, text_col)
-    if store.exists(flags_table):
-        fresh = fresh.join(
-            store.read(flags_table).select(id_col), id_col, "left_anti"
-        )
+    fresh = store.unseen(new_docs.select(id_col, text_col), flags_table, id_col)
     rows = pii_report(fresh, id_col, text_col).localCheckpoint(eager=True)
     n_new = rows.count()
     if n_new:

@@ -314,11 +314,9 @@ def incremental_term_postings(
             f"{id_col} rows (e.g. {dup[0]['_id']!r}); dedupe the batch "
             "before folding"
         )
-    fresh = new_docs.select(F.col(id_col).alias("_id")).distinct()
-    if store.exists(seen_table):
-        fresh = fresh.join(
-            store.read(seen_table).select("_id"), "_id", "left_anti"
-        )
+    fresh = store.unseen(
+        new_docs.select(F.col(id_col).alias("_id")).distinct(), seen_table, "_id"
+    )
     base = (
         new_docs.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_t"))
         .join(fresh, "_id", "left_semi")
@@ -686,12 +684,9 @@ def incremental_positional_postings(
             f"{id_col} rows (e.g. {dup[0]['_id']!r}); dedupe the batch "
             "before folding"
         )
-    fresh = new_docs.select(F.col(id_col).alias("_id")).distinct()
-    if store.exists(seen_table):
-        fresh = fresh.join(
-            store.read(seen_table).select("_id"), "_id", "left_anti"
-        )
-    fresh = fresh.localCheckpoint(eager=True)
+    fresh = store.unseen(
+        new_docs.select(F.col(id_col).alias("_id")).distinct(), seen_table, "_id"
+    ).localCheckpoint(eager=True)
     base = (
         new_docs.select(
             F.col(id_col).alias("_id"),

@@ -331,8 +331,9 @@ def ivf_index_append(
     one batch job — that is `write_version` of new centroids plus one
     full pass, deliberately out of the hot path.)
 
-    Replay-safe: already-indexed ids are dropped by the keyed append,
-    and a batch with nothing new leaves the store untouched.
+    Replay-safe: already-indexed ids are cut up front
+    (``store.unseen``), and a batch with nothing new leaves the store
+    untouched.
     """
     if store.current_version(centroid_table) is not None:
         cents = store.read_version(centroid_table)
@@ -356,19 +357,13 @@ def ivf_index_append(
             )
         cv = store.write_version(cents, centroid_table)
         cents = store.read_version(centroid_table)
-    fresh = new_vectors.select(id_col, vec_col)
-    if store.exists(index_table):
-        fresh = fresh.join(
-            store.read(index_table).select(id_col), id_col, "left_anti"
-        )
+    fresh = store.unseen(new_vectors.select(id_col, vec_col), index_table, id_col)
     assigned = assign_cells(fresh, cents, id_col, vec_col).localCheckpoint(
         eager=True
     )
     n_new = assigned.count()
     if n_new:
-        store.append_new(
-            assigned, index_table, key=id_col, partition_by=["cell_id"]
-        )
+        store.append(assigned, index_table, partition_by=["cell_id"])
     n_cells = assigned.select("cell_id").distinct().count() if n_new else 0
     return IvfAppendResult(
         n_new=n_new, n_cells_touched=n_cells, centroid_version=cv
@@ -1072,11 +1067,11 @@ def incremental_embedding_dedup(
     only through the probed cells — a literal ``cell_id IN (...)``
     filter on the cell-PARTITIONED store, i.e. directory-level pruning
     (the ivf_index_query path) — and the only joins are cell equi-joins
-    with the O(batch) side broadcast under AQE. Commits are id-keyed
-    O(batch) appends into partition directories. ``commit=False``
-    returns the home-cell assignment delta instead of writing it, so a
-    crash-safe caller can order its sink write first (the
-    dedup_stream discipline).
+    with the O(batch) side broadcast under AQE. Commits are O(batch)
+    appends of the unseen ids into partition directories.
+    ``commit=False`` returns the home-cell assignment delta instead of
+    writing it, so a crash-safe caller can order its sink write first
+    (the dedup_stream discipline).
 
     Replay-safe: already-indexed ids are filtered out up front — a
     replayed batch keeps nothing and writes nothing."""
@@ -1098,13 +1093,9 @@ def incremental_embedding_dedup(
             )
         store.write_version(cents, centroid_table)
         cents = store.read_version(centroid_table)
-    fresh = new_vectors.select(id_col, vec_col)
     have_index = store.exists(index_table)
     n_indexed = store.count(index_table) if have_index else 0
-    if have_index:
-        fresh = fresh.join(
-            store.read(index_table).select(id_col), id_col, "left_anti"
-        )
+    fresh = store.unseen(new_vectors.select(id_col, vec_col), index_table, id_col)
     # Pin the fresh slice ONCE: home and probe assignments both derive
     # from it without re-running the index anti-join (the assignments
     # themselves are broadcast HOF projections — free to recompute).
@@ -1174,7 +1165,7 @@ def incremental_embedding_dedup(
         dropped.select(id_col), id_col, "left_anti"
     )
     if commit:
-        store.append_new(home, index_table, key=id_col, partition_by=["cell_id"])
+        store.append(home, index_table, partition_by=["cell_id"])
         return IncrementalEmbeddingDedupResult(
             kept=kept,
             n_new=n_new,
@@ -1663,21 +1654,18 @@ def incremental_semantic_decontamination(
     pure function of (vector, index) and batch-by-batch ≡ global).
 
     Replay-safe with a SINGLE commit: the flags sink doubles as the
-    watermark (keyed ``append_new``) — there is no second state table
-    to get out of step with, so there is NO crash window. Returns the
-    batch's flag rows.
+    watermark (already-flagged ids are cut up front by
+    ``store.unseen``) — there is no second state table to get out of
+    step with, so there is NO crash window. Returns the batch's flag
+    rows.
 
     Scale shape: one broadcast of the benchmark index per fold, one
-    pass over the batch, one O(batch) keyed append. History vectors
+    pass over the batch, one O(batch) append. History vectors
     are never touched."""
     bench = store.read_version(index_table)
-    fresh = new_vectors.select(id_col, vec_col)
-    if store.exists(flags_table):
-        fresh = fresh.join(
-            store.read(flags_table).select(id_col), id_col, "left_anti"
-        )
+    fresh = store.unseen(new_vectors.select(id_col, vec_col), flags_table, id_col)
     flags = semantic_decontamination(
         fresh, bench, id_col, vec_col, tau
     ).localCheckpoint(eager=True)
-    store.append_new(flags, flags_table, key=id_col)
+    store.append(flags, flags_table)
     return flags

@@ -808,10 +808,7 @@ def incremental_source_rollup(
         return source_rollup_result(store, fp_table, lang_table, scalar_table), cur
     # set-union tables FIRST (idempotent)
     for table, cols in ((fp_table, ["source", "fp"]), (lang_table, ["source", "lang"])):
-        batch_pairs = feat.select(*cols).distinct()
-        if store.exists(table):
-            batch_pairs = batch_pairs.join(store.read(table), cols, "left_anti")
-        store.append(batch_pairs.localCheckpoint(eager=True), table)
+        store.append_new(feat.select(*cols).distinct(), table, key=cols)
     # scalar snapshot LAST — sums + watermark in one atomic commit
     delta = feat.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -892,11 +889,7 @@ def incremental_retention(
         F.col(user_col).alias("user_id"),
         F.floor(F.unix_date(F.col(ts_col).cast("date")) / 7).alias("week"),
     ).distinct()
-    if store.exists(activity_table):
-        uw = uw.join(
-            store.read(activity_table), ["user_id", "week"], "left_anti"
-        )
-    store.append(uw.localCheckpoint(eager=True), activity_table)
+    store.append_new(uw, activity_table, key=["user_id", "week"])
     return retention_result(store, activity_table)
 
 
@@ -956,11 +949,7 @@ def incremental_source_overlap(
         .select("source", portable_hash60("g").alias("gh"))
         .distinct()
     )
-    if store.exists(shingle_table):
-        batch = batch.join(
-            store.read(shingle_table), ["source", "gh"], "left_anti"
-        )
-    store.append(batch.localCheckpoint(eager=True), shingle_table)
+    store.append_new(batch, shingle_table, key=["source", "gh"])
     return source_overlap_result(store, shingle_table)
 
 
@@ -1045,9 +1034,7 @@ def incremental_temperature_mixture(
         token_count(text_col).cast("long").alias("n_tokens"),
         portable_hash60(F.col(id_col).cast("string")).alias("h"),
     )
-    if store.exists(stats_table):
-        batch = batch.join(store.read(stats_table), ["doc_id"], "left_anti")
-    store.append(batch.localCheckpoint(eager=True), stats_table)
+    store.append_new(batch, stats_table, key="doc_id")
     return temperature_mixture_result(store, total_budget, fixed, stats_table)
 
 

@@ -11,7 +11,7 @@ Reference shape vs this one:
 - ``WHERE processed = FALSE … LIMIT 5000`` + per-row
   ``UPDATE … SET processed = TRUE`` (etl_pipeline.py:125-132,184-188)
   → an append-only ``staging_markers`` key table: the incremental scan
-  is a left-anti join against it and marking is one append (S5/P8).
+  is ``Store.unseen`` against it and marking is one append (S5/P8).
   Rewriting a 100 TB staging table to flip a boolean would be O(table);
   the marker anti-join is O(batch) writes and the keys join is
   broadcast-able until markers outgrow the batch table many times over;
@@ -108,9 +108,7 @@ def process_staging_to_production(
     Returns the number of staging rows consumed."""
     if not store.exists("staging"):
         return 0
-    staging = store.read("staging")
-    if store.exists("staging_markers"):
-        staging = staging.join(store.read("staging_markers"), "image_id", "left_anti")
+    staging = store.unseen(store.read("staging"), "staging_markers", "image_id")
     batch = (
         staging.orderBy(F.col("study_date").desc_nulls_last(), F.col("image_id"))
         .limit(batch_limit)
@@ -171,13 +169,7 @@ def process_staging_to_production(
         "projection",
         F.col("encounter_date").alias("procedure_date"),
     )
-    if store.exists("procedures_raw"):
-        proc = proc.join(
-            store.read("procedures_raw").select("encounter_id"),
-            "encounter_id",
-            "left_anti",
-        )
-    store.append(proc, "procedures_raw")
+    store.append_new(proc, "procedures_raw", key="encounter_id")
 
     rep = written.select(
         F.expr("uuid()").alias("report_id"),
@@ -186,13 +178,7 @@ def process_staging_to_production(
         "report_text",
         F.lit("en").alias("language"),
     )
-    if store.exists("reports_raw"):
-        rep = rep.join(
-            store.read("reports_raw").select("encounter_id"),
-            "encounter_id",
-            "left_anti",
-        )
-    store.append(rep, "reports_raw")
+    store.append_new(rep, "reports_raw", key="encounter_id")
 
     consumed = batch.select("image_id").withColumn("processed_at", F.current_timestamp())
     store.append(consumed, "staging_markers")

@@ -8,9 +8,9 @@ the reference's per-500-row commit batching (etl_pipeline.py:106-107,
 193-195) has no equivalent here by design: K4 "batched commit" is the
 streaming `foreachBatch` path in streaming/incremental.py.
 
-Append-with-dedup (the ON CONFLICT DO NOTHING analogue, K1/K2) is the
-left-anti-join-then-append pattern; full idempotent rebuilds use
-overwrite mode.
+Append-with-dedup (the ON CONFLICT DO NOTHING analogue, K1/K2) is
+``Store.append_new``: ``Store.unseen`` (a left anti-join against the
+stored keys) then append; full idempotent rebuilds use overwrite mode.
 """
 
 from __future__ import annotations
@@ -34,6 +34,12 @@ class ConcurrentWriteError(RuntimeError):
 
 class Store:
     """A root directory of parquet tables (see the module docstring).
+
+    "Already stored?" is one read, ``unseen(df, table, key)``: the rows
+    of ``df`` whose key is absent from a plain table, with an absent
+    table holding nothing. ``append_new`` is ``append`` of ``unseen``;
+    callers slice with ``unseen`` when they compute on the fresh rows
+    before writing, and call ``append_new`` when they only write.
 
     Fault seam: every public write or delete method — ``overwrite``,
     ``overwrite_partitions``, ``append``, ``append_new``,
@@ -239,26 +245,31 @@ class Store:
         self._write(df, self.path(table), partition_by, mode="append")
         self._log(table, "append")
 
+    def unseen(self, df: DataFrame, table: str, key: str | list[str]) -> DataFrame:
+        """The rows of ``df`` whose ``key`` (one column or a composite)
+        is absent from the plain ``table`` — a left-anti join whose
+        stored side reads only the key columns. A table with no commit
+        holds nothing: ``df`` comes back as it is and no job runs."""
+        if not self.exists(table):
+            return df
+        keys = [key] if isinstance(key, str) else list(key)
+        return df.join(self.read(table).select(*keys), keys, "left_anti")
+
     def append_new(
         self,
         df: DataFrame,
         table: str,
-        key: str,
+        key: str | list[str],
         partition_by: list[str] | None = None,
     ) -> None:
-        """Append only rows whose ``key`` is absent from the stored
-        table — the reference's ``INSERT … ON CONFLICT (key) DO
-        NOTHING`` (reference: etl_pipeline.py:93-98) as a left-anti
-        join. ``df`` must be key-unique already (dropDuplicates
-        upstream); existing-side scan reads only the key column
-        (column pruning keeps this cheap at scale). ``partition_by``
-        lays new files under partition directories (readers with a
-        matching literal filter then prune at the directory level)."""
+        """Append only the :meth:`unseen` rows of ``df`` — the
+        reference's ``INSERT … ON CONFLICT (key) DO NOTHING``
+        (reference: etl_pipeline.py:93-98). ``df`` must be key-unique
+        already (dropDuplicates upstream). ``partition_by`` lays new
+        files under partition directories (readers with a matching
+        literal filter then prune at the directory level)."""
         self._fault("append_new", table)
-        if self.exists(table):
-            existing = self.read(table).select(key)
-            df = df.join(existing, key, "left_anti")
-        self.append(df, table, partition_by=partition_by)
+        self.append(self.unseen(df, table, key), table, partition_by)
 
     def merge_upsert(self, updates: DataFrame, table: str, keys: list[str]) -> None:
         """Keyed merge: rows matching on ``keys`` are replaced by their

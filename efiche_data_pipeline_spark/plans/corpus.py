@@ -5867,17 +5867,9 @@ def q163_incremental_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp_root = tempfile.mkdtemp(prefix="efiche_inccurr_")
     store = Store(spark, tmp_root)
 
-    def fold(batch: DataFrame) -> None:
-        fresh = batch
-        if store.exists("curriculum_stats"):
-            fresh = fresh.join(
-                store.read("curriculum_stats"), ["doc_id"], "left_anti"
-            )
-        store.append(fresh.localCheckpoint(eager=True), "curriculum_stats")
-
     try:
-        fold(stats.filter(F.col("doc_id") <= split))
-        fold(stats.filter(F.col("doc_id") > split))
+        for fold in (F.col("doc_id") <= split, F.col("doc_id") > split):
+            store.append_new(stats.filter(fold), "curriculum_stats", key="doc_id")
         out = _curriculum_from_stats(store.read("curriculum_stats"))
         return _finish_with_store(out, tmp_root)
     except BaseException:

@@ -95,10 +95,9 @@ def run_forget_stream(
     holder's span lengths at the wrong granularity)."""
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        ids = batch.select(id_col).distinct()
-        if store.exists(ledger_table):
-            ids = ids.join(store.read(ledger_table), id_col, "left_anti")
-        ids = ids.localCheckpoint(eager=True)
+        ids = store.unseen(
+            batch.select(id_col).distinct(), ledger_table, id_col
+        ).localCheckpoint(eager=True)
         if ids.count() == 0:
             return
         # zero-commit pre-check: a request set that would empty the

@@ -66,8 +66,8 @@ def run_savings_stream(
                 .agg(F.max("batch_max_id"))
                 .first()[0]
             )
-            unseen_low = ids.filter(F.col(id_col) <= wm).join(
-                store.read("savings_ids"), id_col, "left_anti"
+            unseen_low = store.unseen(
+                ids.filter(F.col(id_col) <= wm), "savings_ids", id_col
             )
             if unseen_low.count() > 0:
                 raise ValueError(

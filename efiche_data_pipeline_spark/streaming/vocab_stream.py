@@ -101,8 +101,8 @@ def run_vocab_stream(
                 .agg(F.max("batch_max_id"))
                 .first()[0]
             )
-            unseen_low = docs.filter(F.col(id_col) <= wm).join(
-                store.read(docs_table).select(id_col), id_col, "left_anti"
+            unseen_low = store.unseen(
+                docs.filter(F.col(id_col) <= wm), docs_table, id_col
             )
             n_unseen = unseen_low.count()
             if n_unseen > 0:

@@ -242,3 +242,52 @@ def test_rereading_unchanged_store_table_launches_no_job(spark, tmp_path):
     store.read("t")
     n, _ = jobs_launched(spark, lambda: store.read("t"))
     assert n == 0
+
+
+# Set-union folds write the unseen tuples through one
+# ``Store.append_new`` with no eager pin in front of it. The budgets
+# are the measured first- and second-fold job counts; an eager
+# ``localCheckpoint`` put back before the append costs one job more
+# per fold (4 and 5).
+def _fold_jobs(spark, fold, first, second):
+    return [jobs_launched(spark, lambda b=b: fold(b))[0] for b in (first, second)]
+
+
+def test_incremental_retention_job_budget(spark, tmp_path):
+    from datetime import datetime as dt
+
+    from efiche_data_pipeline_spark.operators.sketch import incremental_retention
+    from efiche_data_pipeline_spark.pipeline.store import Store
+
+    ev = spark.createDataFrame(
+        [(i, i % 4, dt(2024, 1, 1 + 7 * (i % 3), 12, 0)) for i in range(12)],
+        "event_id long, user_id long, ts timestamp_ntz",
+    )
+    store = Store(spark, str(tmp_path / "s"))
+    jobs = _fold_jobs(
+        spark,
+        lambda b: incremental_retention(b, store),
+        ev.filter("event_id < 6"),
+        ev.filter("event_id >= 6"),
+    )
+    assert jobs == [3, 4]
+
+
+def test_incremental_source_overlap_job_budget(spark, tmp_path):
+    from efiche_data_pipeline_spark.operators.sketch import (
+        incremental_source_overlap,
+    )
+    from efiche_data_pipeline_spark.pipeline.store import Store
+
+    docs = spark.createDataFrame(
+        [(1, "a", "p q r s"), (2, "b", "p q r t"), (3, "a", "u v w x")],
+        "doc_id long, source string, text string",
+    )
+    store = Store(spark, str(tmp_path / "s"))
+    jobs = _fold_jobs(
+        spark,
+        lambda b: incremental_source_overlap(b, store, n=3),
+        docs.filter("doc_id <= 2"),
+        docs.filter("doc_id > 2"),
+    )
+    assert jobs == [3, 4]

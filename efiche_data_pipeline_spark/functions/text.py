@@ -1,6 +1,6 @@
 """Text-analysis column expressions (all JVM-side built-ins — no Python
 UDFs in the hot path). These power the LLM-data-pipeline extensions:
-tokenization, shingling, quality scoring, language ID, fingerprints.
+tokenization, shingling, quality scoring, language ID.
 
 Reference analogue: the comma-separated ``labels`` string and
 ``report_text`` columns (reference: sql/01_schema.sql:112, :92) — text
@@ -99,10 +99,6 @@ def token_count(text: str | Column) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: str | Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def stopword_count(text: str | Column, words: tuple[str, ...]) -> Column:
     """Number of tokens that are in ``words`` (vectorized higher-order
     filter — no UDF). Oracle: ``length(list_filter(split, t -> t IN (...)))``."""
@@ -183,11 +179,3 @@ def quality_score_raw(text: str | Column) -> Column:
     return F.lit(0.5) * (stop.cast("double") / n_tok) + F.lit(0.5) * (
         F.least(n_tok, F.lit(200)).cast("double") / 200.0
     )
-
-
-def bow_fingerprint(text: str | Column) -> Column:
-    """Bag-of-words document fingerprint: md5 of the sorted distinct
-    token set. Detects shuffled/reordered duplicates that exact-hash
-    dedup misses. Oracle:
-    ``md5(array_to_string(list_sort(list_distinct(split)), ' '))``."""
-    return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(text)))))

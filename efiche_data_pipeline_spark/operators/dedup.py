@@ -46,20 +46,17 @@ from ..functions.text import tokens, word_shingles
 # the modulus FROM that sidecar (:func:`_persisted_buckets`) — so
 # changing this constant re-buckets nothing retroactively and cannot
 # desynchronize the prune filter from the stored partition values.
-# Indexes bucketed before the sidecar existed (round 8) were all
-# committed at 64; the first fold after upgrade backfills their
-# sidecar, locking that in.
 GH_BUCKETS = 64
 
 
 def _persisted_buckets(store, table: str) -> int:
     """The hash-bucket modulus a bucketed index was COMMITTED with:
-    the layout sidecar's value when present, else GH_BUCKETS (the only
-    modulus any pre-sidecar index was ever written at). Readers prune
-    and writers extend a bucketed table with THIS value, never the
-    constant directly — a prune filter computed with a different
-    modulus than the stored partition values would silently read the
-    wrong directories instead of failing."""
+    the layout sidecar's value, or GH_BUCKETS for a table whose first
+    commit has not stamped one yet (the fold stamps it before its
+    first write). Readers prune and writers extend a bucketed table
+    with THIS value, never the constant directly — a prune filter
+    computed with a different modulus than the stored partition values
+    would silently read the wrong directories instead of failing."""
     meta = store.read_layout_meta(table) or {}
     b = meta.get("buckets")
     return int(b) if b else GH_BUCKETS
@@ -1022,18 +1019,10 @@ def incremental_novelty(
         )
     batch_min = fresh_sh.groupBy("gh").agg(F.min(id_col).alias("first_doc"))
     cur = store.current_version(index_table)
-    bucketed = cur is None or store.layer_partitioning(index_table) == ["ghp"]
     # Resolve the modulus from the table's layout sidecar, never the
     # constant: prune filters and new partition values must use the
-    # modulus the EXISTING layers were committed with. A pre-sidecar
-    # bucketed index (round 8 — all committed at 64) gets its sidecar
-    # backfilled on this fold, locking the modulus in.
-    buckets = _persisted_buckets(store, index_table) if bucketed else 0
-    if bucketed and cur is not None and store.read_layout_meta(index_table) is None:
-        store.write_layout_meta(
-            index_table,
-            {"bucket_col": "ghp", "hash_col": "gh", "buckets": buckets},
-        )
+    # modulus the EXISTING layers were committed with.
+    buckets = _persisted_buckets(store, index_table)
     if cur is not None:
         # Cut history to the batch's own hashes BEFORE the min-merge
         # groupBy: only batch-present hashes can affect the delta or
@@ -1041,7 +1030,7 @@ def incremental_novelty(
         # it is O(batch distinct shingles)) keeps the exchange O(batch)
         # while the full index may hold 10^11 rows at corpus scale.
         hist_src = store.read_union(index_table)
-        if bucketed and fresh_sh.count() <= 16 * buckets:
+        if fresh_sh.count() <= 16 * buckets:
             # The index is laid out hive-partitioned by the hash
             # prefix ghp = gh mod buckets, so the SCAN itself (not
             # just the exchange) prunes to the batch's own prefixes —
@@ -1132,11 +1121,17 @@ def incremental_novelty(
     # the two appends skip the index delta forever — replay saw
     # n_new == 0 and returned before ever committing the minima
     # (tests/test_incremental_dedup.py crash-injection test).
-    if bucketed:
-        # Bucketed delta: one repartition by prefix (O(delta) — the
-        # improved-minima rows only) so each fold writes at most one
-        # file per touched ghp directory instead of files-per-task-
-        # per-bucket; compact_layers preserves the layout.
+    if cur is None and fresh_sh.count() == 0:
+        # A first fold of docs all shorter than shingle_n has no delta:
+        # committed, it would leave an index with no parquet file,
+        # whose schema no later fold's read could infer. The scores
+        # sink below still watermarks the batch.
+        version = 0
+    else:
+        # One repartition by prefix (O(delta) — the improved-minima
+        # rows only) so each fold writes at most one file per touched
+        # ghp directory instead of files-per-task-per-bucket;
+        # compact_layers preserves the layout.
         delta = merged.withColumn(
             "ghp", F.pmod(F.col("gh"), F.lit(buckets)).cast("int")
         ).repartition("ghp")
@@ -1146,10 +1141,6 @@ def incremental_novelty(
                 {"bucket_col": "ghp", "hash_col": "gh", "buckets": buckets},
             )
         version = store.append_version(delta, index_table, partition_by=["ghp"])
-    else:
-        # legacy unpartitioned index (committed before bucketing):
-        # keep the layer schema/layout it was started with
-        version = store.append_version(merged, index_table)
     store.append_new(scores, scores_table, key=id_col)
     return IncrementalNoveltyResult(
         scores=scores, n_new=n_new, index_version=version
@@ -1284,47 +1275,6 @@ def _ip_of(id_col: Column, buckets: int) -> Column:
     return F.pmod(F.xxhash64(id_col), F.lit(buckets)).cast("int")
 
 
-def build_span_positions_byid(
-    store, positions_table: str = "span_positions"
-) -> int:
-    """Build (or finish building) the _id-bucketed SECONDARY
-    projection of the positional gram index: the same (_id, pos,
-    n_toks, h) rows, hive-partitioned by ip = xxhash64(_id) mod
-    buckets, so the fold's Cut 2 — "fetch the AFFECTED DOCS' current
-    positions" — prunes its scan to the affected ids' prefixes at the
-    directory level instead of scanning the whole index (the one
-    per-fold O(index) scan VERDICT r09 named; the hp = gram-hash
-    layout cannot prune an _id semi-join). Deliberately O(index) —
-    run once per store, off the hot path, like
-    :func:`rebucket_span_positions`; every later fold dual-writes
-    both projections and prunes.
-
-    Completeness marker: the layout SIDECAR is written only after the
-    data overwrite succeeds, and every reader treats a byid table
-    WITHOUT a sidecar as an unfinished build (this function re-runs
-    the overwrite — idempotent, recomputed from the intact primary
-    index). Idempotent: a finished projection returns its committed
-    modulus untouched. Returns the projection's bucket modulus."""
-    byid = _byid_table(positions_table)
-    if store.exists(byid) and store.read_layout_meta(byid) is not None:
-        return _persisted_buckets(store, byid)
-    if not store.exists(positions_table):
-        raise FileNotFoundError(f"{positions_table}: not committed")
-    buckets = GH_BUCKETS
-    pinned = (
-        store.read(positions_table)
-        .select("_id", "pos", "n_toks", "h")
-        .withColumn("ip", _ip_of(F.col("_id"), buckets))
-        .repartition("ip")
-        .localCheckpoint(eager=True)
-    )
-    store.overwrite(pinned, byid, partition_by=["ip"])
-    store.write_layout_meta(
-        byid, {"bucket_col": "ip", "hash_col": "_id", "buckets": buckets}
-    )
-    return buckets
-
-
 def _affected_positions(
     store,
     byid: str,
@@ -1340,7 +1290,7 @@ def _affected_positions(
     uniform ids), the scan PRUNES to those prefixes at the directory
     level — the single-doc re-fold / GDPR spot-check / trickle-intake
     shapes read a sliver of the index. Saturating folds read the full
-    projection, exactly what the pre-r10 primary-index scan read."""
+    projection, the same rows an unpruned primary scan would read."""
     src = store.read(byid)
     if n_affected <= 16 * ib:
         prefixes = [
@@ -1390,9 +1340,9 @@ def incremental_duplicated_spans(
     Cost per fold: batch text is tokenized once (the only text pass
     ever; history text is never rescanned). The replay WATERMARK is
     the _id-keyed ``seen_table`` — one row per document ever folded —
-    so the watermark read is O(docs-seen), not the O(index) distinct
-    probe of the positional index the pre-r09 protocol ran (one row
-    per token position; docs/PLAN_AUDIT.md named this term). The
+    so the watermark read is O(docs-seen), not an O(index) distinct
+    probe of the positional index (one row per token position;
+    docs/PLAN_AUDIT.md named this term). The
     history side is touched through TWO semi-join cuts of the index
     (16-to-32-byte columnar rows), BOTH directory-pruned on small
     folds: Cut 1 to the batch's own gram hashes (which grams' counts
@@ -1407,18 +1357,13 @@ def incremental_duplicated_spans(
     size; on saturating folds every prune degrades to the full scan
     the fold would have read anyway.
 
-    Layout: a NEW index is committed hive-partitioned by
+    Layout: the index is committed hive-partitioned by
     hp = h mod buckets (modulus stamped in the table's layout sidecar
-    and resolved from it ever after — see GH_BUCKETS), which is what
-    :func:`passage_search` point queries prune their candidate scan
-    by, PLUS the byid secondary projection (same rows, ip =
-    xxhash64(_id) mod buckets) that Cut 2 prunes by. A pre-r09 flat
-    index keeps folding on the flat path (the byid projection is
-    maintained regardless — it is layout-independent);
-    :func:`rebucket_span_positions` migrates the primary off the hot
-    path, and a store predating the projection gets it backfilled
-    once (O(index), :func:`build_span_positions_byid`) on the first
-    post-upgrade fold.
+    before the first write and resolved from it ever after — see
+    GH_BUCKETS), which is what :func:`passage_search` point queries
+    prune their candidate scan by, PLUS the byid secondary projection
+    (same rows, ip = xxhash64(_id) mod buckets, its own sidecar) that
+    Cut 2 prunes by. Both are written from the first fold on.
 
     Crash-safety — reports FIRST, byid projection SECOND, primary
     positions THIRD, seen-watermark LAST, each commit idempotent, so
@@ -1454,54 +1399,27 @@ def incremental_duplicated_spans(
     - a partially visible seen append replays the missing suffix of
       the batch through the same idempotent commits.
 
+    On the first fold the same windows hold with an empty history:
+    until the seen table exists no doc is watermarked, so any crash
+    replays the whole batch against whatever positions landed.
+
     The seen-watermark commit must be LAST: committing it earlier
     would open the window where a crash skips the positions commit
     forever — the bug class ADVICE r06 flagged in
-    incremental_novelty. Upgrade path: a store with a pre-r09 index
-    but no seen table gets the seen table backfilled from the index's
-    distinct ids on the first fold (O(index) ONCE, then O(docs-seen)
-    forever)."""
+    incremental_novelty."""
     pos_cols = ["_id", "pos", "n_toks", "h"]
     have_index = store.exists(positions_table)
-    if have_index:
-        buckets = (
-            _persisted_buckets(store, positions_table)
-            if store.partitioning(positions_table) == ["hp"]
-            else 0
-        )
-    else:
-        buckets = _persisted_buckets(store, positions_table)
+    # Both projections resolve their modulus from their own sidecar
+    # (the GH_BUCKETS discipline): a fold-1 crash can leave a sidecar,
+    # or the byid projection, committed ahead of the rest of the fold,
+    # and the replay must extend it at ITS committed modulus.
+    buckets = _persisted_buckets(store, positions_table)
     hp_of = lambda h: F.pmod(F.coalesce(h, F.lit(0)), F.lit(buckets)).cast("int")
     byid = _byid_table(positions_table)
-    # the byid secondary projection's modulus: backfilled once for a
-    # store predating it (O(index), the seen-table upgrade precedent),
-    # resolved from its sidecar ever after; a fresh store dual-writes
-    # from fold 1 — but even there an already-present byid (a fold-1
-    # crash left it without the primary) keeps ITS committed modulus
-    # (the GH_BUCKETS resolve-from-sidecar discipline).
-    if have_index:
-        ib = build_span_positions_byid(store, positions_table)
-    elif store.exists(byid) and store.read_layout_meta(byid) is not None:
-        ib = _persisted_buckets(store, byid)
-    else:
-        ib = GH_BUCKETS
-    fresh = new_docs.select(F.col(id_col).alias("_id")).distinct()
-    if store.exists(seen_table):
-        fresh = store.unseen(fresh, seen_table, "_id")
-    elif have_index:
-        # Upgrade path (index predates the seen table): backfill it
-        # once from the index's distinct ids — the exact watermark the
-        # legacy protocol derived per fold — then never scan for it
-        # again. append_new keeps a crash between this backfill and
-        # the fold's own commits harmless (idempotent, keyed).
-        seen0 = (
-            store.read(positions_table)
-            .select("_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        store.append_new(seen0, seen_table, key="_id")
-        fresh = fresh.join(seen0, "_id", "left_anti")
+    ib = _persisted_buckets(store, byid)
+    fresh = store.unseen(
+        new_docs.select(F.col(id_col).alias("_id")).distinct(), seen_table, "_id"
+    )
     bpos = (
         _gram_positions(
             new_docs.select(F.col(id_col).alias("_id"), text_col).join(
@@ -1520,9 +1438,9 @@ def incremental_duplicated_spans(
     bgrams = bpos.filter("pos >= 0")
     if have_index:
         hist = store.read(positions_table).select(*pos_cols).filter("pos >= 0")
-        # Cut 1 — which counts changed: only batch-present grams. On a
-        # bucketed index the scan itself prunes to the batch's hash
-        # prefixes (<= buckets values, collected from an O(batch)
+        # Cut 1 — which counts changed: only batch-present grams. The
+        # scan itself prunes to the batch's hash prefixes
+        # (<= buckets values, collected from an O(batch)
         # aggregate — the incremental_novelty recipe). The collect is
         # only worth a job when the batch CAN leave prefixes untouched:
         # with uniform hashes, >> buckets·ln(buckets) distinct grams
@@ -1533,7 +1451,7 @@ def incremental_duplicated_spans(
         # of the already-checkpointed batch positions.
         bg = bgrams.select("h").distinct()
         hist_cut1 = hist
-        if buckets and bgrams.count() <= 16 * buckets:
+        if bgrams.count() <= 16 * buckets:
             prefixes = [
                 int(r["p"])
                 for r in bg.select(hp_of(F.col("h")).alias("p"))
@@ -1582,7 +1500,7 @@ def incremental_duplicated_spans(
             store, byid, ib, affected, n_affected, pos_cols
         ).unionByName(bgrams)
         hist_dup = hist
-        if buckets and n_affected <= 16 * ib:
+        if n_affected <= 16 * ib:
             # ag (the affected grams' distinct hashes) is evaluated
             # ONLY to derive the directory-prune prefixes on trickle
             # folds; the dup count below no longer semi-joins on it —
@@ -1635,16 +1553,16 @@ def incremental_duplicated_spans(
         byid,
         partition_by=["ip"],
     )
-    if buckets:
-        out = bpos.withColumn("hp", hp_of(F.col("h"))).repartition("hp")
-        if not have_index:
-            store.write_layout_meta(
-                positions_table,
-                {"bucket_col": "hp", "hash_col": "h", "buckets": buckets},
-            )
-        store.append(out, positions_table, partition_by=["hp"])
-    else:
-        store.append(bpos, positions_table)
+    if not have_index:
+        store.write_layout_meta(
+            positions_table,
+            {"bucket_col": "hp", "hash_col": "h", "buckets": buckets},
+        )
+    store.append(
+        bpos.withColumn("hp", hp_of(F.col("h"))).repartition("hp"),
+        positions_table,
+        partition_by=["hp"],
+    )
     store.append_new(fresh.select("_id"), seen_table, key="_id")
     return n_new
 
@@ -2158,22 +2076,20 @@ def passage_search(
     Scale shape: with a maintained q145 positional index (``store``),
     candidates come from a broadcast semi-join of the passage's own
     k-gram hashes against the index — a scan SLICE of 16-byte hash
-    rows, never the corpus, and on an hp-bucketed index
-    (:func:`incremental_duplicated_spans` commits new indexes that
-    way; :func:`rebucket_span_positions` migrates flat ones) the scan
-    additionally PRUNES at the directory level to the needle's ~dozen
-    hash prefixes — and the exact verify (one `locate`) runs on the
-    candidate documents only; a token-aligned occurrence implies
-    every one of its k-grams is in the index, so the prune is
-    lossless FOR INDEXED DOCUMENTS.
+    rows, never the corpus, PRUNED at the directory level to the
+    needle's ~dozen hash prefixes (the index is hp-bucketed, see
+    :func:`incremental_duplicated_spans`) — and the exact verify (one
+    `locate`) runs on the candidate documents only; a token-aligned
+    occurrence implies every one of its k-grams is in the index, so
+    the prune is lossless FOR INDEXED DOCUMENTS.
 
     Coverage guard — the prune's precondition is that every doc in
     ``docs`` has been folded into the index; for a recall-critical
     takedown query, silently skipping unindexed docs (a batch racing
     an incomplete fold, a side-loaded table) would be a false
     negative. The operator therefore verifies coverage against the
-    fold's seen-docs watermark (or, pre-upgrade, the index's distinct
-    ids) and routes any UNINDEXED doc through the full `locate`
+    fold's seen-docs watermark and routes any UNINDEXED doc (every
+    doc, while no seen table exists) through the full `locate`
     verify alongside the index-pruned candidates — recall never
     depends on index completeness, only speed does. Without an index
     (or a passage shorter than ``k`` tokens), every doc takes the
@@ -2194,36 +2110,27 @@ def passage_search(
     if (
         store is not None
         and store.exists(positions_table)
+        and store.exists(seen_table)
         and needle_hashes.limit(1).count() > 0
     ):
-        pos_scan = store.read(positions_table)
-        if store.partitioning(positions_table) == ["hp"]:
-            buckets = _persisted_buckets(store, positions_table)
-            prefixes = [
-                int(r["p"])
-                for r in needle_hashes.select(
-                    F.pmod(F.col("h"), F.lit(buckets)).alias("p")
-                )
-                .distinct()
-                .collect()
-            ]
-            pos_scan = pos_scan.filter(F.col("hp").isin(prefixes))
+        buckets = _persisted_buckets(store, positions_table)
+        prefixes = [
+            int(r["p"])
+            for r in needle_hashes.select(
+                F.pmod(F.col("h"), F.lit(buckets)).alias("p")
+            )
+            .distinct()
+            .collect()
+        ]
         cand_ids = (
-            pos_scan.filter("pos >= 0")
+            store.read(positions_table)
+            .filter(F.col("hp").isin(prefixes))
+            .filter("pos >= 0")
             .join(F.broadcast(needle_hashes), "h", "left_semi")
             .select(F.col("_id").alias(id_col))
             .distinct()
         )
-        if store.exists(seen_table):
-            covered = store.read(seen_table).select(F.col("_id").alias(id_col))
-        else:
-            # pre-upgrade store: derive coverage the way the legacy
-            # fold watermarked (one O(index) id-column probe)
-            covered = (
-                store.read(positions_table)
-                .select(F.col("_id").alias(id_col))
-                .distinct()
-            )
+        covered = store.read(seen_table).select(F.col("_id").alias(id_col))
         candidates = (
             docs.join(covered, id_col, "left_semi")
             .join(cand_ids, id_col, "left_semi")
@@ -2284,9 +2191,8 @@ def containment_search(
     fold commits.
 
     Scale shape (the q174 read recipe): one gram pass over the probe
-    batch, one index scan PRUNED to the probes' hash prefixes on an
-    hp-bucketed layout (skipped past the coupon-collector saturation
-    bound), postings cut to the probes' gram set with a broadcast
+    batch, one index scan PRUNED to the probes' hash prefixes
+    (skipped past the coupon-collector saturation bound), postings cut to the probes' gram set with a broadcast
     semi-join BEFORE the distinct, frequencies counted on that slice
     only, and the pair exchange carries (probe, doc) hash hits — the
     corpus text is never read."""
@@ -2300,18 +2206,15 @@ def containment_search(
     sizes = ph.groupBy("probe_id").agg(F.count(F.lit(1)).alias("_np"))
     hot = ph.select("h").distinct()
     pos_scan = store.read(positions_table)
-    if store.partitioning(positions_table) == ["hp"]:
-        buckets = _persisted_buckets(store, positions_table)
-        if hot.count() <= 16 * buckets:
-            prefixes = [
-                int(r["p"])
-                for r in hot.select(
-                    F.pmod(F.col("h"), F.lit(buckets)).alias("p")
-                )
-                .distinct()
-                .collect()
-            ]
-            pos_scan = pos_scan.filter(F.col("hp").isin(prefixes))
+    buckets = _persisted_buckets(store, positions_table)
+    if hot.count() <= 16 * buckets:
+        prefixes = [
+            int(r["p"])
+            for r in hot.select(F.pmod(F.col("h"), F.lit(buckets)).alias("p"))
+            .distinct()
+            .collect()
+        ]
+        pos_scan = pos_scan.filter(F.col("hp").isin(prefixes))
     postings = (
         pos_scan.filter("pos >= 0")
         .join(F.broadcast(hot), "h", "left_semi")
@@ -2406,13 +2309,14 @@ def passage_search_many(
     contain any of these N passages" without N separate queries.
 
     Scale shape: ONE gram pass over the needle list (tiny), one
-    index scan PRUNED to the union of all needles' hash prefixes on
-    an hp-bucketed layout, one broadcast join producing candidate
-    (doc, needle) pairs (lossless per needle — a token-aligned hit
-    shares every one of its k-grams), then one `locate` per surviving
-    pair. The same coverage guard as passage_search: docs absent from
-    the fold's seen watermark verify against EVERY needle via the
-    full path, so recall never depends on index completeness.
+    index scan PRUNED to the union of all needles' hash prefixes,
+    one broadcast join producing candidate (doc, needle) pairs
+    (lossless per needle — a token-aligned hit shares every one of
+    its k-grams), then one `locate` per surviving pair. The same
+    coverage guard as passage_search: docs absent from the fold's
+    seen watermark (every doc, while no seen table exists) verify
+    against EVERY needle via the full path, so recall never depends
+    on index completeness.
     Needles shorter than ``k`` tokens are routed to the full path
     too (no gram can prune for them)."""
     needles = passages.select(
@@ -2451,34 +2355,25 @@ def passage_search_many(
     if (
         store is not None
         and store.exists(positions_table)
+        and store.exists(seen_table)
         and ngrams.limit(1).count() > 0
     ):
-        pos_scan = store.read(positions_table)
-        if store.partitioning(positions_table) == ["hp"]:
-            buckets = _persisted_buckets(store, positions_table)
-            prefixes = [
-                int(r["p"])
-                for r in ngrams.select(
-                    F.pmod(F.col("h"), F.lit(buckets)).alias("p")
-                )
-                .distinct()
-                .collect()
-            ]
-            pos_scan = pos_scan.filter(F.col("hp").isin(prefixes))
+        buckets = _persisted_buckets(store, positions_table)
+        prefixes = [
+            int(r["p"])
+            for r in ngrams.select(F.pmod(F.col("h"), F.lit(buckets)).alias("p"))
+            .distinct()
+            .collect()
+        ]
         cand_pairs = (
-            pos_scan.filter("pos >= 0")
+            store.read(positions_table)
+            .filter(F.col("hp").isin(prefixes))
+            .filter("pos >= 0")
             .join(F.broadcast(ngrams), "h")
             .select(F.col("_id").alias(id_col), "needle_id")
             .distinct()
         )
-        if store.exists(seen_table):
-            covered = store.read(seen_table).select(F.col("_id").alias(id_col))
-        else:
-            covered = (
-                store.read(positions_table)
-                .select(F.col("_id").alias(id_col))
-                .distinct()
-            )
+        covered = store.read(seen_table).select(F.col("_id").alias(id_col))
         covered_docs = padded(docs.join(covered, id_col, "left_semi"))
         uncovered_docs = padded(docs.join(covered, id_col, "left_anti"))
         indexed_hits = verify(
@@ -2508,94 +2403,6 @@ def passage_search_many(
         .select(id_col, "needle_id", "_padded"),
         padded_needles,
     )
-
-
-def rebucket_introducer_index(
-    store, index_table: str = "shingle_introducer"
-) -> int:
-    """One-shot migration of a LEGACY flat introducer index to the
-    ghp-bucketed layout :func:`incremental_novelty` prunes by: min-
-    merge the layered union (semantics-preserving — MIN is the
-    table's merge law), add ghp = gh mod GH_BUCKETS, and replace all
-    layers with ONE partitioned layer via ``Store.rewrite_layers``
-    (single atomic commit; old layers time-travel until vacuum).
-    Deliberately O(index) — run once, off the hot path, like an IVF
-    retrain; every later fold auto-detects the new layout and prunes.
-    Idempotent: an already-bucketed index returns its version
-    untouched. Returns the committed version."""
-    cur = store.current_version(index_table)
-    if cur is None:
-        raise FileNotFoundError(f"{index_table}: no committed versions")
-    if store.layer_partitioning(index_table) == ["ghp"]:
-        if store.read_layout_meta(index_table) is None:
-            store.write_layout_meta(
-                index_table,
-                {"bucket_col": "ghp", "hash_col": "gh", "buckets": GH_BUCKETS},
-            )
-        return cur
-    merged = (
-        store.read_union(index_table)
-        .groupBy("gh")
-        .agg(F.min("first_doc").alias("first_doc"))
-        .withColumn("ghp", F.pmod(F.col("gh"), F.lit(GH_BUCKETS)).cast("int"))
-        .repartition("ghp")
-    )
-    store.write_layout_meta(
-        index_table,
-        {"bucket_col": "ghp", "hash_col": "gh", "buckets": GH_BUCKETS},
-    )
-    return store.rewrite_layers(
-        merged, index_table, partition_by=["ghp"], op="rebucket"
-    )
-
-
-def rebucket_span_positions(
-    store, positions_table: str = "span_positions"
-) -> None:
-    """One-shot migration of a LEGACY flat positional gram index
-    (:func:`incremental_duplicated_spans` pre-r09) to the hp-bucketed
-    layout its point-query readers prune by: add hp = h mod
-    GH_BUCKETS (sentinel rows — short docs, h NULL — land in bucket
-    0; their readers never prune by hp), rewrite hive-partitioned,
-    and stamp the modulus in the layout sidecar so every later fold
-    and prune resolves it from the table, not the constant.
-    Deliberately O(index) — run once, off the hot path, like
-    :func:`rebucket_introducer_index`; every later fold auto-detects
-    the layout. Idempotent: an already-bucketed index only gets a
-    missing sidecar backfilled. The rewrite is a plain-table
-    overwrite (pinned via localCheckpoint) — same atomicity class as
-    merge_upsert, so schedule it like any plain-table rewrite. Since
-    r10 this migration also ensures the _id-bucketed byid secondary
-    projection exists (:func:`build_span_positions_byid`) so one
-    migration call moves BOTH read paths — the hp point-query prune
-    and the fold's Cut-2 affected-doc fetch — off the flat layout."""
-    if not store.exists(positions_table):
-        raise FileNotFoundError(f"{positions_table}: not committed")
-    if store.partitioning(positions_table) == ["hp"]:
-        if store.read_layout_meta(positions_table) is None:
-            store.write_layout_meta(
-                positions_table,
-                {"bucket_col": "hp", "hash_col": "h", "buckets": GH_BUCKETS},
-            )
-        build_span_positions_byid(store, positions_table)
-        return
-    pinned = (
-        store.read(positions_table)
-        .withColumn(
-            "hp",
-            F.pmod(F.coalesce(F.col("h"), F.lit(0)), F.lit(GH_BUCKETS)).cast(
-                "int"
-            ),
-        )
-        .repartition("hp")
-        .localCheckpoint(eager=True)
-    )
-    store.overwrite(pinned, positions_table, partition_by=["hp"])
-    store.write_layout_meta(
-        positions_table,
-        {"bucket_col": "hp", "hash_col": "h", "buckets": GH_BUCKETS},
-    )
-    build_span_positions_byid(store, positions_table)
 
 
 def forget_span_documents(

@@ -215,7 +215,7 @@ class Store:
         self._fault("overwrite", table)
         # Spark's static overwrite truncates the directory — carry the
         # layout sidecar across (it describes the layout the caller is
-        # re-creating; layout MIGRATIONS re-stamp it explicitly after).
+        # re-creating).
         meta = self.read_layout_meta(table)
         self._write(df, self.path(table), partition_by)
         if meta is not None:
@@ -826,8 +826,7 @@ class Store:
 
     def layer_partitioning(self, table: str) -> list[str]:
         """Hive partition columns of a LAYERED table ([] if the table
-        is absent, empty, or unpartitioned). Callers use it to pick
-        between the pruned (bucketed) and legacy read paths."""
+        is absent, empty, or unpartitioned)."""
         return self._layout(table) or []
 
     def read_union(self, table: str, version: int | None = None) -> DataFrame:
@@ -1058,15 +1057,13 @@ class Store:
         """Replace ALL layers of a layered table with ``df`` as ONE new
         layer, in a single atomic commit (claim → write → one-layer
         manifest → pointer swap). This is :meth:`compact_layers`'
-        commit step exposed for content-changing rewrites — most
-        importantly LAYOUT MIGRATIONS (rebucketing a legacy flat index
-        into a hive-partitioned one), where the new layer may carry a
-        partitioning (and columns) the old layers didn't. Same
-        single-writer contract as compact_layers: a concurrent
-        append_version racing this rewrite serializes on the claim,
-        but an append whose content was read BEFORE the rewrite began
-        is superseded — run migrations off the hot path. Old layers
-        stay time-travelable until ``vacuum_versions``."""
+        commit step exposed for content-changing rewrites; the new
+        layer may carry a partitioning (and columns) the old layers
+        didn't. Same single-writer contract as compact_layers: a
+        concurrent append_version racing this rewrite serializes on
+        the claim, but an append whose content was read BEFORE the
+        rewrite began is superseded — run rewrites off the hot path.
+        Old layers stay time-travelable until ``vacuum_versions``."""
         self._fault("rewrite_layers", table)
         if self.current_version(table) is None:
             raise FileNotFoundError(f"{table}: no committed versions")

@@ -94,62 +94,21 @@ def run_vocab_stream(
         if store.current_version(vocab_table) is not None and store.exists(
             docs_table
         ):
-            from ..operators.bpe import FORGOTTEN_MARKER
-
             wm = (
                 store.read_union(vocab_table)
                 .agg(F.max("batch_max_id"))
                 .first()[0]
             )
-            unseen_low = store.unseen(
+            n_unseen = store.unseen(
                 docs.filter(F.col(id_col) <= wm), docs_table, id_col
-            )
-            n_unseen = unseen_low.count()
+            ).count()
             if n_unseen > 0:
-                # Upgrade edge (the pre-r08 commit order was vocab
-                # delta FIRST, docs sink second): a checkpoint that
-                # crashed between those two commits replays here with
-                # every id at-or-below the watermark and absent from
-                # the sink — under the NEW order that pattern would
-                # mean a genuine violation, but for the old-crash
-                # batch it is recovery. The two are distinguishable
-                # because ids are unique across the corpus: only the
-                # fold of THIS batch can have stamped this batch's
-                # own max id as a layer's batch_max_id. When (a) the
-                # whole batch is sink-absent, (b) its max id is at or
-                # below the watermark, and (c) that max id IS a layer
-                # watermark (marker rows excluded — forget stamps the
-                # forgotten id on its freq=0 ledger rows), fall
-                # through: the sink append below backfills the docs,
-                # and incremental_vocab's own watermark filter folds
-                # nothing twice. Requires the batch⇆file mapping to
-                # be stable across the upgrade (availableNow + the
-                # fixed one-file micro-batch of streaming/driver.py —
-                # the checkpoint contract); a REGROUPED replay (a
-                # checkpoint whose batches spanned several files)
-                # cannot be told apart from a violation and still
-                # raises.
-                batch_max = docs.agg(F.max(id_col)).first()[0]
-                layer_wms = {
-                    r[0]
-                    for r in store.read_union(vocab_table)
-                    .filter(F.col("word") != FORGOTTEN_MARKER)
-                    .select("batch_max_id")
-                    .distinct()
-                    .collect()
-                }
-                crashed_sink_replay = (
-                    n_unseen == docs.count()
-                    and batch_max <= wm
-                    and batch_max in layer_wms
+                raise ValueError(
+                    f"monotone-{id_col} contract violated: batch "
+                    f"{batch_id} carries never-seen ids at or below "
+                    f"the vocab watermark {wm} — an earlier file "
+                    "carried higher ids. Feed files in id order."
                 )
-                if not crashed_sink_replay:
-                    raise ValueError(
-                        f"monotone-{id_col} contract violated: batch "
-                        f"{batch_id} carries never-seen ids at or below "
-                        f"the vocab watermark {wm} — an earlier file "
-                        "carried higher ids. Feed files in id order."
-                    )
         # Docs sink FIRST (idempotent), vocab delta LAST: the only
         # crash window (between the two) replays with the ids present
         # in the sink and still above the vocab watermark, so the

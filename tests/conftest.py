@@ -141,5 +141,7 @@ def pytest_collection_modifyitems(config, items):
         nodeid = item.nodeid.replace("\\", "/")
         if not nodeid.startswith("tests/"):
             nodeid = "tests/" + nodeid
-        if nodeid in slow_ids:
+        # a listed function puts every one of its parametrizations
+        # in the tier
+        if nodeid.split("[", 1)[0] in slow_ids:
             item.add_marker(pytest.mark.slow)

@@ -15,6 +15,7 @@ operator advertises, beyond the q103 oracle differential:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from efiche_data_pipeline_spark.operators.dedup import (
@@ -519,6 +520,31 @@ def test_novelty_crash_between_index_and_sink_converges(spark, tmp_path):
     assert r2.n_new == 0
 
 
+def test_novelty_shingleless_first_batch_commits_no_index(spark, tmp_path):
+    """A first fold whose docs are all shorter than ``shingle_n`` has no
+    index delta. It must commit no index layer — an empty one holds no
+    parquet file, so every later fold's index read failed to infer a
+    schema — while the scores sink still watermarks the batch."""
+    from efiche_data_pipeline_spark.operators.dedup import incremental_novelty
+
+    short = [(0, "too short"), (1, "also short")]
+    text = " ".join(f"w{t:02d}" for t in range(20))
+    rows = short + [(2, text), (3, text)]
+    store = Store(spark, str(tmp_path / "novshort"))
+    assert incremental_novelty(_docs(spark, short), store).n_new == 2
+    assert store.current_version("shingle_introducer") is None
+    assert incremental_novelty(_docs(spark, short), store).n_new == 0
+    # the next folds start the index, then read it back
+    assert incremental_novelty(_docs(spark, rows[2:3]), store).n_new == 1
+    assert incremental_novelty(_docs(spark, rows[3:]), store).n_new == 1
+    got = {
+        r["doc_id"]: (r["n_shingles"], r["n_introduced"])
+        for r in store.read("novelty_scores").collect()
+    }
+    assert got == _py_first_introducer(rows)
+    assert got[3] == (18, 0)  # the copy introduces nothing
+
+
 def test_novelty_history_exchange_is_o_batch_measured(spark, tmp_path, monkeypatch):
     """The min-merge groupBy over HISTORY must shuffle O(batch), not
     O(index): the operator semi-joins the index down to the batch's own
@@ -854,15 +880,18 @@ def test_incremental_spans_crash_before_positions_converges(spark, tmp_path):
     assert incremental_duplicated_spans(docs, store, k=3, min_docs=2) == 0
 
 
-def test_incremental_spans_crash_before_seen_converges(spark, tmp_path):
-    """The r09 crash window: positions committed, seen watermark not
-    (the window the r09 protocol change OPENED: reports and positions
-    are durable, the watermark is not, so the replay folds the batch
-    again with its grams already in the history scan). The replay
-    re-appends the batch's position rows (multiset index), and the
-    final reports must STILL equal the global one-shot — i.e. every
-    index reader (crossed/dup counts, _span_report) absorbs the
-    duplicated rows."""
+@pytest.mark.parametrize("crash_fold", [1, 2])
+def test_incremental_spans_crash_before_seen_converges(
+    spark, tmp_path, crash_fold
+):
+    """Positions committed, seen watermark not: the replay folds the
+    batch again with its grams already in the history scan, re-appends
+    its position rows (multiset index), and the final reports must
+    STILL equal the global one-shot — every index reader (crossed/dup
+    counts, _span_report) absorbs the duplicated rows. On fold 1 the
+    seen table does not exist yet, so nothing is watermarked: the
+    replay re-folds the whole batch, and the point query verifies
+    every doc in full until the seen table lands."""
     from efiche_data_pipeline_spark.operators.dedup import (
         incremental_duplicated_spans,
         passage_search,
@@ -870,75 +899,49 @@ def test_incremental_spans_crash_before_seen_converges(spark, tmp_path):
 
     docs = _docs(spark, _SPAN_DOCS)
     store = Store(spark, str(tmp_path / "seencrash"))
-    incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
-    )
-    crash_once(
-        store, "append_new", "span_seen_docs", "injected crash before seen commit"
-    )
-    import pytest
-
-    with pytest.raises(RuntimeError, match="injected crash"):
-        incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
-        )
-    # positions landed, watermark did not → batch replays; the index
-    # now holds the batch's rows twice (tolerated multiset)
-    assert {4, 5} <= {
-        r["_id"]
-        for r in store.read("span_positions").select("_id").distinct().collect()
+    fold = lambda b: incremental_duplicated_spans(b, store, k=3, min_docs=2)
+    needle = spark.createDataFrame([("gamma delta epsilon",)], "passage string")
+    hits = lambda: {
+        r["doc_id"]
+        for r in passage_search(
+            docs, needle, "doc_id", "text", k=3, store=store
+        ).collect()
     }
-    n = incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
-    )
-    assert n == 2
-    dup_rows = (
-        store.read("span_positions").filter("_id = 5 and pos >= 0").count()
-    )
-    assert dup_rows > 0 and dup_rows % 2 == 0  # duplicated, not lost
+    batches = {
+        1: docs.filter(F.col("doc_id") <= 3),
+        2: docs.filter(F.col("doc_id") > 3),
+    }
+    probe = {1: 1, 2: 5}[crash_fold]  # a doc of the crashing batch with grams
+    for f, batch in batches.items():
+        if f != crash_fold:
+            fold(batch)
+            continue
+        crash_once(
+            store, "append_new", "span_seen_docs", "injected crash before seen commit"
+        )
+        with pytest.raises(RuntimeError, match="injected crash"):
+            fold(batch)
+        # positions landed, watermark did not → the batch replays
+        batch_ids = {r["doc_id"] for r in batch.collect()}
+        assert batch_ids <= {
+            r["_id"]
+            for r in store.read("span_positions").select("_id").distinct().collect()
+        }
+        assert store.exists("span_seen_docs") == (crash_fold == 2)
+        # the crash window never costs the point query recall
+        assert hits() == {0, 5}
+        assert fold(batch) == len(batch_ids)
+        dup_rows = (
+            store.read("span_positions")
+            .filter(f"_id = {probe} and pos >= 0")
+            .count()
+        )
+        assert dup_rows > 0 and dup_rows % 2 == 0  # duplicated, not lost
     assert _span_reports(store) == _expected_span_reports(docs)
     # duplicated index rows must not distort the point query either
-    hits = passage_search(
-        docs,
-        spark.createDataFrame([("gamma delta epsilon",)], "passage string"),
-        "doc_id",
-        "text",
-        k=3,
-        store=store,
-    ).collect()
-    assert {r["doc_id"] for r in hits} == {0, 5}
+    assert hits() == {0, 5}
     # and a further replay is a clean no-op
-    assert incremental_duplicated_spans(docs, store, k=3, min_docs=2) == 0
-
-
-def test_incremental_spans_legacy_seen_backfill(spark, tmp_path):
-    """Upgrade path: a store whose positional index predates the
-    seen-docs watermark table gets the table backfilled from the
-    index's distinct ids on the first post-upgrade fold — no doc is
-    re-folded, and the fold then converges exactly as before."""
-    import shutil
-
-    from efiche_data_pipeline_spark.operators.dedup import (
-        incremental_duplicated_spans,
-    )
-
-    docs = _docs(spark, _SPAN_DOCS)
-    store = Store(spark, str(tmp_path / "legacyseen"))
-    incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
-    )
-    # simulate a pre-r09 store: drop the watermark table
-    shutil.rmtree(store.path("span_seen_docs"))
-    assert not store.exists("span_seen_docs")
-    n = incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
-    )
-    assert n == 2  # ids <= 3 were NOT re-folded off the backfill
-    assert {
-        r["_id"] for r in store.read("span_seen_docs").collect()
-    } == {0, 1, 2, 3, 4, 5}
-    assert _span_reports(store) == _expected_span_reports(docs)
-    assert incremental_duplicated_spans(docs, store, k=3, min_docs=2) == 0
+    assert fold(docs) == 0
 
 
 def test_incremental_spans_new_index_is_hp_bucketed(spark, tmp_path):
@@ -978,68 +981,6 @@ def test_incremental_spans_new_index_is_hp_bucketed(spark, tmp_path):
         docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
     )
     assert _span_reports(store) == _expected_span_reports(docs)
-
-
-def test_incremental_spans_legacy_flat_index_keeps_working(spark, tmp_path):
-    """A positional index committed before bucketing (flat layout)
-    must keep folding on the flat path — no layout mixing, no prune
-    filter, identical reports — until rebucket_span_positions
-    migrates it."""
-    from efiche_data_pipeline_spark.operators.dedup import (
-        _gram_positions,
-        incremental_duplicated_spans,
-        passage_search,
-        rebucket_span_positions,
-    )
-
-    docs = _docs(spark, _SPAN_DOCS)
-    store = Store(spark, str(tmp_path / "flatspan"))
-    # seed a LEGACY index: flat (_id, pos, n_toks, h), as the pre-r09
-    # operator committed it, with no seen table and no sidecar
-    b1 = docs.filter(F.col("doc_id") <= 3)
-    store.append(
-        _gram_positions(
-            b1.select(F.col("doc_id").alias("_id"), "text"), "_id", "text", 3
-        ).select("_id", "pos", "n_toks", "h"),
-        "span_positions",
-    )
-    # fold batch 1 reports the legacy store never wrote: replaying the
-    # SAME batch ids is a no-op (watermark backfilled off the index)
-    assert incremental_duplicated_spans(b1, store, k=3, min_docs=2) == 0
-    # batch 2 folds on the flat path
-    n = incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
-    )
-    assert n == 2
-    assert store.partitioning("span_positions") == []
-    # NOTE: the legacy seed above never ran a batch-1 report pass, so
-    # only batch-2-affected docs carry reports; the point query still
-    # answers over the full index
-    hits = passage_search(
-        docs,
-        spark.createDataFrame([("gamma delta epsilon",)], "passage string"),
-        "doc_id",
-        "text",
-        k=3,
-        store=store,
-    ).collect()
-    assert {r["doc_id"] for r in hits} == {0, 5}
-    # migration: one-shot rebucket, then folds and point queries prune
-    rebucket_span_positions(store)
-    assert store.partitioning("span_positions") == ["hp"]
-    assert store.read_layout_meta("span_positions")["buckets"] > 0
-    hits2 = passage_search(
-        docs,
-        spark.createDataFrame([("gamma delta epsilon",)], "passage string"),
-        "doc_id",
-        "text",
-        k=3,
-        store=store,
-    ).collect()
-    assert {r["doc_id"] for r in hits2} == {0, 5}
-    # idempotent
-    rebucket_span_positions(store)
-    assert store.partitioning("span_positions") == ["hp"]
 
 
 def test_passage_search_covers_unindexed_docs(spark, tmp_path):
@@ -1130,7 +1071,10 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
 
     store = Store(spark, str(tmp_path / "novbkt"))
     mk = lambda i: (i, " ".join(f"tok{i:02d}{t:02d}" for t in range(20)))
+    meta = {"bucket_col": "ghp", "hash_col": "gh", "buckets": GH_BUCKETS}
     incremental_novelty(_docs(spark, [mk(i) for i in range(4)]), store)
+    # the first fold stamps the modulus; nothing would stamp it later
+    assert store.read_layout_meta("shingle_introducer") == meta
     incremental_novelty(_docs(spark, [mk(i) for i in range(4, 8)]), store)
 
     # layout on disk: every contentful layer carries ghp= directories
@@ -1162,6 +1106,7 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
     )
     store.compact_layers("shingle_introducer")
     assert store.layer_partitioning("shingle_introducer") == ["ghp"]
+    assert store.read_layout_meta("shingle_introducer") == meta
     after = sorted(
         tuple(x)
         for x in store.read_union("shingle_introducer")
@@ -1174,6 +1119,7 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
     keys = spark.createDataFrame([(0,)], "first_doc long")
     store.delete_keys("shingle_introducer", keys, "first_doc")
     assert store.layer_partitioning("shingle_introducer") == ["ghp"]
+    assert store.read_layout_meta("shingle_introducer") == meta
     assert (
         store.read_union("shingle_introducer")
         .filter(F.col("first_doc") == 0)
@@ -1187,49 +1133,6 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
     assert "PartitionFilters: [" in plan2 and "ghp" in plan2.split(
         "PartitionFilters: ["
     )[1].split("]")[0], plan2
-
-
-def test_novelty_legacy_unbucketed_index_keeps_working(spark, tmp_path):
-    """An introducer index committed before bucketing (no ghp layout)
-    must keep folding on the legacy path: no prune filter, no layout
-    mixing (append_version would raise), identical scores."""
-    from efiche_data_pipeline_spark.operators.dedup import incremental_novelty
-
-    store = Store(spark, str(tmp_path / "novleg"))
-    mk = lambda i: (i, " ".join(f"leg{i:02d}{t:02d}" for t in range(20)))
-    # seed a LEGACY layer: (gh, first_doc) unpartitioned, as the
-    # pre-bucketing operator committed it
-    from efiche_data_pipeline_spark.functions.hashing import portable_hash60
-    from efiche_data_pipeline_spark.functions.text import word_shingles
-
-    docs0 = _docs(spark, [mk(i) for i in range(3)])
-    legacy = (
-        docs0.select(
-            F.col("doc_id"),
-            F.explode(word_shingles("text", 3)).alias("g"),
-        )
-        .select("doc_id", portable_hash60(F.col("g")).alias("gh"))
-        .distinct()
-        .groupBy("gh")
-        .agg(F.min("doc_id").alias("first_doc"))
-    )
-    store.append_version(legacy, "shingle_introducer")
-    store.append_new(
-        docs0.select("doc_id")
-        .withColumn("n_shingles", F.lit(18).cast("long"))
-        .withColumn("n_introduced", F.lit(18).cast("long"))
-        .withColumn("introduced_frac", F.lit(1.0)),
-        "novelty_scores",
-        key="doc_id",
-    )
-    assert store.layer_partitioning("shingle_introducer") == []
-
-    # the next fold stays on the legacy layout and scores correctly:
-    # a copy of doc 1's text introduces nothing
-    r = incremental_novelty(_docs(spark, [(10, mk(1)[1])]), store)
-    s = r.scores.collect()[0]
-    assert r.n_new == 1 and s["n_introduced"] == 0
-    assert store.layer_partitioning("shingle_introducer") == []
 
 
 # ---------------------------------------------------------------------------
@@ -1306,61 +1209,6 @@ def test_passage_search_pruned_equals_full_scan(spark, tmp_path):
         for r in passage_search(docs, short, k=6, store=store).collect()
     )
     assert got_short == [1]
-
-
-def test_rebucket_migrates_legacy_index_to_pruned_path(spark, tmp_path):
-    """A legacy flat introducer index rebuckets in one atomic rewrite:
-    layout flips to ghp, the min-merged content is preserved exactly,
-    subsequent folds take the pruned path, and the call is
-    idempotent."""
-    from efiche_data_pipeline_spark.functions.hashing import portable_hash60
-    from efiche_data_pipeline_spark.functions.text import word_shingles
-    from efiche_data_pipeline_spark.operators.dedup import (
-        incremental_novelty,
-        rebucket_introducer_index,
-    )
-
-    store = Store(spark, str(tmp_path / "rebkt"))
-    mk = lambda i: (i, " ".join(f"mig{i:02d}{t:02d}" for t in range(20)))
-    docs0 = _docs(spark, [mk(i) for i in range(4)])
-    legacy = (
-        docs0.select(
-            F.col("doc_id"), F.explode(word_shingles("text", 3)).alias("g")
-        )
-        .select("doc_id", portable_hash60(F.col("g")).alias("gh"))
-        .distinct()
-        .groupBy("gh")
-        .agg(F.min("doc_id").alias("first_doc"))
-    )
-    store.append_version(legacy, "shingle_introducer")
-    store.append_new(
-        docs0.select("doc_id")
-        .withColumn("n_shingles", F.lit(18).cast("long"))
-        .withColumn("n_introduced", F.lit(18).cast("long"))
-        .withColumn("introduced_frac", F.lit(1.0)),
-        "novelty_scores",
-        key="doc_id",
-    )
-    before = sorted(tuple(r) for r in legacy.collect())
-
-    v = rebucket_introducer_index(store)
-    assert store.layer_partitioning("shingle_introducer") == ["ghp"]
-    after = sorted(
-        tuple(r)
-        for r in store.read_union("shingle_introducer")
-        .select("gh", "first_doc")
-        .collect()
-    )
-    assert after == before
-    # idempotent
-    assert rebucket_introducer_index(store) == v
-
-    # the next fold takes the bucketed path: a copy introduces nothing
-    # and the new delta layer is partitioned
-    r = incremental_novelty(_docs(spark, [(10, mk(2)[1])]), store)
-    s = r.scores.collect()[0]
-    assert r.n_new == 1 and s["n_introduced"] == 0
-    assert store.layer_partitioning("shingle_introducer") == ["ghp"]
 
 
 @given(
@@ -1915,18 +1763,25 @@ def test_incremental_spans_byid_projection_and_prune(spark, tmp_path):
 
     docs = _docs(spark, _SPAN_DOCS)
     store = Store(spark, str(tmp_path / "byid"))
+    metas = {
+        "span_positions": {"bucket_col": "hp", "hash_col": "h", "buckets": GH_BUCKETS},
+        "span_positions_byid": {
+            "bucket_col": "ip",
+            "hash_col": "_id",
+            "buckets": GH_BUCKETS,
+        },
+    }
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
     )
+    # the first fold stamps both sidecars; nothing would stamp them later
+    for t, meta in metas.items():
+        assert store.read_layout_meta(t) == meta, t
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
     )
-    meta = store.read_layout_meta("span_positions_byid")
-    assert meta == {
-        "bucket_col": "ip",
-        "hash_col": "_id",
-        "buckets": GH_BUCKETS,
-    }
+    for t, meta in metas.items():
+        assert store.read_layout_meta(t) == meta, t
     assert any(
         d.startswith("ip=")
         for d in os.listdir(store.path("span_positions_byid"))
@@ -2052,49 +1907,6 @@ def test_incremental_spans_crash_between_byid_and_primary(spark, tmp_path):
     assert (
         incremental_duplicated_spans(all_docs, store, k=3, min_docs=2) == 0
     )
-
-
-def test_incremental_spans_byid_backfill_and_incomplete_build(
-    spark, tmp_path
-):
-    """Upgrade path: a store whose primary predates the projection
-    (r09) gets byid backfilled ONCE on the next fold — O(index) once,
-    pruned forever — and a byid directory WITHOUT its sidecar (a
-    crashed backfill) is treated as unfinished and rebuilt."""
-    import os
-    import shutil
-
-    from efiche_data_pipeline_spark.operators.dedup import (
-        build_span_positions_byid,
-        incremental_duplicated_spans,
-    )
-
-    docs = _docs(spark, _SPAN_DOCS)
-    store = Store(spark, str(tmp_path / "byidup"))
-    incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
-    )
-    # simulate an r09 store: drop the projection entirely
-    shutil.rmtree(store.path("span_positions_byid"))
-    n = incremental_duplicated_spans(
-        docs.filter(F.col("doc_id") > 3), store, k=3, min_docs=2
-    )
-    assert n == 2
-    cols = ["_id", "pos", "n_toks", "h"]
-    prim = sorted(map(tuple, store.read("span_positions").select(*cols).collect()))
-    proj = sorted(
-        map(tuple, store.read("span_positions_byid").select(*cols).collect())
-    )
-    assert prim == proj  # backfill covered batch 1, fold added batch 2
-    assert _span_reports(store) == _expected_span_reports(docs)
-    # a crashed backfill (data, no sidecar) is unfinished -> rebuilt
-    os.remove(os.path.join(store.path("span_positions_byid"), "_LAYOUT.json"))
-    build_span_positions_byid(store)
-    assert store.read_layout_meta("span_positions_byid") is not None
-    proj2 = sorted(
-        map(tuple, store.read("span_positions_byid").select(*cols).collect())
-    )
-    assert proj2 == prim
 
 
 def test_forget_span_documents_purges_byid(spark, tmp_path):

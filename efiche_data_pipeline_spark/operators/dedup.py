@@ -1626,7 +1626,7 @@ def forget_documents(
         (pii_table, id_col),
         (introducer_table, "first_doc"),
     ):
-        # plain tables carry a root _SUCCESS; versioned/layered ones
+        # plain tables carry a root _SUCCESS; versioned ones
         # only a _CURRENT pointer — a table is present under either
         if not (store.exists(table) or store.current_version(table) is not None):
             continue

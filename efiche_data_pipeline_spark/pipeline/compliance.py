@@ -12,7 +12,7 @@ itself: one row per (table, column) scanned, with the match count —
 zeros are the proof, non-zeros the work list.
 
 Live vs historical: the sweep reads each table's CURRENT view (plain
-read / layered union / snapshot head). Versioned tables may still
+read / versioned union). Versioned tables may still
 time-travel to pre-forget data until ``vacuum_versions`` runs — the
 ``n_versions`` column reports how many committed versions a table
 retains, so the sheet also shows where a physical purge is still
@@ -67,12 +67,10 @@ def _tables(store) -> list[str]:
 
 
 def _current_view(store, table: str) -> DataFrame | None:
-    if store.is_layered(table):
+    if store.current_version(table) is not None:
         return store.read_union(table)
     if store.exists(table):
         return store.read(table)
-    if store.current_version(table) is not None:
-        return store.read_version(table)
     return None
 
 
@@ -104,8 +102,7 @@ def audit_forgotten(
         df = _current_view(store, table)
         if df is None:
             continue
-        versions = store.versions(table) if hasattr(store, "versions") else []
-        n_versions = max(1, len(versions))
+        n_versions = max(1, len(store.versions(table)))
         cols = [c for c in df.columns if c in id_columns]
         if not cols:
             continue

@@ -11,6 +11,13 @@ streaming `foreachBatch` path in streaming/incremental.py.
 Append-with-dedup (the ON CONFLICT DO NOTHING analogue, K1/K2) is
 ``Store.append_new``: ``Store.unseen`` (a left anti-join against the
 stored keys) then append; full idempotent rebuilds use overwrite mode.
+
+Versioned tables have one format (the Delta Lake add-file log reduced
+to one writer): every commit writes one new ``v<N>`` layer directory
+and a ``_layers_v<N>`` manifest naming the layers version N unions
+over, then swaps the ``_CURRENT`` pointer. ``write_version`` commits a
+one-layer manifest (a full rewrite), ``append_version`` extends the
+current one (an append), and ``read_union`` reads any version.
 """
 
 from __future__ import annotations
@@ -50,8 +57,8 @@ class Store:
     ``self._fault(op, table)`` with its own name as ``op``, before any
     I/O. Methods that delegate (``append_new`` → ``append``,
     ``merge_upsert`` → ``overwrite``, ``compact_layers`` →
-    ``rewrite_layers``, ...) fire again under the callee's name. A
-    layered ``delete_keys``/``delete_where`` also fires
+    ``rewrite_layers`` → ``write_version``, ...) fire again under the
+    callee's name. A versioned ``delete_keys``/``delete_where`` also fires
     ``"<op>:commit"`` after its layer rewrites, just before it claims
     the slot for its manifest + pointer commit. The class method is a
     no-op; crash tests arm one instance by assigning an instance
@@ -175,7 +182,7 @@ class Store:
     # Writers stamp it at bucketed-commit time; readers resolve their
     # prune modulus from it (see operators/dedup.py). `overwrite` and
     # `compact` preserve it across their directory truncation/swap;
-    # layered/versioned tables keep root files intact by construction.
+    # versioned tables keep root files intact by construction.
     def _layout_file(self, table: str) -> str:
         return os.path.join(self.path(table), "_LAYOUT.json")
 
@@ -196,20 +203,6 @@ class Store:
                 return json.load(f)
         except (FileNotFoundError, ValueError):
             return None
-
-    def partitioning(self, table: str) -> list[str]:
-        """Hive partition columns of ``table`` regardless of commit
-        style: layered tables report their per-layer layout, plain and
-        snapshot-versioned tables the ``col=value`` directories under
-        their live data root ([] if absent or unpartitioned)."""
-        if self.is_layered(table):
-            return self.layer_partitioning(table)
-        if self.exists(table):
-            return self._dir_partition_columns(self.path(table))
-        cur = self.current_version(table)
-        if cur is not None:
-            return self._dir_partition_columns(self._vdir(table, cur))
-        return []
 
     def overwrite(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         self._fault("overwrite", table)
@@ -445,20 +438,25 @@ class Store:
         return self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
 
     # ------------------------------------------------------------------
-    # Versioned snapshots — parquet-native time travel.
+    # Versioned tables — parquet-native time travel, one format.
     #
-    # Layout: <table>/v<N>/ holds immutable snapshot data; the single
-    # small file <table>/_CURRENT names the live version. (No leading
-    # underscore on version dirs: Spark's hidden-path convention would
-    # make every read_version/read_union log a spurious "All paths
-    # were ignored" warning for the explicitly-passed directory; a
-    # versioned table's ROOT is never read directly, so hiddenness
-    # buys nothing.) A write lands
-    # fully in its own v<N> directory FIRST, then the pointer swaps via
-    # atomic rename — readers see the old or the new snapshot, never a
-    # partial one, and a crash mid-write leaves the pointer untouched
-    # (the orphaned _v directory is vacuumed later). This is the core
-    # mechanism of table formats (Delta/Iceberg metadata pointers)
+    # Layout: <table>/v<N>/ holds one immutable layer; the small file
+    # <table>/_layers_v<N> (the manifest) lists the layers version N
+    # unions over; <table>/_CURRENT names the live version. A commit
+    # claims slot N, writes layer v<N> fully, writes its manifest, then
+    # swaps the pointer by atomic rename — readers see the old or the
+    # new version, never a partial one, and a crash before the swap
+    # leaves an invisible orphan that vacuum reclaims. A full rewrite
+    # (``write_version``) commits the manifest ``[N]``; an append
+    # (``append_version``) commits the current manifest plus ``N``, so
+    # its write cost is O(batch), not O(table). Rollback and time travel
+    # work the same for both, because each version's manifest pins its
+    # exact layer set. (No leading underscore on layer dirs: Spark's
+    # hidden-path convention would make every read_union log a spurious
+    # "All paths were ignored" warning for the explicitly-passed
+    # directory; a versioned table's ROOT is never read directly, so
+    # hiddenness buys nothing.) This is the core mechanism of table
+    # formats (the Delta add-file log, Iceberg metadata pointers)
     # reduced to the single-writer case the Store already assumes.
     # ------------------------------------------------------------------
 
@@ -467,6 +465,13 @@ class Store:
 
     def _current_file(self, table: str) -> str:
         return os.path.join(self.path(table), "_CURRENT")
+
+    def _manifest_file(self, table: str, version: int) -> str:
+        return os.path.join(self.path(table), f"_layers_v{version}")
+
+    def _layers(self, table: str, version: int) -> list[int]:
+        with open(self._manifest_file(table, version)) as f:
+            return [int(x) for x in f.read().split() if x]
 
     def _claim_file(self, table: str, version: int) -> str:
         return os.path.join(self.path(table), f"_claim_v{version}")
@@ -524,43 +529,27 @@ class Store:
         finally:
             self._release_claim(table, nxt)
 
-    def _publish(
-        self, table: str, version: int, layers: list[int] | None = None
-    ) -> None:
-        """The commit point: write ``version``'s layer manifest
-        (layered commits pass ``layers``), then swap the ``_CURRENT``
-        pointer to ``version`` by atomic rename. Readers see the old or
-        the new version, never a partial one."""
-        if layers is not None:
-            with open(self._manifest_file(table, version), "w") as f:
-                f.write(" ".join(str(x) for x in layers))
-        tmp = self._current_file(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._current_file(table))
-
-    def is_layered(self, table: str) -> bool:
-        """True iff the table's CURRENT version was committed through
-        the layered API (``append_version``/``compact_layers``) — i.e.
-        it carries a layer manifest. Snapshot (``write_version``) and
-        layered commits cannot be mixed on one table; the write/read
-        methods of each family check this and raise a clear error
-        instead of silently reading a delta as if it were a full
-        snapshot."""
-        cur = self.current_version(table)
-        return cur is not None and os.path.exists(
-            self._manifest_file(table, cur)
-        )
+    def _publish(self, table: str, version: int, layers: list[int]) -> None:
+        """The commit point: write ``version``'s layer manifest, then
+        swap the ``_CURRENT`` pointer to ``version``. Both go through an
+        atomic rename, so readers see the old or the new version, never
+        a partial one, and a rollback may re-publish a live manifest."""
+        for path, text in (
+            (self._manifest_file(table, version), " ".join(map(str, layers))),
+            (self._current_file(table), str(version)),
+        ):
+            tmp = path + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(text)
+            os.replace(tmp, path)
 
     def layer_count(self, table: str) -> int:
-        """Number of delta layers the current version unions over
-        (0 for an uncommitted table). The public compaction-trigger
-        accessor — callers (streaming/dedup_stream.py) size
-        ``compact_every`` against this instead of reaching into the
-        manifest internals."""
-        if not self.is_layered(table):
-            return 0
-        return len(self._layers(table, self.current_version(table)))
+        """Number of layers the current version unions over (0 for an
+        uncommitted table). The public compaction-trigger accessor —
+        callers (streaming/dedup_stream.py) size ``compact_every``
+        against this instead of reaching into the manifest internals."""
+        cur = self.current_version(table)
+        return 0 if cur is None else len(self._layers(table, cur))
 
     def current_version(self, table: str) -> int | None:
         try:
@@ -570,8 +559,9 @@ class Store:
             return None
 
     def versions(self, table: str) -> list[int]:
-        """Committed snapshot versions (those at or below the pointer,
-        plus any older ones not yet vacuumed)."""
+        """Committed layer directories not yet vacuumed: every version
+        (at or below the pointer, or forward history a rollback left),
+        plus the layers a delete rewrote."""
         root = self.path(table)
         if not os.path.isdir(root):
             return []
@@ -583,70 +573,45 @@ class Store:
         )
         return found
 
-    def write_version(self, df: DataFrame, table: str) -> int:
-        """Commit ``df`` as the next snapshot of ``table`` and return
-        its version number. The previous snapshot stays readable via
-        ``read_version`` until vacuumed.
+    def write_version(
+        self, df: DataFrame, table: str, partition_by: list[str] | None = None
+    ) -> int:
+        """Commit ``df`` as the whole of ``table``'s next version — one
+        layer, so over a table of many layers it replaces every one —
+        and return its version number. Older versions stay readable via
+        ``read_union(table, version)`` until vacuumed. ``partition_by``
+        lays the layer out hive-partitioned; the layout may differ from
+        the replaced layers'.
 
         The next version is max(committed) + 1, NOT pointer + 1: after
         ``rollback('t', 1)`` with committed v2/v3 still on disk,
         pointer+1 would overwrite committed v2 in place — destroying
         history rollback promises stays readable — and leave a stale
         v3 ranked newest by ``versions()``. Allocating past every
-        committed snapshot means a post-rollback write becomes v4 and
+        committed layer means a post-rollback write becomes v4 and
         the rolled-back-over versions remain intact (orphaned forward
         history; vacuum reclaims it)."""
         self._fault("write_version", table)
-        if self.is_layered(table):
-            raise ValueError(
-                f"{table} was committed with append_version (layered): "
-                "snapshot and layered APIs cannot be mixed on one table "
-                "— use append_version, or compact_layers then vacuum to "
-                "migrate"
-            )
         with self._claimed(table) as nxt:
-            self._write(df, self._vdir(table, nxt))
-            self._publish(table, nxt)
+            self._write(df, self._vdir(table, nxt), partition_by)
+            self._publish(table, nxt, [nxt])
         self._log(table, f"write_version:{nxt}")
         return nxt
 
-    def read_version(self, table: str, version: int | None = None) -> DataFrame:
-        """Read a snapshot — the current one by default, or any
-        still-vacuumed-in historical ``version`` (time travel)."""
-        v = version if version is not None else self.current_version(table)
-        if v is None:
-            raise FileNotFoundError(f"{table}: no versioned snapshots")
-        if (
-            os.path.exists(self._manifest_file(table, v))
-            and len(self._layers(table, v)) > 1
-        ):
-            raise ValueError(
-                f"{table} v{v} is a LAYERED version ({table} was "
-                "committed with append_version); its _v directory holds "
-                "only the delta — use read_union to see the full table"
-            )
-        return read_parquet(self.spark, self._vdir(table, v))
-
     def rollback(self, table: str, version: int) -> None:
-        """Point the table back at an older snapshot (the newer
-        snapshots remain until vacuumed — rollback of the rollback is
-        possible).
-
-        On a layered table the target must carry a layer manifest: a
-        layered delete rewrites each affected layer into a new committed
-        directory, but only the last one becomes a version — the others
-        each hold one cleaned layer, not the table."""
+        """Point the table back at an older version (the newer versions
+        remain until vacuumed — rollback of the rollback is possible).
+        The target must carry a layer manifest: a delete rewrites each
+        affected layer into a new committed directory, but only the last
+        one becomes a version — the others each hold one cleaned layer,
+        not the table."""
         self._fault("rollback", table)
-        if not os.path.exists(os.path.join(self._vdir(table, version), "_SUCCESS")):
-            raise FileNotFoundError(f"{table}: no committed snapshot v{version}")
-        if self.is_layered(table) and not os.path.exists(
-            self._manifest_file(table, version)
-        ):
+        if not os.path.exists(self._manifest_file(table, version)):
             raise FileNotFoundError(
-                f"{table}: v{version} is a rewritten layer, not a committed "
-                "version (it has no layer manifest)"
+                f"{table}: v{version} is not a committed version (it has "
+                "no layer manifest)"
             )
-        self._publish(table, version)
+        self._publish(table, version, self._layers(table, version))
         self._log(table, f"rollback:{version}")
 
     def diff_versions(
@@ -657,11 +622,11 @@ class Store:
         key: str,
         compare_cols: list[str],
     ) -> "DataFrame":
-        """Release audit between two still-vacuumed-in snapshots: one
+        """Release audit between two still-vacuumed-in versions: one
         row per key that was ``added``, ``removed``, or ``changed``
         between ``v_from`` and ``v_to`` (unchanged keys are filtered
         out — at corpus scale the diff is the small output, the
-        snapshots are the big inputs). "Changed" compares an md5
+        versions are the big inputs). "Changed" compares an md5
         fingerprint of ``compare_cols`` (rendered as strings, unit-
         separator-joined), so wide payload columns are never carried
         through the join — each side ships (key, 32-char fp) only.
@@ -670,7 +635,7 @@ class Store:
         and ('web', NULL) can never hash identically the way a
         NULL-skipping concat would.
 
-        Scale shape: two snapshot scans pruned to key+compare columns,
+        Scale shape: two version scans pruned to key+compare columns,
         one full-outer hash join on the key. This is the time-travel
         dividend of the versioned store: the question "what changed in
         this corpus release" needs no extra bookkeeping at write time.
@@ -680,10 +645,10 @@ class Store:
         fp = F.md5(
             F.to_json(F.struct(*[F.col(c) for c in compare_cols]))
         )
-        a = self.read_version(table, v_from).select(
+        a = self.read_union(table, v_from).select(
             F.col(key), fp.alias("_fp_a")
         )
-        b = self.read_version(table, v_to).select(
+        b = self.read_union(table, v_to).select(
             F.col(key), fp.alias("_fp_b")
         )
         return (
@@ -700,15 +665,15 @@ class Store:
         )
 
     def vacuum_versions(self, table: str, keep_last: int = 2) -> list[int]:
-        """Delete all but the newest ``keep_last`` snapshots (never the
+        """Delete all but the newest ``keep_last`` versions (never the
         current one); returns the dropped versions. Also removes
-        uncommitted (crash-orphaned) _v directories.
+        uncommitted (crash-orphaned) v<N> directories.
 
-        Layered tables (:meth:`append_version`): a kept version's
-        MANIFEST pins every layer it unions over, so all layers
-        referenced by a kept manifest are protected too — vacuuming
-        after :meth:`compact_layers` is what actually reclaims old
-        layers (the compacted manifest references only itself).
+        A kept version's MANIFEST pins every layer it unions over, so
+        all layers referenced by a kept manifest are protected too —
+        vacuuming after :meth:`compact_layers` (or any
+        :meth:`write_version`) is what actually reclaims old layers
+        (the new manifest references only its own layer).
 
         Also clears STALE CLAIM markers (a writer that crashed between
         claiming a version slot and committing it leaves the marker
@@ -744,26 +709,6 @@ class Store:
         self._log(table, f"vacuum_versions:keep{keep_last}")
         return sorted(dropped)
 
-    # ------------------------------------------------------------------
-    # Layered (delta) versions: accumulate a large table with O(batch)
-    # writes per commit instead of write_version's O(table) full
-    # rewrite — the Delta-log add-file transaction reduced to the
-    # single-writer case. Each commit writes ONE new layer directory
-    # plus a manifest listing the layer set of that version; the
-    # atomic _CURRENT pointer swap is still the commit point, so
-    # readers never see a half-written layer, rollback/time travel
-    # still work (each version's manifest pins its exact layer set),
-    # and a crash between layer write and pointer swap leaves an
-    # invisible orphan that the next commit simply supersedes.
-    # ------------------------------------------------------------------
-
-    def _manifest_file(self, table: str, version: int) -> str:
-        return os.path.join(self.path(table), f"_layers_v{version}")
-
-    def _layers(self, table: str, version: int) -> list[int]:
-        with open(self._manifest_file(table, version)) as f:
-            return [int(x) for x in f.read().split() if x]
-
     def append_version(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> int:
@@ -776,16 +721,10 @@ class Store:
         filtering on those columns prune whole directories of EVERY
         layer — the bucketed-index layout the incremental dedup folds
         use (partition by a hash prefix, read only the batch's
-        prefixes). All layers of one table must agree on the layout
-        (enforced here); delete/compact rewrites preserve it."""
+        prefixes). All layers of one version must agree on the layout
+        (enforced here); delete/compact rewrites preserve it, and only
+        a :meth:`write_version` may change it."""
         self._fault("append_version", table)
-        if self.current_version(table) is not None and not self.is_layered(table):
-            raise ValueError(
-                f"{table} was committed with write_version (snapshot): "
-                "snapshot and layered APIs cannot be mixed on one table "
-                "— keep using write_version, or start the layered table "
-                "under a different name"
-            )
         with self._claimed(table) as nxt:
             # Re-read the base AFTER the claim: the claim is the
             # serialization point, so the manifest this commit extends
@@ -806,7 +745,7 @@ class Store:
         return nxt
 
     def _layout(self, table: str) -> list[str] | None:
-        """Hive partition columns of a layered table, detected from the
+        """Hive partition columns of a versioned table, detected from the
         first layer of the current manifest that has parquet content:
         ``[]`` for an unpartitioned layout, ``None`` when no layer has
         content (or the table is absent) — an EMPTY delta layer writes
@@ -824,25 +763,14 @@ class Store:
                 return []
         return None
 
-    def layer_partitioning(self, table: str) -> list[str]:
-        """Hive partition columns of a LAYERED table ([] if the table
-        is absent, empty, or unpartitioned)."""
-        return self._layout(table) or []
-
     def read_union(self, table: str, version: int | None = None) -> DataFrame:
-        """Read a layered table at ``version`` (current by default):
+        """Read a versioned table at ``version`` (current by default):
         the union of exactly the layers its manifest pins — orphaned
-        forward history after a rollback is invisible, same contract
-        as :meth:`read_version`."""
+        forward history after a rollback is invisible, and a version
+        committed by :meth:`write_version` is its one layer."""
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"{table}: no committed versions")
-        if not os.path.exists(self._manifest_file(table, v)):
-            raise ValueError(
-                f"{table} v{v} has no layer manifest ({table} was "
-                "committed with write_version): snapshot and layered "
-                "APIs cannot be mixed — use read_version"
-            )
         dirs = [self._vdir(table, x) for x in self._layers(table, v)]
         # Hive-partitioned layers cannot share one multi-root relation
         # (Spark raises CONFLICTING_DIRECTORY_STRUCTURES): read each
@@ -871,6 +799,10 @@ class Store:
             return out
         return read_parquet(self.spark, *dirs)
 
+    # The older name of read_union; perfbench/tracer.py patches Store
+    # methods by name and still lists it.
+    read_version = read_union
+
     def delete_keys(
         self, table: str, keys: DataFrame, key_col: str, pinned: bool = False
     ) -> int | None:
@@ -878,18 +810,17 @@ class Store:
         right-to-be-forgotten primitive a 100 TB corpus must support
         (the reference would run ``DELETE FROM`` and let PostgreSQL
         handle it; a parquet store has to rewrite files). Dispatches on
-        the table's commit style:
+        the table's kind:
 
-        - **layered** (``append_version``): rewrites ONLY the layers
+        - **versioned**: rewrites ONLY the layers
           that actually contain affected keys — located with one
           union scan tagged by ``input_file_name`` — as new layer
           directories, then commits a new version whose manifest swaps
           the rewritten layers in. Unaffected layers (at scale: almost
           all of them) are not read twice, not rewritten, and stay
           byte-identical on disk. Returns the new version, or the
-          current one if no layer was affected (idempotent replay).
-        - **snapshot-versioned** (``write_version``): commits the
-          anti-joined table as the next snapshot.
+          current one if no layer was affected (idempotent replay:
+          nothing is committed).
         - **plain**: in-place overwrite with a localCheckpoint pin,
           preserving any hive-partitioned (``col=value``) layout —
           deleting a user's vectors from the cell-partitioned IVF
@@ -920,9 +851,8 @@ class Store:
     def delete_where(self, table: str, condition) -> int | None:
         """Predicate form of :meth:`delete_keys` — the RETENTION
         primitive (``DELETE WHERE ts < cutoff``). Same mechanics:
-        layered tables rewrite only layers containing matching rows;
-        snapshot tables commit the filtered next version; physical
-        purge completes at vacuum. ``condition`` is a Column
+        versioned tables rewrite only layers containing matching rows;
+        physical purge completes at vacuum. ``condition`` is a Column
         predicate; rows where it is TRUE are deleted."""
         self._fault("delete_where", table)
         locate = lambda df: df.filter(condition)
@@ -942,8 +872,8 @@ class Store:
         ``clean(df)`` returns the rows to keep."""
         from pyspark.sql import functions as F
 
-        if self.is_layered(table):
-            cur = self.current_version(table)
+        cur = self.current_version(table)
+        if cur is not None:
             # Anchor the layer tag to the LAST /v<digits>/ path segment
             # (greedy .* prefix): the first-match form mis-tagged every
             # row when the store ROOT itself contained a v<digits>
@@ -965,11 +895,12 @@ class Store:
                     # Preserve the layer's hive layout through the
                     # rewrite: flattening it would break every reader
                     # whose partition-pruning filter IS the index
-                    # (the bucketed dedup/novelty folds).
+                    # (the bucketed dedup/novelty folds). No pin: the
+                    # cleaned layer reads ``src`` and writes a freshly
+                    # claimed directory, so it overwrites nothing it reads.
                     src = self._vdir(table, layer)
-                    cleaned = clean(read_parquet(self.spark, src))
                     self._write(
-                        cleaned.localCheckpoint(eager=True),
+                        clean(read_parquet(self.spark, src)),
                         self._vdir(table, nxt),
                         self._dir_partition_columns(src),
                     )
@@ -994,8 +925,6 @@ class Store:
                 self._publish(table, commit, new_layers)
             self._log(table, f"{op}:{commit}")
             return commit
-        if self.current_version(table) is not None:  # snapshot-versioned
-            return self.write_version(clean(self.read_version(table)), table)
         # Plain tables: preserve a hive-partitioned layout through the
         # rewrite — "forget this user's embeddings" against the
         # cell-partitioned IVF index must not flatten the directories
@@ -1039,37 +968,23 @@ class Store:
                     )
             target_files = max(1, -(-total // (128 << 20)))
         # Per-partition compaction PRESERVES the directory layout
-        # readers prune by; no pin here: rewrite_layers pins before
-        # overwriting.
+        # readers prune by; no pin here: rewrite_layers pins.
         pcols = self._layout(table) or []
         merged = self._cap_files(self.read_union(table), pcols, target_files)
-        return self.rewrite_layers(
-            merged, table, partition_by=pcols or None, op="compact_layers"
-        )
+        return self.rewrite_layers(merged, table, partition_by=pcols or None)
 
     def rewrite_layers(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
-        op: str = "rewrite_layers",
+        self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> int:
-        """Replace ALL layers of a layered table with ``df`` as ONE new
-        layer, in a single atomic commit (claim → write → one-layer
-        manifest → pointer swap). This is :meth:`compact_layers`'
-        commit step exposed for content-changing rewrites; the new
-        layer may carry a partitioning (and columns) the old layers
-        didn't. Same single-writer contract as compact_layers: a
-        concurrent append_version racing this rewrite serializes on
-        the claim, but an append whose content was read BEFORE the
-        rewrite began is superseded — run rewrites off the hot path.
-        Old layers stay time-travelable until ``vacuum_versions``."""
+        """Pin ``df``, then commit it with :meth:`write_version` as the
+        one layer of ``table``'s next version, replacing every layer —
+        :meth:`compact_layers`' commit step, exposed for content-changing
+        rewrites; the new layer may carry a partitioning (and columns)
+        the old layers didn't. Same single-writer contract as
+        compact_layers: a concurrent append_version racing this rewrite
+        serializes on the claim, but an append whose content was read
+        BEFORE the rewrite began is superseded — run rewrites off the
+        hot path. Old layers stay time-travelable until
+        ``vacuum_versions``."""
         self._fault("rewrite_layers", table)
-        if self.current_version(table) is None:
-            raise FileNotFoundError(f"{table}: no committed versions")
-        pinned = df.localCheckpoint(eager=True)
-        with self._claimed(table) as nxt:
-            self._write(pinned, self._vdir(table, nxt), partition_by)
-            self._publish(table, nxt, [nxt])
-        self._log(table, f"{op}:{nxt}")
-        return nxt
+        return self.write_version(df.localCheckpoint(eager=True), table, partition_by)

@@ -544,12 +544,29 @@ def build_warehouse(
     lineage over this store's own table paths (for example
     ``store.read("encounters")``). Downstream builds plan against
     those source frames from t=0 with no ordering edge on the
-    operational copy-writes (``_need`` returns nothing), so a frame
-    that reads the path its own copy-write overwrites would read it
-    mid-write. Pass frames built from an independent source (a
-    generator, another store, staging files), or write the
-    operational tables first and omit ``operational``."""
+    operational copy-writes, so a frame that reads the path its own
+    copy-write overwrites would read it mid-write. Pass frames built
+    from an independent source (a generator, another store, staging
+    files), or write the operational tables first and omit
+    ``operational``. The contract is checked before any write: a frame
+    whose ``inputFiles()`` (a file listing in this process, no job) lie under
+    the store root raises ``ValueError``."""
+    import os
     from concurrent.futures import Future, ThreadPoolExecutor
+    from urllib.parse import unquote, urlparse
+
+    own = os.path.join(os.path.abspath(store.root), "")
+    for name, df in (operational or {}).items():
+        inside = [
+            f for f in df.inputFiles() if unquote(urlparse(f).path).startswith(own)
+        ]
+        if inside:
+            raise ValueError(
+                f"build_warehouse: operational frame {name!r} reads this "
+                f"store's own files ({inside[0]}); its copy-write would "
+                "overwrite them mid-read — write the operational tables "
+                "first and omit operational"
+            )
 
     done: dict[str, Future] = {}
     # Post-write DataFrame per table: consumers reuse the one frame the
@@ -603,37 +620,33 @@ def build_warehouse(
                 written[name] = df
                 _submit(pool, name, (), lambda d=df: d)
 
-        def _need(*names: str) -> tuple[str, ...]:
-            # Operational tables are pre-published above, so downstream
-            # builds never need their write to finish — only genuinely
-            # computed tables (dims/fact) remain ordering edges.
-            return ()
-
+        # Operational tables are pre-published above, so downstream
+        # builds never wait for their write — only genuinely computed
+        # tables (dims/fact) are ordering edges.
         _submit(
-            pool, "dim_time", _need("encounters"),
+            pool, "dim_time", (),
             lambda: build_dim_time(_get("encounters")),
         )
         _submit(
-            pool, "dim_patient", _need("patients"),
+            pool, "dim_patient", (),
             lambda: build_dim_patient(_get("patients")),
         )
         _submit(
-            pool, "dim_facility", _need("facilities"),
+            pool, "dim_facility", (),
             lambda: build_dim_facility(_get("facilities")),
         )
         _submit(
-            pool, "dim_procedure", _need("procedures"),
+            pool, "dim_procedure", (),
             lambda: build_dim_procedure(_get("procedures")),
         )
         _submit(
-            pool, "dim_diagnosis", _need("diagnosis_codes"),
+            pool, "dim_diagnosis", (),
             lambda: build_dim_diagnosis(_get("diagnosis_codes")),
         )
 
         _submit(
             pool, "fact_encounters",
-            _need("encounters", "procedures", "diagnoses", "reports")
-            + ("dim_patient", "dim_facility", "dim_time"),
+            ("dim_patient", "dim_facility", "dim_time"),
             lambda: build_fact_encounters(
                 _get("encounters"),
                 _get("procedures"),

@@ -961,7 +961,7 @@ def test_incremental_spans_new_index_is_hp_bucketed(spark, tmp_path):
     incremental_duplicated_spans(
         docs.filter(F.col("doc_id") <= 3), store, k=3, min_docs=2
     )
-    assert store.partitioning("span_positions") == ["hp"]
+    assert Store._dir_partition_columns(store.path("span_positions")) == ["hp"]
     assert any(
         d.startswith("hp=")
         for d in os.listdir(store.path("span_positions"))
@@ -1078,7 +1078,7 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
     incremental_novelty(_docs(spark, [mk(i) for i in range(4, 8)]), store)
 
     # layout on disk: every contentful layer carries ghp= directories
-    assert store.layer_partitioning("shingle_introducer") == ["ghp"]
+    assert store._layout("shingle_introducer") == ["ghp"]
     v1_dir = os.path.join(store.path("shingle_introducer"), "v1")
     assert any(d.startswith("ghp=") for d in os.listdir(v1_dir))
 
@@ -1105,7 +1105,7 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
         .collect()
     )
     store.compact_layers("shingle_introducer")
-    assert store.layer_partitioning("shingle_introducer") == ["ghp"]
+    assert store._layout("shingle_introducer") == ["ghp"]
     assert store.read_layout_meta("shingle_introducer") == meta
     after = sorted(
         tuple(x)
@@ -1118,7 +1118,7 @@ def test_novelty_index_bucketed_layout_and_pruned_scan(spark, tmp_path):
     # the GDPR delete's affected-layer rewrite preserves the layout
     keys = spark.createDataFrame([(0,)], "first_doc long")
     store.delete_keys("shingle_introducer", keys, "first_doc")
-    assert store.layer_partitioning("shingle_introducer") == ["ghp"]
+    assert store._layout("shingle_introducer") == ["ghp"]
     assert store.read_layout_meta("shingle_introducer") == meta
     assert (
         store.read_union("shingle_introducer")
@@ -1358,7 +1358,7 @@ def test_forget_span_documents_equals_survivor_one_shot(spark, tmp_path):
         and store.read("passage_flags").filter("doc_id = 1").count() == 0
     )
     # layout preserved through the delete rewrite
-    assert store.partitioning("span_positions") == ["hp"]
+    assert Store._dir_partition_columns(store.path("span_positions")) == ["hp"]
     # blind retry converges to the same state
     forget_span_documents(store, gone, k=3, min_docs=2)
     assert _span_reports(store) == _expected_span_reports(survivors)

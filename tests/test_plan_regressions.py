@@ -163,7 +163,7 @@ def test_passage_search_broadcasts_needle_and_prunes(spark, tmp_path):
     # PartitionFilters entry on the span_positions FileScan is the
     # 100 TB contract — without it every takedown query reads the
     # whole positional index
-    assert store.partitioning("span_positions") == ["hp"]
+    assert Store._dir_partition_columns(store.path("span_positions")) == ["hp"]
     import re
 
     assert re.search(r"PartitionFilters: \[[^\]]*hp#\d+", plan), plan
@@ -193,7 +193,7 @@ def test_containment_search_prunes_and_broadcasts(spark, tmp_path):
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-    assert store.partitioning("span_positions") == ["hp"]
+    assert Store._dir_partition_columns(store.path("span_positions")) == ["hp"]
     assert re.search(r"PartitionFilters: \[[^\]]*hp#\d+", plan), plan
 
 
@@ -291,3 +291,24 @@ def test_incremental_source_overlap_job_budget(spark, tmp_path):
         docs.filter("doc_id > 2"),
     )
     assert jobs == [3, 4]
+
+
+def test_layered_delete_keys_job_budget(spark, tmp_path):
+    """delete_keys on a two-layer table where one layer holds the key:
+    one job pins the keys, the locate scan and the cleaned layer's
+    write take the rest. The rewrite reads the affected layer and
+    writes a freshly claimed directory, so it needs no pin of its own;
+    putting one back costs one job more."""
+    from efiche_data_pipeline_spark.pipeline.store import Store
+
+    store = Store(spark, str(tmp_path / "s"))
+    store.append_version(spark.range(0, 4), "t")
+    store.append_version(spark.range(4, 8), "t")
+    store.read_union("t")
+    keys = spark.createDataFrame([(5,)], "id long")
+    n, v = jobs_launched(spark, lambda: store.delete_keys("t", keys, "id"))
+    assert n == 8
+    assert store._layers("t", v) == [1, 3]
+    assert sorted(r["id"] for r in store.read_union("t").collect()) == [
+        0, 1, 2, 3, 4, 6, 7
+    ]

@@ -82,7 +82,7 @@ def test_index_read_prunes_to_term_prefixes(spark, tmp_path):
     docs = _docs(spark)
     store = Store(spark, str(tmp_path / "bmplan"))
     incremental_term_postings(docs, store)
-    assert store.partitioning("term_postings") == ["tp"]
+    assert Store._dir_partition_columns(store.path("term_postings")) == ["tp"]
     # the operator's actual read path (the helper bm25_index_query
     # checkpoints): the term prefixes reach the FileScan as a
     # PARTITION filter, and the term cut broadcasts
@@ -213,7 +213,7 @@ def test_postings_compaction_preserves_reads(spark, tmp_path):
     incremental_term_postings(docs.filter(F.col("doc_id") > 2), store)
     want = _rows(bm25_index_query(store, _qf(spark), k=4))
     store.compact("term_postings", 4)
-    assert store.partitioning("term_postings") == ["tp"]
+    assert Store._dir_partition_columns(store.path("term_postings")) == ["tp"]
     assert store.read_layout_meta("term_postings") is not None
     assert _rows(bm25_index_query(store, _qf(spark), k=4)) == want
     assert incremental_term_postings(docs, store) == 0
@@ -362,7 +362,7 @@ def test_positional_read_prunes_to_term_prefixes(spark, tmp_path):
     docs = _pdocs(spark)
     store = Store(spark, str(tmp_path / "posplan"))
     incremental_positional_postings(docs, store)
-    assert store.partitioning("positional_postings") == ["tp"]
+    assert Store._dir_partition_columns(store.path("positional_postings")) == ["tp"]
     vocab = spark.createDataFrame([("a",), ("b",)], "term string")
     hits = _pruned_positions(store, "positional_postings", vocab)
     hits.collect()

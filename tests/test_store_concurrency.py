@@ -7,9 +7,9 @@
   the single-writer contract is enforced (the losing concurrent writer
   raises ConcurrentWriteError before touching anything) instead of
   hoped for — a crashed writer's stale claim is cleared by vacuum;
-- the layered (append_version/read_union) and snapshot
-  (write_version/read_version) APIs refuse to mix on one table with a
-  clear error instead of silently reading a delta as a full snapshot.
+- every versioned commit carries a layer manifest, so a full rewrite
+  (write_version) and an append (append_version) mix freely on one
+  table and read_union reads either.
 
 Reference analogue: the reference leans on PostgreSQL transactions for
 all of this (etl_pipeline.py:106-107 commits batches; the DB serializes
@@ -168,29 +168,43 @@ def test_failed_write_releases_claim(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# layered/snapshot API mixing guard
+# one versioned format: rewrites and appends share the manifest protocol
 # ---------------------------------------------------------------------------
-def test_snapshot_then_layered_raises(spark, tmp_path):
+def _ids(df):
+    return sorted((r["id"], r["tag"]) for r in df.collect())
+
+
+def test_write_version_then_append_version_reads_the_union(spark, tmp_path):
     store = Store(spark, str(tmp_path / "mix1"))
-    store.write_version(_df(spark, 2), "t")
-    with pytest.raises(ValueError, match="write_version"):
-        store.append_version(_df(spark, 2), "t")
-    with pytest.raises(ValueError, match="read_version"):
-        store.read_union("t")
+    store.write_version(_df(spark, 2, "a"), "t")
+    store.append_version(_df(spark, 3, "b"), "t")
+    assert _ids(store.read_union("t")) == [
+        (0, "a"), (0, "b"), (1, "a"), (1, "b"), (2, "b")
+    ]
 
 
-def test_layered_then_snapshot_raises(spark, tmp_path):
+def test_write_version_over_layers_replaces_them(spark, tmp_path):
     store = Store(spark, str(tmp_path / "mix2"))
     store.append_version(_df(spark, 2, "a"), "t")
     store.append_version(_df(spark, 2, "b"), "t")
-    with pytest.raises(ValueError, match="append_version"):
-        store.write_version(_df(spark, 2), "t")
-    with pytest.raises(ValueError, match="read_union"):
-        store.read_version("t")
-    # a compacted (single-layer) version reads fine through either API
+    v = store.write_version(_df(spark, 3, "c"), "t")
+    assert store._layers("t", v) == [v]
+    assert _ids(store.read_union("t")) == [(0, "c"), (1, "c"), (2, "c")]
+    # the replaced layers still time-travel
+    assert store.read_union("t", v - 1).count() == 4
+
+
+def test_read_version_is_read_union_at_every_version(spark, tmp_path):
+    store = Store(spark, str(tmp_path / "mix3"))
+    store.write_version(_df(spark, 2, "a"), "t")
+    store.append_version(_df(spark, 3, "b"), "t")
+    store.delete_keys("t", spark.createDataFrame([(1,)], "id long"), "id")
     store.compact_layers("t")
-    assert store.read_version("t").count() == 4
-    assert store.read_union("t").count() == 4
+    store.write_version(_df(spark, 1, "c"), "t")
+    vs = [v for v in store.versions("t") if os.path.exists(store._manifest_file("t", v))]
+    assert len(vs) == 5
+    for v in [None, *vs]:
+        assert _ids(store.read_version("t", v)) == _ids(store.read_union("t", v))
 
 
 def test_layer_count_accessor(spark, tmp_path):
@@ -202,9 +216,12 @@ def test_layer_count_accessor(spark, tmp_path):
     assert store.layer_count("t") == 2
     store.compact_layers("t")
     assert store.layer_count("t") == 1
-    # snapshot tables report 0 layers (they aren't layered at all)
+    # a write_version commit is one layer, also over many
     store.write_version(_df(spark, 1), "snap")
-    assert store.layer_count("snap") == 0
+    assert store.layer_count("snap") == 1
+    store.append_version(_df(spark, 1), "t")
+    store.write_version(_df(spark, 1), "t")
+    assert store.layer_count("t") == 1
 
 
 # ---------------------------------------------------------------------------
@@ -294,6 +311,9 @@ def test_delete_keys_snapshot_and_plain_tables(spark, tmp_path):
         range(10)
     ) - {1, 2}
     assert store.read_version("snap", 1).count() == 10  # time travel intact
+    # a delete that matches no row commits nothing
+    assert store.delete_keys("snap", _keys(spark, 42), "id") == 2
+    assert store.versions("snap") == [1, 2]
 
     store.overwrite(df, "plain")
     assert store.delete_keys("plain", _keys(spark, 0, 9), "id") is None

@@ -1,4 +1,4 @@
-"""Versioned-snapshot (time travel) tests for the Store: snapshot
+"""Versioned-table (time travel) tests for the Store: snapshot
 isolation across writes, historical reads, rollback (and rollback of
 the rollback), vacuum retention, and crash-orphan cleanup."""
 
@@ -21,9 +21,19 @@ def store(spark, tmp_path):
     return Store(spark, str(tmp_path / "vs"))
 
 
+def _current_has_manifest(store, table):
+    """The ``_CURRENT`` target, read from disk, carries ``_layers_v<N>``."""
+    root = store.path(table)
+    with open(os.path.join(root, "_CURRENT")) as f:
+        cur = int(f.read())
+    return os.path.exists(os.path.join(root, f"_layers_v{cur}"))
+
+
 def test_versioned_write_read_and_time_travel(spark, store):
     v1 = store.write_version(_df(spark, 3, "a"), "t")
+    assert _current_has_manifest(store, "t")
     v2 = store.write_version(_df(spark, 5, "b"), "t")
+    assert _current_has_manifest(store, "t")
     assert (v1, v2) == (1, 2)
     assert store.current_version("t") == 2
     assert store.read_version("t").count() == 5  # current
@@ -31,14 +41,37 @@ def test_versioned_write_read_and_time_travel(spark, store):
     assert old.count() == 3 and old.first().tag == "a"  # time travel
 
 
+def test_every_commit_kind_points_current_at_a_manifest(spark, store):
+    """One versioned format: whatever commits a version — a rewrite,
+    an append, a delete, a compaction or a rollback — ``_CURRENT``
+    names a version whose layer manifest exists."""
+    commits = [
+        lambda: store.write_version(_df(spark, 3, "a"), "t"),
+        lambda: store.append_version(_df(spark, 2, "b"), "t"),
+        lambda: store.delete_keys(
+            "t", spark.createDataFrame([(1,)], "id long"), "id"
+        ),
+        lambda: store.delete_where("t", F.col("tag") == "b"),
+        lambda: store.compact_layers("t"),
+        lambda: store.rewrite_layers(_df(spark, 4, "c"), "t"),
+        lambda: store.rollback("t", 1),
+    ]
+    for commit in commits:
+        commit()
+        assert _current_has_manifest(store, "t")
+    assert store.current_version("t") == 1
+
+
 def test_rollback_and_forward(spark, store):
     store.write_version(_df(spark, 3, "a"), "t")
     store.write_version(_df(spark, 5, "b"), "t")
     store.rollback("t", 1)
     assert store.read_version("t").count() == 3
+    assert _current_has_manifest(store, "t")
     # the newer snapshot is still there: roll forward again
     store.rollback("t", 2)
     assert store.read_version("t").count() == 5
+    assert _current_has_manifest(store, "t")
     with pytest.raises(FileNotFoundError):
         store.rollback("t", 99)
 
@@ -146,8 +179,8 @@ def test_layered_rollback_refuses_a_rewritten_layer(spark, tmp_path):
     """A delete rewrites each affected layer into a new committed v<N>
     directory, but only the last one gets a manifest and becomes a
     version. Rolling back onto another one would point the table at a
-    single cleaned layer that read_union and append_version then refuse
-    as a snapshot table — rollback must refuse it and change nothing."""
+    single cleaned layer with no manifest for read_union to follow —
+    rollback must refuse it and change nothing."""
     store = Store(spark, str(tmp_path / "s"))
     df = lambda lo: spark.createDataFrame([(i,) for i in range(lo, lo + 4)], "id long")
     for lo in (0, 4, 8):
@@ -268,7 +301,7 @@ def test_partitioned_layers_commit_guard_and_union(spark, tmp_path):
         [(i, i % 4) for i in range(lo, hi)], "k long, p int"
     )
     store.append_version(rows(0, 8), "t", partition_by=["p"])
-    assert store.layer_partitioning("t") == ["p"]
+    assert store._layout("t") == ["p"]
     # an EMPTY delta (no partition dirs on disk) must not flip the
     # detected layout for the commits after it
     store.append_version(rows(0, 0), "t", partition_by=["p"])
@@ -286,12 +319,12 @@ def test_partitioned_layers_commit_guard_and_union(spark, tmp_path):
     # file, so it PINS the flat layout (its schema is on disk and
     # read_union will scan it)
     store.append_version(rows(0, 0), "w")
-    assert store.layer_partitioning("w") == []
+    assert store._layout("w") == []
     with pytest.raises(ValueError, match="partitioning mismatch"):
         store.append_version(rows(0, 3), "w", partition_by=["p"])
     # an empty PARTITIONED first layer writes no files at all, so the
     # layout stays undetected until the first contentful commit
     store.append_version(rows(0, 0), "x", partition_by=["p"])
-    assert store.layer_partitioning("x") == []
+    assert store._layout("x") is None
     store.append_version(rows(0, 3), "x", partition_by=["p"])
-    assert store.layer_partitioning("x") == ["p"]
+    assert store._layout("x") == ["p"]

@@ -4,6 +4,8 @@ and overwrite idempotency (build twice ≡ build once)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,3 +145,42 @@ def test_build_twice_identical(spark, tmp_path):
     build_warehouse(store)
     fact2 = store.read("fact_encounters").collect()
     assert sorted(map(tuple, fact1)) == sorted(map(tuple, fact2))
+
+
+def test_operational_frame_over_own_store_raises(spark, tmp_path):
+    """build_warehouse's caller contract: an operational frame must not
+    read this store's own tables (its copy-write would overwrite the
+    files mid-read). It raises before the pool starts, and no file
+    under the store changes."""
+    from .test_store_seam import _listing
+
+    store = Store(spark, str(tmp_path / "own"))
+    for name, df in generate_operational(spark, n_patients=40, seed=3).items():
+        store.overwrite(df, name)
+    before = _listing(store.root)
+    with pytest.raises(ValueError, match="'encounters'"):
+        build_warehouse(store, operational={"encounters": store.read("encounters")})
+    assert _listing(store.root) == before
+
+
+def test_operational_contract_check_launches_no_job(spark, tmp_path):
+    """The check lists ``inputFiles()`` without a Spark job: over every
+    ``map_operational`` frame it launches no job. A trailing frame over
+    the store's own files makes the call raise right after the check,
+    so only the check is counted."""
+    from efiche_data_pipeline_spark.pipeline.mapping import map_operational
+
+    from .conftest import SF_DIR, jobs_launched
+
+    store = Store(spark, str(tmp_path / "s"))
+    store.overwrite(spark.range(3), "t")
+    own = store.read("t")
+    ops = map_operational(spark, SF_DIR)
+
+    def build():
+        with pytest.raises(ValueError, match="'zz_own'"):
+            build_warehouse(store, operational={**ops, "zz_own": own})
+
+    n, _ = jobs_launched(spark, build)
+    assert n == 0
+    assert sorted(os.listdir(store.root)) == ["t"]

@@ -14,8 +14,8 @@ zeros are the proof, non-zeros the work list.
 Live vs historical: the sweep reads each table's CURRENT view (plain
 read / versioned union). Versioned tables may still
 time-travel to pre-forget data until ``vacuum_versions`` runs — the
-``n_versions`` column reports how many committed versions a table
-retains, so the sheet also shows where a physical purge is still
+``n_versions`` column reports how many versions of a table a reader
+can still open, so the sheet also shows where a physical purge is still
 pending (the family forgets vacuum by default; 1 retained version =
 nothing older to travel to).
 
@@ -85,9 +85,10 @@ def audit_forgotten(
     ``(table, column, n_live_rows, n_versions)`` — ``n_live_rows`` is
     the match count in the table's current view (0 everywhere = the
     forget is complete at the logical level), ``n_versions`` the
-    retained version count (1 for plain tables and vacuumed versioned
-    ones; >1 means older versions can still time-travel to pre-forget
-    data until ``vacuum_versions``).
+    readable version count (``Store.readable_versions``; 1 for plain
+    tables and versioned ones vacuumed to ``keep_last=1``; >1 means
+    older versions can still time-travel to pre-forget data until
+    ``vacuum_versions``).
 
     ``batch_max_id`` matches are reported but EXPECTED for count-table
     estates: the freq/cnt=0 ``(forgotten)`` marker rows deliberately
@@ -102,7 +103,7 @@ def audit_forgotten(
         df = _current_view(store, table)
         if df is None:
             continue
-        n_versions = max(1, len(store.versions(table)))
+        n_versions = max(1, len(store.readable_versions(table)))
         cols = [c for c in df.columns if c in id_columns]
         if not cols:
             continue

@@ -573,6 +573,15 @@ class Store:
         )
         return found
 
+    def readable_versions(self, table: str) -> list[int]:
+        """The versions ``read_union(table, v)`` can open: committed
+        versions whose manifest is still on disk. After
+        :meth:`vacuum_versions` these are exactly the kept ones."""
+        return [
+            v for v in self.versions(table)
+            if os.path.exists(self._manifest_file(table, v))
+        ]
+
     def write_version(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> int:
@@ -673,7 +682,10 @@ class Store:
         all layers referenced by a kept manifest are protected too —
         vacuuming after :meth:`compact_layers` (or any
         :meth:`write_version`) is what actually reclaims old layers
-        (the new manifest references only its own layer).
+        (the new manifest references only its own layer). A layer kept
+        only for that reason loses its own manifest: its version can no
+        longer be read, so :meth:`readable_versions` lists exactly the
+        kept versions.
 
         Also clears STALE CLAIM markers (a writer that crashed between
         claiming a version slot and committing it leaves the marker
@@ -685,8 +697,9 @@ class Store:
         self._fault("vacuum_versions", table)
         cur = self.current_version(table)
         committed = self.versions(table)
-        keep = set(committed[-keep_last:]) | ({cur} if cur is not None else set())
-        for v in list(keep):
+        kept = set(committed[-keep_last:]) | ({cur} if cur is not None else set())
+        keep = set(kept)
+        for v in kept:
             if os.path.exists(self._manifest_file(table, v)):
                 keep |= set(self._layers(table, v))
         dropped = []
@@ -700,12 +713,15 @@ class Store:
                 continue
             v = int(d[1:])
             committed_dir = os.path.exists(os.path.join(root, d, "_SUCCESS"))
+            manifest = self._manifest_file(table, v)
             if v not in keep or not committed_dir:
                 shutil.rmtree(os.path.join(root, d))
-                if os.path.exists(self._manifest_file(table, v)):
-                    os.remove(self._manifest_file(table, v))
+                if os.path.exists(manifest):
+                    os.remove(manifest)
                 if committed_dir:
                     dropped.append(v)
+            elif v not in kept and os.path.exists(manifest):
+                os.remove(manifest)
         self._log(table, f"vacuum_versions:keep{keep_last}")
         return sorted(dropped)
 

@@ -51,6 +51,9 @@ brief requires, designed Spark-first.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -69,6 +72,7 @@ from ..operators.quality import (
 )
 from ..operators.dedup import oracle_simhash_sql
 from ..operators.similarity import brute_force_topk, ivf_topk
+from ..pipeline.store import Store
 from ..sources.catalog import load_table
 
 
@@ -1513,6 +1517,52 @@ ORACLES["q102_dataset_card_sketch"] = _card_sketch_oracle()
 
 
 # ---------------------------------------------------------------------------
+# The incremental queries (q103 on) replay the pipeline's daily batches:
+# each splits its input into two or three key ranges and folds them in
+# order through a Store that lives for one call.
+# ---------------------------------------------------------------------------
+def _require(cond: bool, msg: str) -> None:
+    """Contract check for the incremental queries. A plain
+    ``assert`` vanishes under ``python -O`` — these contracts (version
+    monotonicity, frozen centroids) ARE the operators' correctness
+    story, so they must fail loudly in every mode."""
+    if not cond:
+        raise RuntimeError(msg)
+
+
+def _on_scratch_store(
+    body: Callable[[SparkSession, str, Store], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Turn ``body(spark, sf_dir, store)`` into the registered
+    ``(spark, sf_dir)`` query, run against a Store in a fresh temp
+    directory that is deleted on every exit path. The body's result
+    plan lazily reads store parquet (history index, labels, cells), so
+    the result is pinned (eager localCheckpoint) BEFORE the directory
+    goes away."""
+
+    @functools.wraps(body)
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        import shutil
+        from tempfile import mkdtemp
+
+        root = mkdtemp(prefix=f"efiche_{body.__name__}_")
+        try:
+            return body(spark, sf_dir, Store(spark, root)).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    return query
+
+
+def _cuts(df: DataFrame, key: str, parts: int = 2) -> list[int]:
+    """The ``parts - 1`` integer cut points that split ``df``'s
+    ``[min(key), max(key)]`` range into ``parts`` batches; batch ``i``
+    holds the keys in ``(cut[i-1], cut[i]]``. One job."""
+    lo, hi = (int(v) for v in df.agg(F.min(key), F.max(key)).first())
+    return [lo + (hi - lo) * i // parts for i in range(1, parts)]
+
+
+# ---------------------------------------------------------------------------
 # Q103 — INCREMENTAL near-dup dedup against a persisted signature
 # index (operators/dedup.py:incremental_minhash_dedup): the fixture
 # corpus is split by doc-id midpoint into two "daily" batches, each
@@ -1528,65 +1578,31 @@ ORACLES["q102_dataset_card_sketch"] = _card_sketch_oracle()
 _INC_DEDUP_SIM = 0.5
 
 
-def _require(cond: bool, msg: str) -> None:
-    """Contract check for the incremental query wrappers. A plain
-    ``assert`` vanishes under ``python -O`` — these contracts (version
-    monotonicity, frozen centroids) ARE the operators' correctness
-    story, so they must fail loudly in every mode."""
-    if not cond:
-        raise RuntimeError(msg)
-
-
-def _finish_with_store(result: DataFrame, tmp_root: str) -> DataFrame:
-    """Materialize an incremental wrapper's result, then delete its
-    throwaway store directory. The result plan lazily reads store
-    parquet (history index / labels / cells), so it must be pinned
-    (localCheckpoint) BEFORE the directory goes away; without the
-    cleanup every bench rep of q103-q109 leaked a tempfile.mkdtemp
-    tree (round-5 advice)."""
-    import shutil
-
-    out = result.localCheckpoint(eager=True)
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    return out
-
-
-def q103_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q103_incremental_minhash_dedup(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import incremental_minhash_dedup
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incdedup_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_minhash_dedup(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        r2 = incremental_minhash_dedup(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        _require(r2.index_version > r1.index_version, "index version must grow")
-        return _finish_with_store(
-            r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
-            .unionByName(
-                r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch"))
-            ),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    r1 = incremental_minhash_dedup(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    r2 = incremental_minhash_dedup(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    _require(r2.index_version > r1.index_version, "index version must grow")
+    return (
+        r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
+        .unionByName(r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch")))
+    )
 
 
 def _inc_dedup_oracle() -> str:
@@ -1623,39 +1639,24 @@ ORACLES["q103_incremental_minhash_dedup"] = _inc_dedup_oracle()
 # so the oracle IS q30's oracle, replayed verbatim.  The frozen-
 # centroid contract is asserted in-line.
 # ---------------------------------------------------------------------------
-def q104_incremental_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q104_incremental_ivf_topk(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.similarity import ivf_index_append, ivf_index_query
-    from ..pipeline.store import Store
 
     emb = load_table(spark, sf_dir, "embeddings")
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_ivf_")
-    store = Store(spark, tmp_root)
+    [split] = _cuts(emb, "vec_id")
     pinned = emb.filter(F.col("vec_id") < 16).select(
         (F.col("vec_id") + 1).alias("cell_id"), "embedding"
     )
-    try:
-        r1 = ivf_index_append(
-            emb.filter(F.col("vec_id") <= split), store, centroids=pinned
-        )
-        r2 = ivf_index_append(emb.filter(F.col("vec_id") > split), store)
-        _require(
-            r2.centroid_version == r1.centroid_version,
-            "centroids must stay frozen",
-        )
-        return _finish_with_store(
-            ivf_index_query(
-                store, emb.filter(F.col("vec_id") < 10), k=5, nprobe=8
-            ),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    r1 = ivf_index_append(emb.filter(F.col("vec_id") <= split), store, centroids=pinned)
+    r2 = ivf_index_append(emb.filter(F.col("vec_id") > split), store)
+    _require(
+        r2.centroid_version == r1.centroid_version,
+        "centroids must stay frozen",
+    )
+    return ivf_index_query(store, emb.filter(F.col("vec_id") < 10), k=5, nprobe=8)
 
 
 def _ivf_inc_oracle() -> str:
@@ -1681,16 +1682,14 @@ ORACLES["q104_incremental_ivf_topk"] = _ivf_inc_oracle()
 # sketch — and the hash gate proves the maintained state never
 # drifted from the from-scratch computation.
 # ---------------------------------------------------------------------------
-def q105_incremental_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q105_incremental_weighted_sample(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.ranking import incremental_weighted_sample
-    from ..pipeline.store import Store
 
     o = load_table(spark, sf_dir, "orders")
-    lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
+    [split] = _cuts(o, "o_orderkey")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     u = (portable_hash60(F.col("o_orderkey").cast("string")) + F.lit(1)) / F.lit(
         float(2**60)
@@ -1698,54 +1697,38 @@ def q105_incremental_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFr
     rows = o.select(
         "o_orderkey", cents.alias("weight_cents"), (-F.log(u) / cents).alias("_k")
     )
-    tmp_root = tempfile.mkdtemp(prefix="efiche_wsample_")
-    store = Store(spark, tmp_root)
-    try:
-        _, v1 = incremental_weighted_sample(
-            rows.filter(F.col("o_orderkey") <= split), store, _WES_N, "o_orderkey", "_k"
-        )
-        sample, v2 = incremental_weighted_sample(
-            rows.filter(F.col("o_orderkey") > split), store, _WES_N, "o_orderkey", "_k"
-        )
-        _require(v2 > v1, "sample state version must grow")
-        return _finish_with_store(
-            sample.select("o_orderkey", "weight_cents"), tmp_root
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    _, v1 = incremental_weighted_sample(
+        rows.filter(F.col("o_orderkey") <= split), store, _WES_N, "o_orderkey", "_k"
+    )
+    sample, v2 = incremental_weighted_sample(
+        rows.filter(F.col("o_orderkey") > split), store, _WES_N, "o_orderkey", "_k"
+    )
+    _require(v2 > v1, "sample state version must grow")
+    return sample.select("o_orderkey", "weight_cents")
 
 
 def _q105_oracle() -> str:
     return ORACLES["q99_weighted_exact_sample"]
 
 
-def q106_incremental_kmv_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q106_incremental_kmv_customers(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.sketch import incremental_kmv
-    from ..pipeline.store import Store
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", F.col("o_custkey").cast("string").alias("ck")
     )
-    lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_kmvinc_")
-    store = Store(spark, tmp_root)
-    try:
-        _, v1 = incremental_kmv(
-            o.filter(F.col("o_orderkey") <= split), store, ["o_orderpriority"], "ck"
-        )
-        est, v2 = incremental_kmv(
-            o.filter(F.col("o_orderkey") > split), store, ["o_orderpriority"], "ck"
-        )
-        _require(v2 > v1, "sketch state version must grow")
-        return _finish_with_store(est, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(o, "o_orderkey")
+    _, v1 = incremental_kmv(
+        o.filter(F.col("o_orderkey") <= split), store, ["o_orderpriority"], "ck"
+    )
+    est, v2 = incremental_kmv(
+        o.filter(F.col("o_orderkey") > split), store, ["o_orderpriority"], "ck"
+    )
+    _require(v2 > v1, "sketch state version must grow")
+    return est
 
 
 def _q106_oracle() -> str:
@@ -1783,8 +1766,7 @@ _DRIFT_NBUCKETS = 10
 
 def q107_orders_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
+    [split] = _cuts(o, "o_orderkey")
     side = F.when(F.col("o_orderkey") <= split, "ref").otherwise("cur")
     mm = o.agg(
         F.min("o_totalprice").alias("_lo"), F.max("o_totalprice").alias("_hi")
@@ -1888,33 +1870,22 @@ GROUP BY column_name
 # min-id-per-fingerprint rule (q40) over the whole corpus — which is
 # exactly what the oracle computes.
 # ---------------------------------------------------------------------------
-def q108_incremental_binary_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q108_incremental_binary_dedup(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.multimodal import incremental_binary_dedup, synthesize_content
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents")
     media = synthesize_content(docs, "doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_bindedup_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_binary_dedup(media.filter(F.col("doc_id") <= split), store)
-        r2 = incremental_binary_dedup(media.filter(F.col("doc_id") > split), store)
-        _require(r2.index_version > r1.index_version, "index version must grow")
-        return _finish_with_store(
-            r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
-            .unionByName(
-                r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch"))
-            ),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    r1 = incremental_binary_dedup(media.filter(F.col("doc_id") <= split), store)
+    r2 = incremental_binary_dedup(media.filter(F.col("doc_id") > split), store)
+    _require(r2.index_version > r1.index_version, "index version must grow")
+    return (
+        r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
+        .unionByName(r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch")))
+    )
 
 
 def _q108_oracle() -> str:
@@ -1945,35 +1916,27 @@ ORACLES["q108_incremental_binary_dedup"] = _q108_oracle()
 # the MERGE case: a batch-2 doc similar to two separate batch-1
 # components relabels both to one.
 # ---------------------------------------------------------------------------
-def q109_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q109_incremental_components(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import incremental_neardup_components
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inccomp_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_neardup_components(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        r2 = incremental_neardup_components(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        return _finish_with_store(r2.labels, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    incremental_neardup_components(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    r2 = incremental_neardup_components(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    return r2.labels
 
 
 def _inc_components_oracle() -> str:
@@ -2028,51 +1991,38 @@ _EMB_DEDUP_TAU = 0.35
 _EMB_DEDUP_NPROBE = 4
 
 
+@_on_scratch_store
 def q110_incremental_embedding_dedup(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.similarity import incremental_embedding_dedup
-    from ..pipeline.store import Store
 
     emb = load_table(spark, sf_dir, "embeddings")
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    split = (int(lo) + int(hi)) // 2
+    [split] = _cuts(emb, "vec_id")
     pinned = emb.filter(F.col("vec_id") < 16).select(
         (F.col("vec_id") + 1).alias("cell_id"), "embedding"
     )
-    tmp_root = tempfile.mkdtemp(prefix="efiche_embdedup_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_embedding_dedup(
-            emb.filter(F.col("vec_id") <= split),
-            store,
-            centroids=pinned,
-            tau=_EMB_DEDUP_TAU,
-            nprobe=_EMB_DEDUP_NPROBE,
-        )
-        r2 = incremental_embedding_dedup(
-            emb.filter(F.col("vec_id") > split),
-            store,
-            tau=_EMB_DEDUP_TAU,
-            nprobe=_EMB_DEDUP_NPROBE,
-        )
-        _require(
-            r2.n_indexed_total == r1.n_indexed_total + r2.n_new,
-            "index must grow by exactly the fresh batch",
-        )
-        return _finish_with_store(
-            r1.kept.select("vec_id", F.lit(1).cast("int").alias("batch"))
-            .unionByName(
-                r2.kept.select("vec_id", F.lit(2).cast("int").alias("batch"))
-            ),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    r1 = incremental_embedding_dedup(
+        emb.filter(F.col("vec_id") <= split),
+        store,
+        centroids=pinned,
+        tau=_EMB_DEDUP_TAU,
+        nprobe=_EMB_DEDUP_NPROBE,
+    )
+    r2 = incremental_embedding_dedup(
+        emb.filter(F.col("vec_id") > split),
+        store,
+        tau=_EMB_DEDUP_TAU,
+        nprobe=_EMB_DEDUP_NPROBE,
+    )
+    _require(
+        r2.n_indexed_total == r1.n_indexed_total + r2.n_new,
+        "index must grow by exactly the fresh batch",
+    )
+    return (
+        r1.kept.select("vec_id", F.lit(1).cast("int").alias("batch"))
+        .unionByName(r2.kept.select("vec_id", F.lit(2).cast("int").alias("batch")))
+    )
 
 
 ORACLES["q110_incremental_embedding_dedup"] = f"""
@@ -2221,8 +2171,7 @@ def q113_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import assign_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    split = (int(lo) + int(hi)) // 2
+    [split] = _cuts(emb, "vec_id")
     pinned = emb.filter(F.col("vec_id") < 16).select(
         (F.col("vec_id") + 1).alias("cell_id"), "embedding"
     )
@@ -2304,32 +2253,24 @@ GROUP BY column_name
 # verbatim.  The state read per fold is one scalar row + 3·k hashes;
 # history text is never rescanned.
 # ---------------------------------------------------------------------------
-def q114_incremental_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q114_incremental_dataset_card(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.sketch import incremental_dataset_card
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "lang"
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inccard_")
-    store = Store(spark, tmp_root)
-    try:
-        _, v1 = incremental_dataset_card(
-            docs.filter(F.col("doc_id") <= split), store, k=_PROFILE_KMV_K
-        )
-        card, v2 = incremental_dataset_card(
-            docs.filter(F.col("doc_id") > split), store, k=_PROFILE_KMV_K
-        )
-        _require(v2 > v1, "card state version must grow")
-        return _finish_with_store(card, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    _, v1 = incremental_dataset_card(
+        docs.filter(F.col("doc_id") <= split), store, k=_PROFILE_KMV_K
+    )
+    card, v2 = incremental_dataset_card(
+        docs.filter(F.col("doc_id") > split), store, k=_PROFILE_KMV_K
+    )
+    _require(v2 > v1, "card state version must grow")
+    return card
 
 
 ORACLES["q114_incremental_dataset_card"] = _card_sketch_oracle()
@@ -2346,15 +2287,12 @@ ORACLES["q114_incremental_dataset_card"] = _card_sketch_oracle()
 # untouched and the oracle is q103's global replay over the canonical
 # CTE.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q115_incremental_canonical_dedup(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..functions.text import canonical_text
     from ..operators.dedup import incremental_minhash_dedup, nfc_normalize_docs
-    from ..pipeline.store import Store
 
     docs = (
         nfc_normalize_docs(
@@ -2363,34 +2301,24 @@ def q115_incremental_canonical_dedup(
         .withColumn("text", canonical_text("text"))
         .localCheckpoint(eager=True)  # one NFC pass, many consumers
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inccanon_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_minhash_dedup(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        r2 = incremental_minhash_dedup(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        _require(r2.index_version > r1.index_version, "index version must grow")
-        return _finish_with_store(
-            r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
-            .unionByName(
-                r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch"))
-            ),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    r1 = incremental_minhash_dedup(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    r2 = incremental_minhash_dedup(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    _require(r2.index_version > r1.index_version, "index version must grow")
+    return (
+        r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
+        .unionByName(r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch")))
+    )
 
 
 def _inc_canonical_oracle() -> str:
@@ -2514,14 +2442,13 @@ QUALIFY rank <= 5
 # canonical dominated rule, card = global card over the kept set —
 # which is exactly what the oracle replays.
 # ---------------------------------------------------------------------------
-def q117_incremental_intake_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q117_incremental_intake_e2e(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..functions.text import canonical_text
     from ..operators.dedup import incremental_minhash_dedup, nfc_normalize_docs
     from ..operators.sketch import incremental_dataset_card
-    from ..pipeline.store import Store
 
     docs = (
         nfc_normalize_docs(
@@ -2532,28 +2459,21 @@ def q117_incremental_intake_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("text", canonical_text("text"))
         .localCheckpoint(eager=True)  # one NFC pass, many consumers
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_intake_")
-    store = Store(spark, tmp_root)
-    try:
-        card = None
-        for batch in (
-            docs.filter(F.col("doc_id") <= split),
-            docs.filter(F.col("doc_id") > split),
-        ):
-            ded = incremental_minhash_dedup(
-                batch.select("doc_id", "text"),
-                store,
-                threshold=_INC_DEDUP_SIM,
-                portable=True,
-            )
-            kept = batch.join(ded.kept.select("doc_id"), "doc_id", "left_semi")
-            card, _ = incremental_dataset_card(kept, store, k=_PROFILE_KMV_K)
-        return _finish_with_store(card, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    card = None
+    for batch in (
+        docs.filter(F.col("doc_id") <= split),
+        docs.filter(F.col("doc_id") > split),
+    ):
+        ded = incremental_minhash_dedup(
+            batch.select("doc_id", "text"),
+            store,
+            threshold=_INC_DEDUP_SIM,
+            portable=True,
+        )
+        kept = batch.join(ded.kept.select("doc_id"), "doc_id", "left_semi")
+        card, _ = incremental_dataset_card(kept, store, k=_PROFILE_KMV_K)
+    return card
 
 
 def _intake_e2e_oracle() -> str:
@@ -2633,42 +2553,34 @@ ORACLES["q117_incremental_intake_e2e"] = _intake_e2e_oracle()
 _QS_K = 256
 
 
-def q118_incremental_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q118_incremental_quantiles(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.sketch import incremental_quantiles
-    from ..pipeline.store import Store
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incq_")
-    store = Store(spark, tmp_root)
-    try:
-        _, v1 = incremental_quantiles(
-            o.filter(F.col("o_orderkey") <= split),
-            store,
-            ["o_orderpriority"],
-            "o_orderkey",
-            "o_totalprice",
-            k=_QS_K,
-        )
-        est, v2 = incremental_quantiles(
-            o.filter(F.col("o_orderkey") > split),
-            store,
-            ["o_orderpriority"],
-            "o_orderkey",
-            "o_totalprice",
-            k=_QS_K,
-        )
-        _require(v2 > v1, "sample state version must grow")
-        return _finish_with_store(est, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(o, "o_orderkey")
+    _, v1 = incremental_quantiles(
+        o.filter(F.col("o_orderkey") <= split),
+        store,
+        ["o_orderpriority"],
+        "o_orderkey",
+        "o_totalprice",
+        k=_QS_K,
+    )
+    est, v2 = incremental_quantiles(
+        o.filter(F.col("o_orderkey") > split),
+        store,
+        ["o_orderpriority"],
+        "o_orderkey",
+        "o_totalprice",
+        k=_QS_K,
+    )
+    _require(v2 > v1, "sample state version must grow")
+    return est
 
 
 def _q118_oracle() -> str:
@@ -2704,28 +2616,18 @@ ORACLES["q118_incremental_quantiles"] = _q118_oracle()
 # can be scored); per batch the cost is one text pass over the batch
 # plus an O(batch-shingles) lookup against the 16-byte/shingle index.
 # ---------------------------------------------------------------------------
-def q119_incremental_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q119_incremental_novelty(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import incremental_novelty
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incnov_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_novelty(docs.filter(F.col("doc_id") <= split), store)
-        r2 = incremental_novelty(docs.filter(F.col("doc_id") > split), store)
-        _require(r2.index_version > r1.index_version, "index version must grow")
-        return _finish_with_store(
-            r1.scores.unionByName(r2.scores), tmp_root
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    r1 = incremental_novelty(docs.filter(F.col("doc_id") <= split), store)
+    r2 = incremental_novelty(docs.filter(F.col("doc_id") > split), store)
+    _require(r2.index_version > r1.index_version, "index version must grow")
+    return r1.scores.unionByName(r2.scores)
 
 
 ORACLES["q119_incremental_novelty"] = """
@@ -2773,16 +2675,14 @@ FROM documents d LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
 # (sql/01_schema.sql:95) — a production vector column needs exactly
 # this maintenance loop.
 # ---------------------------------------------------------------------------
-def q120_ivf_lifecycle_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q120_ivf_lifecycle_histogram(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.similarity import ivf_index_maintain
-    from ..pipeline.store import Store
 
     emb = load_table(spark, sf_dir, "embeddings")
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    split = (int(lo) + int(hi)) // 2
+    [split] = _cuts(emb, "vec_id")
     cents_a = emb.filter(F.col("vec_id") < 16).select(
         (F.col("vec_id") + 1).alias("cell_id"), "embedding"
     )
@@ -2800,24 +2700,17 @@ def q120_ivf_lifecycle_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cell_id") <= 4)
         .select("vec_id", "embedding")
     )
-    tmp_root = tempfile.mkdtemp(prefix="efiche_ivflife_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = ivf_index_maintain(
-            emb.filter(F.col("vec_id") <= split), store, centroids=cents_a
-        )
-        _require(r1.psi is None and not r1.retrained, "fold 1 seeds the gate")
-        r2 = ivf_index_maintain(fold2, store, retrain_centroids=cents_b)
-        _require(r2.retrained, "the planted regime change must alarm the gate")
-        return _finish_with_store(
-            store.read("ivf_cells")
-            .groupBy("cell_id")
-            .agg(F.count(F.lit(1)).alias("n_vectors")),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    r1 = ivf_index_maintain(
+        emb.filter(F.col("vec_id") <= split), store, centroids=cents_a
+    )
+    _require(r1.psi is None and not r1.retrained, "fold 1 seeds the gate")
+    r2 = ivf_index_maintain(fold2, store, retrain_centroids=cents_b)
+    _require(r2.retrained, "the planted regime change must alarm the gate")
+    return (
+        store.read("ivf_cells")
+        .groupBy("cell_id")
+        .agg(F.count(F.lit(1)).alias("n_vectors"))
+    )
 
 
 ORACLES["q120_ivf_lifecycle_histogram"] = """
@@ -2882,40 +2775,24 @@ FROM assign GROUP BY cell_id
 # normalized tables (sql/01_schema.sql) — here it is one composed op
 # over parquet with affected-layer surgery.
 # ---------------------------------------------------------------------------
-def q121_forget_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q121_forget_compliance(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.dedup import (
         forget_documents,
         incremental_minhash_dedup,
         incremental_novelty,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp_root = tempfile.mkdtemp(prefix="efiche_forget_")
-    store = Store(spark, tmp_root)
-    try:
-        r = incremental_minhash_dedup(
-            docs, store, threshold=_INC_DEDUP_SIM, portable=True
-        )
-        store.append_new(
-            r.kept.select("doc_id"), "dedup_kept_docs", key="doc_id"
-        )
-        incremental_novelty(docs, store)
-        forget_documents(
-            store, docs.filter(F.col("doc_id") % 17 == 3).select("doc_id")
-        )
-        out = (
-            store.read("dedup_kept_docs")
-            .join(store.read("novelty_scores"), "doc_id")
-            .select("doc_id", "n_shingles", "n_introduced", "introduced_frac")
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    r = incremental_minhash_dedup(docs, store, threshold=_INC_DEDUP_SIM, portable=True)
+    store.append_new(r.kept.select("doc_id"), "dedup_kept_docs", key="doc_id")
+    incremental_novelty(docs, store)
+    forget_documents(store, docs.filter(F.col("doc_id") % 17 == 3).select("doc_id"))
+    return (
+        store.read("dedup_kept_docs")
+        .join(store.read("novelty_scores"), "doc_id")
+        .select("doc_id", "n_shingles", "n_introduced", "introduced_frac")
+    )
 
 
 def _forget_oracle() -> str:
@@ -2971,35 +2848,20 @@ ORACLES["q121_forget_compliance"] = _forget_oracle()
 # Reference anchor: none (beyond-reference tier); the batch-global
 # form is q91.
 # ---------------------------------------------------------------------------
-def q122_incremental_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q122_incremental_tfidf(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.sketch import incremental_tfidf
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    c1 = int(lo) + (int(hi) - int(lo)) // 3
-    c2 = int(lo) + 2 * (int(hi) - int(lo)) // 3
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inctfidf_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_tfidf(
-            docs.filter(F.col("doc_id") <= c1), store, _TFIDF_TERMS
-        )
-        incremental_tfidf(
-            docs.filter(F.col("doc_id").between(c1 + 1, c2)),
-            store,
-            _TFIDF_TERMS,
-        )
-        out, _ = incremental_tfidf(
-            docs.filter(F.col("doc_id") > c2), store, _TFIDF_TERMS
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    c1, c2 = _cuts(docs, "doc_id", 3)
+    incremental_tfidf(docs.filter(F.col("doc_id") <= c1), store, _TFIDF_TERMS)
+    incremental_tfidf(
+        docs.filter(F.col("doc_id").between(c1 + 1, c2)),
+        store,
+        _TFIDF_TERMS,
+    )
+    out, _ = incremental_tfidf(docs.filter(F.col("doc_id") > c2), store, _TFIDF_TERMS)
+    return out
 
 
 ORACLES["q122_incremental_tfidf"] = ORACLES["q91_tfidf_terms"]
@@ -3017,37 +2879,23 @@ ORACLES["q122_incremental_tfidf"] = ORACLES["q91_tfidf_terms"]
 # Reference anchor: none (beyond-reference tier); batch-global form
 # is q66.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q123_incremental_decontamination(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import (
         incremental_decontamination,
         seed_benchmark_index,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_bench = F.pmod("doc_id", 20) == 0
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_decontam_")
-    store = Store(spark, tmp_root)
-    try:
-        seed_benchmark_index(store, docs.filter(is_bench))
-        intake = docs.filter(~is_bench)
-        incremental_decontamination(
-            intake.filter(F.col("doc_id") <= split), store
-        )
-        incremental_decontamination(
-            intake.filter(F.col("doc_id") > split), store
-        )
-        return _finish_with_store(store.read("decontam_flags"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    seed_benchmark_index(store, docs.filter(is_bench))
+    intake = docs.filter(~is_bench)
+    incremental_decontamination(intake.filter(F.col("doc_id") <= split), store)
+    incremental_decontamination(intake.filter(F.col("doc_id") > split), store)
+    return store.read("decontam_flags")
 
 
 def _decontam_oracle() -> str:
@@ -3070,29 +2918,16 @@ ORACLES["q123_incremental_decontamination"] = _decontam_oracle()
 # Reference anchor: none (beyond-reference tier); batch-global form
 # is q98.
 # ---------------------------------------------------------------------------
-def q124_incremental_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q124_incremental_ohlc(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.sketch import incremental_ohlc
-    from ..pipeline.store import Store
 
     e = load_table(spark, sf_dir, "events")
-    lo, hi = e.agg(F.min("event_id"), F.max("event_id")).first()
-    c1 = int(lo) + (int(hi) - int(lo)) // 3
-    c2 = int(lo) + 2 * (int(hi) - int(lo)) // 3
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incohlc_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_ohlc(e.filter(F.col("event_id") <= c1), store)
-        incremental_ohlc(
-            e.filter(F.col("event_id").between(c1 + 1, c2)), store
-        )
-        out, _ = incremental_ohlc(e.filter(F.col("event_id") > c2), store)
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    c1, c2 = _cuts(e, "event_id", 3)
+    incremental_ohlc(e.filter(F.col("event_id") <= c1), store)
+    incremental_ohlc(e.filter(F.col("event_id").between(c1 + 1, c2)), store)
+    out, _ = incremental_ohlc(e.filter(F.col("event_id") > c2), store)
+    return out
 
 
 ORACLES["q124_incremental_ohlc"] = ORACLES["q98_ohlc_bars"]
@@ -3109,33 +2944,18 @@ ORACLES["q124_incremental_ohlc"] = ORACLES["q98_ohlc_bars"]
 # Reference anchor: none (beyond-reference tier); batch-global form is
 # q68.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q125_incremental_source_rollup(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketch import incremental_source_rollup
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    c1 = int(lo) + (int(hi) - int(lo)) // 3
-    c2 = int(lo) + 2 * (int(hi) - int(lo)) // 3
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incrollup_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_source_rollup(docs.filter(F.col("doc_id") <= c1), store)
-        incremental_source_rollup(
-            docs.filter(F.col("doc_id").between(c1 + 1, c2)), store
-        )
-        out, _ = incremental_source_rollup(
-            docs.filter(F.col("doc_id") > c2), store
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    c1, c2 = _cuts(docs, "doc_id", 3)
+    incremental_source_rollup(docs.filter(F.col("doc_id") <= c1), store)
+    incremental_source_rollup(docs.filter(F.col("doc_id").between(c1 + 1, c2)), store)
+    out, _ = incremental_source_rollup(docs.filter(F.col("doc_id") > c2), store)
+    return out
 
 
 def _rollup_oracle() -> str:
@@ -3157,29 +2977,17 @@ ORACLES["q125_incremental_source_rollup"] = _rollup_oracle()
 # Reference anchor: none (beyond-reference tier); batch-global form is
 # q73.
 # ---------------------------------------------------------------------------
-def q126_incremental_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q126_incremental_retention(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.sketch import incremental_retention
-    from ..pipeline.store import Store
 
     e = load_table(spark, sf_dir, "events")
-    lo, hi = e.agg(F.min("event_id"), F.max("event_id")).first()
-    c1 = int(lo) + (int(hi) - int(lo)) // 3
-    c2 = int(lo) + 2 * (int(hi) - int(lo)) // 3
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incret_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_retention(e.filter(F.col("event_id") <= c1), store)
-        incremental_retention(
-            e.filter(F.col("event_id").between(c1 + 1, c2)), store
-        )
-        out = incremental_retention(e.filter(F.col("event_id") > c2), store)
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    c1, c2 = _cuts(e, "event_id", 3)
+    incremental_retention(e.filter(F.col("event_id") <= c1), store)
+    incremental_retention(e.filter(F.col("event_id").between(c1 + 1, c2)), store)
+    return incremental_retention(e.filter(F.col("event_id") > c2), store)
 
 
 def _retention_oracle() -> str:
@@ -3291,33 +3099,24 @@ ORACLES["q127_boilerplate_removal"] = _boiler_oracle()
 # Reference anchor: none (beyond-reference tier); batch-global form is
 # q127.
 # ---------------------------------------------------------------------------
-def q128_incremental_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q128_incremental_boilerplate(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import boilerplate_report, incremental_chunk_index
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incboiler_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_chunk_index(
-            docs.filter(F.col("doc_id") <= split), store, mod=_CDC_MOD
-        )
-        n2 = incremental_chunk_index(
-            docs.filter(F.col("doc_id") > split), store, mod=_CDC_MOD
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must introduce documents")
-        report = boilerplate_report(
-            store.read("chunk_index"), "doc_id", min_docs=_BOILER_MIN_DOCS
-        )
-        return _finish_with_store(report, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_chunk_index(
+        docs.filter(F.col("doc_id") <= split), store, mod=_CDC_MOD
+    )
+    n2 = incremental_chunk_index(
+        docs.filter(F.col("doc_id") > split), store, mod=_CDC_MOD
+    )
+    _require(n1 > 0 and n2 > 0, "both folds must introduce documents")
+    return boilerplate_report(
+        store.read("chunk_index"), "doc_id", min_docs=_BOILER_MIN_DOCS
+    )
 
 
 ORACLES["q128_incremental_boilerplate"] = ORACLES["q127_boilerplate_removal"]
@@ -3515,37 +3314,26 @@ WHERE cum_tokens <= {_MIX_TOKEN_BUDGET}
 # Reference anchor: none (beyond-reference tier); batch-global form
 # is q129, cluster maintenance is q109.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q131_incremental_representatives(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import incremental_representatives
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_increp_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_representatives(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        report = incremental_representatives(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        return _finish_with_store(report, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    incremental_representatives(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    return incremental_representatives(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
 
 
 def _inc_rep_oracle() -> str:
@@ -3619,37 +3407,26 @@ ORACLES["q131_incremental_representatives"] = _inc_rep_oracle()
 # Reference anchor: none (beyond-reference tier); batch-global form
 # is q71, dedup substrate q103.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q132_incremental_split_leakage(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import incremental_split_leakage
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incleak_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_split_leakage(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        report = incremental_split_leakage(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            threshold=_INC_DEDUP_SIM,
-            portable=True,
-        )
-        return _finish_with_store(report, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    incremental_split_leakage(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
+    return incremental_split_leakage(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        threshold=_INC_DEDUP_SIM,
+        portable=True,
+    )
 
 
 def _inc_leakage_oracle() -> str:
@@ -3798,12 +3575,8 @@ QUALIFY rank <= 5
 # Reference anchor: none (beyond-reference tier); the store substrate
 # is §2's versioned snapshot machinery.
 # ---------------------------------------------------------------------------
-def q135_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..pipeline.store import Store
-
+@_on_scratch_store
+def q135_release_diff(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -3814,19 +3587,10 @@ def q135_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") % 10 == 0, F.concat(F.col("text"), F.lit(" updated"))
         ).otherwise(F.col("text")),
     )
-    tmp_root = tempfile.mkdtemp(prefix="efiche_reldiff_")
-    store = Store(spark, tmp_root)
-    try:
-        a = store.write_version(v1, "corpus_release")
-        b = store.write_version(v2, "corpus_release")
-        _require(b > a, "the second release must get a later version")
-        diff = store.diff_versions(
-            "corpus_release", a, b, "doc_id", ["source", "text"]
-        )
-        return _finish_with_store(diff, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    a = store.write_version(v1, "corpus_release")
+    b = store.write_version(v2, "corpus_release")
+    _require(b > a, "the second release must get a later version")
+    return store.diff_versions("corpus_release", a, b, "doc_id", ["source", "text"])
 
 
 ORACLES["q135_release_diff"] = """
@@ -4256,28 +4020,18 @@ FROM terms GROUP BY 1
 # re-read; the read-side fold is over the vocab-bounded model layers.
 # Reference anchor: none (beyond-reference tier); batch form is q139.
 # ---------------------------------------------------------------------------
-def q140_incremental_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q140_incremental_lm(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.lm import incremental_lm, lm_model_from_store, ngram_lm_score
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % _LM_TRAIN_MOD == 0)
-    lo, hi = train.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inclm_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_lm(train.filter(F.col("doc_id") <= split), store)
-        r2 = incremental_lm(train.filter(F.col("doc_id") > split), store)
-        _require(r1.n_new > 0 and r2.n_new > 0, "both folds must introduce documents")
-        model = lm_model_from_store(store).localCheckpoint(eager=True)
-        return _finish_with_store(ngram_lm_score(docs, model, "doc_id", "text"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(train, "doc_id")
+    r1 = incremental_lm(train.filter(F.col("doc_id") <= split), store)
+    r2 = incremental_lm(train.filter(F.col("doc_id") > split), store)
+    _require(r1.n_new > 0 and r2.n_new > 0, "both folds must introduce documents")
+    model = lm_model_from_store(store).localCheckpoint(eager=True)
+    return ngram_lm_score(docs, model, "doc_id", "text")
 
 
 ORACLES["q140_incremental_lm"] = ORACLES["q139_ngram_lm_score"]
@@ -4384,42 +4138,29 @@ QUALIFY rank <= {_DSIR_N}
 # windows; the re-rank touches model state + corpus text once.
 # Reference anchor: none (beyond-reference tier); batch form is q141.
 # ---------------------------------------------------------------------------
-def q142_incremental_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q142_incremental_dsir(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.lm import dsir_select, incremental_lm, lm_model_from_store
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incdsir_")
-    store = Store(spark, tmp_root)
-    try:
-        for batch in (
-            docs.filter(F.col("doc_id") <= split),
-            docs.filter(F.col("doc_id") > split),
-        ):
-            rt = incremental_lm(
-                batch.filter(F.col("doc_id") % _LM_TRAIN_MOD == 0),
-                store,
-                model_table="lm_target",
-            )
-            rs = incremental_lm(batch, store, model_table="lm_source")
-            _require(
-                rt.n_new > 0 and rs.n_new > 0,
-                "both folds must introduce documents to both models",
-            )
-        target = lm_model_from_store(store, "lm_target").localCheckpoint(eager=True)
-        source = lm_model_from_store(store, "lm_source").localCheckpoint(eager=True)
-        return _finish_with_store(
-            dsir_select(docs, target, source, "doc_id", "text", n_select=_DSIR_N),
-            tmp_root,
+    [split] = _cuts(docs, "doc_id")
+    for batch in (
+        docs.filter(F.col("doc_id") <= split),
+        docs.filter(F.col("doc_id") > split),
+    ):
+        rt = incremental_lm(
+            batch.filter(F.col("doc_id") % _LM_TRAIN_MOD == 0),
+            store,
+            model_table="lm_target",
         )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+        rs = incremental_lm(batch, store, model_table="lm_source")
+        _require(
+            rt.n_new > 0 and rs.n_new > 0,
+            "both folds must introduce documents to both models",
+        )
+    target = lm_model_from_store(store, "lm_target").localCheckpoint(eager=True)
+    source = lm_model_from_store(store, "lm_source").localCheckpoint(eager=True)
+    return dsir_select(docs, target, source, "doc_id", "text", n_select=_DSIR_N)
 
 
 ORACLES["q142_incremental_dsir"] = ORACLES["q141_dsir_selection"]
@@ -4605,40 +4346,30 @@ FROM spans GROUP BY 1
 # Reference anchor: none (beyond-reference tier); batch-global form is
 # q144.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q145_incremental_duplicated_spans(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import _parallelize_scan, incremental_duplicated_spans
-    from ..pipeline.store import Store
 
     docs = _parallelize_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incspans_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            k=_SPAN_K,
-            min_docs=_SPAN_MIN_DOCS,
-        )
-        n2 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            k=_SPAN_K,
-            min_docs=_SPAN_MIN_DOCS,
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must introduce documents")
-        return _finish_with_store(store.read("span_reports"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_duplicated_spans(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        k=_SPAN_K,
+        min_docs=_SPAN_MIN_DOCS,
+    )
+    n2 = incremental_duplicated_spans(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        k=_SPAN_K,
+        min_docs=_SPAN_MIN_DOCS,
+    )
+    _require(n1 > 0 and n2 > 0, "both folds must introduce documents")
+    return store.read("span_reports")
 
 
 ORACLES["q145_incremental_duplicated_spans"] = ORACLES["q144_duplicated_spans"]
@@ -4941,27 +4672,16 @@ GROUP BY 1
 # the vocab-bounded merge loop only when retraining is scheduled.
 # Reference anchor: none (beyond-reference tier); one-shot form q148.
 # ---------------------------------------------------------------------------
-def q150_incremental_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q150_incremental_vocab(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.bpe import bpe_learn, incremental_vocab, vocab_from_store
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incvocab_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_vocab(docs.filter(F.col("doc_id") <= split), store)
-        r2 = incremental_vocab(docs.filter(F.col("doc_id") > split), store)
-        _require(r1.n_new > 0 and r2.n_new > 0, "both folds must add documents")
-        merges = bpe_learn(vocab_from_store(store), _BPE_MERGES).merges
-        return _finish_with_store(merges, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    r1 = incremental_vocab(docs.filter(F.col("doc_id") <= split), store)
+    r2 = incremental_vocab(docs.filter(F.col("doc_id") > split), store)
+    _require(r1.n_new > 0 and r2.n_new > 0, "both folds must add documents")
+    return bpe_learn(vocab_from_store(store), _BPE_MERGES).merges
 
 
 ORACLES["q150_incremental_vocab"] = ORACLES["q148_bpe_merges"]
@@ -4978,26 +4698,18 @@ ORACLES["q150_incremental_vocab"] = ORACLES["q148_bpe_merges"]
 # table; the oracle is q146's global pass verbatim.
 # Reference anchor: none (beyond-reference tier); one-shot form q146.
 # ---------------------------------------------------------------------------
-def q151_incremental_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q151_incremental_repetition(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.quality import incremental_repetition
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_increp_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_repetition(docs.filter(F.col("doc_id") <= split), store)
-        n2 = incremental_repetition(docs.filter(F.col("doc_id") > split), store)
-        _require(n1 > 0 and n2 > 0, "both folds must add documents")
-        return _finish_with_store(store.read("repetition_reports"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_repetition(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_repetition(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must add documents")
+    return store.read("repetition_reports")
 
 
 ORACLES["q151_incremental_repetition"] = ORACLES["q146_repetition_metrics"]
@@ -5078,33 +4790,22 @@ FROM p
 # Reference anchor: none (beyond-reference tier); one-shot raw-string
 # form q147.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q153_incremental_source_overlap(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketch import incremental_source_overlap
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incovl_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_source_overlap(
-            docs.filter(F.col("doc_id") <= split), store, n=_SRC_SHINGLE_N
-        )
-        out = incremental_source_overlap(
-            docs.filter(F.col("doc_id") > split), store, n=_SRC_SHINGLE_N
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    incremental_source_overlap(
+        docs.filter(F.col("doc_id") <= split), store, n=_SRC_SHINGLE_N
+    )
+    return incremental_source_overlap(
+        docs.filter(F.col("doc_id") > split), store, n=_SRC_SHINGLE_N
+    )
 
 
 ORACLES["q153_incremental_source_overlap"] = f"""
@@ -5267,8 +4968,7 @@ def q155_bpe_encode_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_encode_counts, bpe_learn, word_vocab
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
+    [split] = _cuts(docs, "doc_id")
     train_vocab = word_vocab(docs.filter(F.col("doc_id") <= split))
     res = bpe_learn(train_vocab, _BPE_MERGES)
     return bpe_encode_counts(docs, res.merges, train_vocab)
@@ -5342,33 +5042,22 @@ GROUP BY 1
 # oracle is q154's verbatim.
 # Reference anchor: none (beyond-reference tier); one-shot form q154.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q156_incremental_temperature_mixture(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketch import incremental_temperature_mixture
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incmix_")
-    store = Store(spark, tmp_root)
-    try:
-        incremental_temperature_mixture(
-            docs.filter(F.col("doc_id") <= split), store, _TEMP_TOTAL_BUDGET
-        )
-        out = incremental_temperature_mixture(
-            docs.filter(F.col("doc_id") > split), store, _TEMP_TOTAL_BUDGET
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    incremental_temperature_mixture(
+        docs.filter(F.col("doc_id") <= split), store, _TEMP_TOTAL_BUDGET
+    )
+    return incremental_temperature_mixture(
+        docs.filter(F.col("doc_id") > split), store, _TEMP_TOTAL_BUDGET
+    )
 
 
 ORACLES["q156_incremental_temperature_mixture"] = ORACLES[
@@ -5695,19 +5384,14 @@ FROM spans, UNNEST(range(pack_first, pack_last + 1)) AS u(pack_id)
 # verbatim.
 # Reference anchor: none (beyond-reference tier); one-shot form q158.
 # ---------------------------------------------------------------------------
-def q161_incremental_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..pipeline.store import Store
-
+@_on_scratch_store
+def q161_incremental_key_skew(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incskew_")
-    store = Store(spark, tmp_root)
+    [split] = _cuts(li, "l_orderkey")
 
     def fold(batch: DataFrame) -> None:
         wm = None
@@ -5728,20 +5412,14 @@ def q161_incremental_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store.append_version(delta, "key_counts")
 
-    try:
-        fold(li.filter(F.col("l_orderkey") <= split))
-        fold(li.filter(F.col("l_orderkey") > split))
-        per_key = (
-            store.read_union("key_counts")
-            .groupBy("l_suppkey")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        return _finish_with_store(
-            _skew_report(per_key, "l_suppkey"), tmp_root
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    fold(li.filter(F.col("l_orderkey") <= split))
+    fold(li.filter(F.col("l_orderkey") > split))
+    per_key = (
+        store.read_union("key_counts")
+        .groupBy("l_suppkey")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    return _skew_report(per_key, "l_suppkey")
 
 
 ORACLES["q161_incremental_key_skew"] = ORACLES["q158_join_key_skew"]
@@ -5855,26 +5533,16 @@ FROM staged
 # the oracle is q162's verbatim.
 # Reference anchor: none (beyond-reference tier); one-shot form q162.
 # ---------------------------------------------------------------------------
-def q163_incremental_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..pipeline.store import Store
-
+@_on_scratch_store
+def q163_incremental_curriculum(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     stats = _curriculum_doc_stats(spark, sf_dir)
-    lo, hi = stats.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inccurr_")
-    store = Store(spark, tmp_root)
+    [split] = _cuts(stats, "doc_id")
 
-    try:
-        for fold in (F.col("doc_id") <= split, F.col("doc_id") > split):
-            store.append_new(stats.filter(fold), "curriculum_stats", key="doc_id")
-        out = _curriculum_from_stats(store.read("curriculum_stats"))
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    for fold in (F.col("doc_id") <= split, F.col("doc_id") > split):
+        store.append_new(stats.filter(fold), "curriculum_stats", key="doc_id")
+    return _curriculum_from_stats(store.read("curriculum_stats"))
 
 
 ORACLES["q163_incremental_curriculum"] = ORACLES["q162_curriculum_schedule"]
@@ -6033,34 +5701,20 @@ FROM b LEFT JOIN a USING (source)
 # sum associativity; oracle is q165's verbatim.
 # Reference anchor: none (beyond-reference tier); one-shot form q165.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q166_incremental_dedup_savings(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.sketch import dedup_savings_result, incremental_dedup_savings
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incsave_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_dedup_savings(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_dedup_savings(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must add documents")
-        return _finish_with_store(dedup_savings_result(store), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_dedup_savings(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_dedup_savings(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must add documents")
+    return dedup_savings_result(store)
 
 
 ORACLES["q166_incremental_dedup_savings"] = ORACLES["q165_dedup_savings"]
@@ -6230,23 +5884,17 @@ ORACLES["q168_boilerplate_savings"] = _boiler_savings_oracle()
 # Reference anchor: none (beyond-reference tier); one-shot q167,
 # rule/state machinery q103.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q169_incremental_neardup_savings(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import incremental_minhash_dedup
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text",
         token_count("text").cast("long").alias("n_tokens"),
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incnds_")
-    store = Store(spark, tmp_root)
+    [split] = _cuts(docs, "doc_id")
 
     def fold(batch: DataFrame) -> int:
         res = incremental_minhash_dedup(
@@ -6288,19 +5936,12 @@ def q169_incremental_neardup_savings(
         store.append_version(delta, "nds_sums")
         return int(stats["n"])
 
-    try:
-        n1 = fold(docs.filter(F.col("doc_id") <= split))
-        n2 = fold(docs.filter(F.col("doc_id") > split))
-        _require(n1 > 0 and n2 > 0, "both folds must add documents")
-        from ..operators.sketch import dedup_savings_result
+    n1 = fold(docs.filter(F.col("doc_id") <= split))
+    n2 = fold(docs.filter(F.col("doc_id") > split))
+    _require(n1 > 0 and n2 > 0, "both folds must add documents")
+    from ..operators.sketch import dedup_savings_result
 
-        out = dedup_savings_result(
-            store, keepers_table="nds_kept", sums_table="nds_sums"
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    return dedup_savings_result(store, keepers_table="nds_kept", sums_table="nds_sums")
 
 
 ORACLES["q169_incremental_neardup_savings"] = ORACLES["q167_neardup_savings"]
@@ -6323,41 +5964,29 @@ ORACLES["q169_incremental_neardup_savings"] = ORACLES["q167_neardup_savings"]
 # Reference anchor: none (beyond-reference tier); one-shot q159,
 # model maintenance q140, drift trigger q143.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q170_incremental_quality_gate(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.lm import calibrate_quality_gate, gate_pool_batch
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % _LM_TRAIN_MOD == 0)
     pool = docs.filter(F.col("doc_id") % _LM_TRAIN_MOD != 0)
-    lo, hi = train.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    plo, phi = pool.agg(F.min("doc_id"), F.max("doc_id")).first()
-    psplit = (int(plo) + int(phi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_incgate_")
-    store = Store(spark, tmp_root)
-    try:
-        c1 = calibrate_quality_gate(store, train.filter(F.col("doc_id") <= split))
-        c2 = calibrate_quality_gate(store, train.filter(F.col("doc_id") > split))
-        _require(
-            c1.n_ref > 0 and c2.n_ref > c1.n_ref,
-            "both reference folds must add documents",
-        )
-        n1 = gate_pool_batch(pool.filter(F.col("doc_id") <= psplit), store)
-        n2 = gate_pool_batch(pool.filter(F.col("doc_id") > psplit), store)
-        _require(n1 > 0 and n2 > 0, "both pool batches must gate docs in")
-        out = store.read("gate_scores").select(
-            "doc_id", "n_tokens", "n_oov", "n_hit_bigrams", "xent", "threshold"
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(train, "doc_id")
+    [psplit] = _cuts(pool, "doc_id")
+    c1 = calibrate_quality_gate(store, train.filter(F.col("doc_id") <= split))
+    c2 = calibrate_quality_gate(store, train.filter(F.col("doc_id") > split))
+    _require(
+        c1.n_ref > 0 and c2.n_ref > c1.n_ref,
+        "both reference folds must add documents",
+    )
+    n1 = gate_pool_batch(pool.filter(F.col("doc_id") <= psplit), store)
+    n2 = gate_pool_batch(pool.filter(F.col("doc_id") > psplit), store)
+    _require(n1 > 0 and n2 > 0, "both pool batches must gate docs in")
+    return store.read("gate_scores").select(
+        "doc_id", "n_tokens", "n_oov", "n_hit_bigrams", "xent", "threshold"
+    )
 
 
 ORACLES["q170_incremental_quality_gate"] = ORACLES["q159_calibrated_quality_gate"]
@@ -6388,32 +6017,18 @@ def q171_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ≡ global by construction. Spark-only like q171 (no zlib in DuckDB);
 # the determinism differential plus the fold≡one-shot pytest pin it.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q172_incremental_compression_ratio(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.quality import incremental_compression_ratio
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_inczlib_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_compression_ratio(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_compression_ratio(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must score documents")
-        return _finish_with_store(store.read("zlib_scores"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_compression_ratio(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_compression_ratio(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must score documents")
+    return store.read("zlib_scores")
 
 
 # ---------------------------------------------------------------------------
@@ -6432,12 +6047,9 @@ def q172_incremental_compression_ratio(
 # Reference anchor: none (beyond-reference tier); index maintenance
 # q145, set-level decontamination q66/q123.
 # ---------------------------------------------------------------------------
-def q174_passage_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q174_passage_search(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.dedup import incremental_duplicated_spans, passage_search
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     needle = (
@@ -6448,23 +6060,11 @@ def q174_passage_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_psearch_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must index documents")
-        out = passage_search(docs, needle, "doc_id", "text", k=6, store=store)
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_duplicated_spans(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_duplicated_spans(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must index documents")
+    return passage_search(docs, needle, "doc_id", "text", k=6, store=store)
 
 
 ORACLES["q174_passage_search"] = """
@@ -6498,17 +6098,14 @@ WHERE instr(t, ' ' || p || ' ') > 0
 # Reference anchor: the fixed-benchmark decontamination pattern
 # (q66/q123); one-shot form q174.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q176_incremental_passage_flags(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import (
         incremental_passage_flags,
         seed_passage_watchlist,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     w = W.orderBy("doc_id")
@@ -6521,24 +6118,12 @@ def q176_incremental_passage_flags(
         )
         .localCheckpoint(eager=True)
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_watch_")
-    store = Store(spark, tmp_root)
-    try:
-        seed_passage_watchlist(store, passages)
-        n1 = incremental_passage_flags(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_passage_flags(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must check documents")
-        out = store.read("passage_flags").select("doc_id", "needle_id", "pos")
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    seed_passage_watchlist(store, passages)
+    n1 = incremental_passage_flags(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_passage_flags(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must check documents")
+    return store.read("passage_flags").select("doc_id", "needle_id", "pos")
 
 
 ORACLES["q176_incremental_passage_flags"] = """
@@ -6576,47 +6161,37 @@ WHERE instr(t, ' ' || p || ' ') > 0
 # Reference anchor: none (beyond-reference tier); family forget is
 # operators/dedup.py:forget_documents (q121), fold is q145.
 # ---------------------------------------------------------------------------
-def q177_span_forget_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q177_span_forget_compliance(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import (
         _parallelize_scan,
         forget_span_documents,
         incremental_duplicated_spans,
     )
-    from ..pipeline.store import Store
 
     docs = _parallelize_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_spanforget_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            k=_SPAN_K,
-            min_docs=_SPAN_MIN_DOCS,
-        )
-        n2 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            k=_SPAN_K,
-            min_docs=_SPAN_MIN_DOCS,
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must introduce documents")
-        gone = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
-        _require(gone.limit(1).count() > 0, "the forget set must be non-empty")
-        forget_span_documents(
-            store, gone, k=_SPAN_K, min_docs=_SPAN_MIN_DOCS
-        )
-        return _finish_with_store(store.read("span_reports"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_duplicated_spans(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        k=_SPAN_K,
+        min_docs=_SPAN_MIN_DOCS,
+    )
+    n2 = incremental_duplicated_spans(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        k=_SPAN_K,
+        min_docs=_SPAN_MIN_DOCS,
+    )
+    _require(n1 > 0 and n2 > 0, "both folds must introduce documents")
+    gone = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
+    _require(gone.limit(1).count() > 0, "the forget set must be non-empty")
+    forget_span_documents(store, gone, k=_SPAN_K, min_docs=_SPAN_MIN_DOCS)
+    return store.read("span_reports")
 
 
 # the one-shot q144 over the survivors, verbatim
@@ -6643,10 +6218,10 @@ assert "WHERE doc_id % 7 <> 0" in ORACLES["q177_span_forget_compliance"]
 # Reference anchor: none (beyond-reference tier); family forgets are
 # q121 (dedup estate), q177 (span estate), forget_vocab (tokenizer).
 # ---------------------------------------------------------------------------
-def q178_gate_forget_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q178_gate_forget_compliance(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.lm import (
         calibrate_quality_gate,
         forget_gate_documents,
@@ -6654,53 +6229,40 @@ def q178_gate_forget_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
         lm_model_from_store,
         ngram_lm_score,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % _LM_TRAIN_MOD == 0)
     pool = docs.filter(F.col("doc_id") % _LM_TRAIN_MOD != 0)
-    lo, hi = train.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_gateforget_")
-    store = Store(spark, tmp_root)
-    try:
-        calibrate_quality_gate(store, train.filter(F.col("doc_id") <= split))
-        calibrate_quality_gate(store, train.filter(F.col("doc_id") > split))
-        gate_pool_batch(pool, store)
-        gone = [
-            int(r["doc_id"])
-            for r in docs.filter(F.col("doc_id") % 17 == 0)
-            .select("doc_id")
-            .collect()
-        ]
-        _require(
-            any(i % _LM_TRAIN_MOD == 0 for i in gone)
-            and any(i % _LM_TRAIN_MOD != 0 for i in gone),
-            "the forget set must cover reference AND pool documents",
+    [split] = _cuts(train, "doc_id")
+    calibrate_quality_gate(store, train.filter(F.col("doc_id") <= split))
+    calibrate_quality_gate(store, train.filter(F.col("doc_id") > split))
+    gate_pool_batch(pool, store)
+    gone = [
+        int(r["doc_id"])
+        for r in docs.filter(F.col("doc_id") % 17 == 0)
+        .select("doc_id")
+        .collect()
+    ]
+    _require(
+        any(i % _LM_TRAIN_MOD == 0 for i in gone)
+        and any(i % _LM_TRAIN_MOD != 0 for i in gone),
+        "the forget set must cover reference AND pool documents",
+    )
+    calib = forget_gate_documents(store, gone)
+    # re-judge the SURVIVING pool under the post-forget state —
+    # the q159 shape the survivor oracle replays
+    model = lm_model_from_store(store, "gate_lm").localCheckpoint(eager=True)
+    return (
+        ngram_lm_score(
+            pool.filter(F.col("doc_id") % 17 != 0),
+            model,
+            "doc_id",
+            "text",
         )
-        calib = forget_gate_documents(store, gone)
-        # re-judge the SURVIVING pool under the post-forget state —
-        # the q159 shape the survivor oracle replays
-        model = lm_model_from_store(store, "gate_lm").localCheckpoint(
-            eager=True
-        )
-        out = (
-            ngram_lm_score(
-                pool.filter(F.col("doc_id") % 17 != 0),
-                model,
-                "doc_id",
-                "text",
-            )
-            .filter(F.col("xent") <= F.lit(calib.threshold))
-            .withColumn("threshold", F.lit(calib.threshold))
-            .select(
-                "doc_id", "n_tokens", "n_oov", "n_hit_bigrams", "xent", "threshold"
-            )
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+        .filter(F.col("xent") <= F.lit(calib.threshold))
+        .withColumn("threshold", F.lit(calib.threshold))
+        .select("doc_id", "n_tokens", "n_oov", "n_hit_bigrams", "xent", "threshold")
+    )
 
 
 # the one-shot q159 gate over the survivors, verbatim
@@ -6725,17 +6287,16 @@ assert "WHERE doc_id % 17 <> 0" in ORACLES["q178_gate_forget_compliance"]
 # Reference anchor: none (beyond-reference tier); intake half q176,
 # single-needle form q174, index maintenance q145.
 # ---------------------------------------------------------------------------
-def q179_passage_search_many(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q179_passage_search_many(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..operators.dedup import (
         incremental_duplicated_spans,
         passage_search_many,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     w = W.orderBy("doc_id")
@@ -6748,23 +6309,11 @@ def q179_passage_search_many(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_psmany_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must index documents")
-        out = passage_search_many(docs, passages, "doc_id", "text", k=6, store=store)
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_duplicated_spans(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_duplicated_spans(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must index documents")
+    return passage_search_many(docs, passages, "doc_id", "text", k=6, store=store)
 
 
 # the two-needle full retro scan — q176's oracle, verbatim
@@ -6843,39 +6392,27 @@ FROM corpus c LEFT JOIN sims ON c.vec_id = sims.vec_id
 # Reference anchor: none (beyond-reference tier); batch-global form
 # is q180, text twin q123.
 # ---------------------------------------------------------------------------
+@_on_scratch_store
 def q181_incremental_semantic_decontamination(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.similarity import (
         incremental_semantic_decontamination,
         seed_semantic_benchmark,
     )
-    from ..pipeline.store import Store
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_bench = F.pmod("vec_id", 20) == 0
-    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_semdecon_")
-    store = Store(spark, tmp_root)
-    try:
-        seed_semantic_benchmark(store, emb.filter(is_bench))
-        intake = emb.filter(~is_bench)
-        incremental_semantic_decontamination(
-            intake.filter(F.col("vec_id") <= split), store, tau=_SEMDECON_TAU
-        )
-        incremental_semantic_decontamination(
-            intake.filter(F.col("vec_id") > split), store, tau=_SEMDECON_TAU
-        )
-        return _finish_with_store(
-            store.read("semantic_decontam_flags"), tmp_root
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(emb, "vec_id")
+    seed_semantic_benchmark(store, emb.filter(is_bench))
+    intake = emb.filter(~is_bench)
+    incremental_semantic_decontamination(
+        intake.filter(F.col("vec_id") <= split), store, tau=_SEMDECON_TAU
+    )
+    incremental_semantic_decontamination(
+        intake.filter(F.col("vec_id") > split), store, tau=_SEMDECON_TAU
+    )
+    return store.read("semantic_decontam_flags")
 
 
 ORACLES["q181_incremental_semantic_decontamination"] = ORACLES[
@@ -6939,12 +6476,11 @@ FROM fanned
 # both engines see identical input.
 # Reference anchor: none (beyond-reference tier); one-shot form q65.
 # ---------------------------------------------------------------------------
-def q183_incremental_pii_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q183_incremental_pii_flags(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.quality import incremental_pii_flags
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents")
     injected = docs.select(
@@ -6961,22 +6497,11 @@ def q183_incremental_pii_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_piiflags_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_pii_flags(
-            injected.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_pii_flags(
-            injected.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must flag documents")
-        return _finish_with_store(store.read("pii_flags"), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_pii_flags(injected.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_pii_flags(injected.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must flag documents")
+    return store.read("pii_flags")
 
 
 ORACLES["q183_incremental_pii_flags"] = """
@@ -7029,48 +6554,33 @@ FROM counted
 _ISH_BITS, _ISH_BANDS, _ISH_MAXH = 48, 8, 3
 
 
+@_on_scratch_store
 def q184_incremental_simhash_dedup(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, store: Store
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.dedup import incremental_simhash_dedup
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_simhashdedup_")
-    store = Store(spark, tmp_root)
-    try:
-        r1 = incremental_simhash_dedup(
-            docs.filter(F.col("doc_id") <= split),
-            store,
-            bits=_ISH_BITS,
-            bands=_ISH_BANDS,
-            max_hamming=_ISH_MAXH,
-        )
-        r2 = incremental_simhash_dedup(
-            docs.filter(F.col("doc_id") > split),
-            store,
-            bits=_ISH_BITS,
-            bands=_ISH_BANDS,
-            max_hamming=_ISH_MAXH,
-        )
-        _require(
-            r2.index_version > r1.index_version, "index version must grow"
-        )
-        return _finish_with_store(
-            r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
-            .unionByName(
-                r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch"))
-            ),
-            tmp_root,
-        )
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    r1 = incremental_simhash_dedup(
+        docs.filter(F.col("doc_id") <= split),
+        store,
+        bits=_ISH_BITS,
+        bands=_ISH_BANDS,
+        max_hamming=_ISH_MAXH,
+    )
+    r2 = incremental_simhash_dedup(
+        docs.filter(F.col("doc_id") > split),
+        store,
+        bits=_ISH_BITS,
+        bands=_ISH_BANDS,
+        max_hamming=_ISH_MAXH,
+    )
+    _require(r2.index_version > r1.index_version, "index version must grow")
+    return (
+        r1.kept.select("doc_id", F.lit(1).cast("int").alias("batch"))
+        .unionByName(r2.kept.select("doc_id", F.lit(2).cast("int").alias("batch")))
+    )
 
 
 ORACLES["q184_incremental_simhash_dedup"] = f"""
@@ -7139,30 +6649,21 @@ ORACLES["q185_heavy_hitter_ngrams"] = _HH_ORACLE
 # window), then the HH read sums layers and thresholds. Maintained ≡
 # global exactly (associative sums), so the oracle is q185's.
 # ---------------------------------------------------------------------------
-def q186_incremental_ngram_hh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q186_incremental_ngram_hh(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.sketch import incremental_ngram_counts, ngram_heavy_hitters
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    s1 = int(lo) + (int(hi) - int(lo)) // 3
-    s2 = int(lo) + 2 * (int(hi) - int(lo)) // 3
-    tmp_root = tempfile.mkdtemp(prefix="efiche_ngramhh_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_ngram_counts(docs.filter(F.col("doc_id") <= s1), store)
-        incremental_ngram_counts(
-            docs.filter((F.col("doc_id") > s1) & (F.col("doc_id") <= s2)), store
-        )
-        incremental_ngram_counts(docs.filter(F.col("doc_id") > s2), store)
-        _require(n1 > 0, "first fold must see documents")
-        return _finish_with_store(ngram_heavy_hitters(store, den=_HH_DEN), tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    s1, s2 = _cuts(docs, "doc_id", 3)
+    n1 = incremental_ngram_counts(docs.filter(F.col("doc_id") <= s1), store)
+    incremental_ngram_counts(
+        docs.filter((F.col("doc_id") > s1) & (F.col("doc_id") <= s2)), store
+    )
+    incremental_ngram_counts(docs.filter(F.col("doc_id") > s2), store)
+    _require(n1 > 0, "first fold must see documents")
+    return ngram_heavy_hitters(store, den=_HH_DEN)
 
 
 ORACLES["q186_incremental_ngram_hh"] = _HH_ORACLE
@@ -7287,27 +6788,19 @@ _CSEARCH_MOD = 5
 _CSEARCH_MAXF = 20
 
 
-def q188_containment_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q188_containment_search(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import containment_search, incremental_duplicated_spans
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp_root = tempfile.mkdtemp(prefix="efiche_csearch_")
-    store = Store(spark, tmp_root)
-    try:
-        n = incremental_duplicated_spans(docs, store, k=_SPAN_K)
-        _require(n > 0, "the fold must index documents")
-        probes = docs.filter(F.col("doc_id") % _CSEARCH_MOD == 0)
-        out = containment_search(
-            store, probes, k=_SPAN_K, max_freq=_CSEARCH_MAXF, min_shared=2
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    n = incremental_duplicated_spans(docs, store, k=_SPAN_K)
+    _require(n > 0, "the fold must index documents")
+    probes = docs.filter(F.col("doc_id") % _CSEARCH_MOD == 0)
+    return containment_search(
+        store, probes, k=_SPAN_K, max_freq=_CSEARCH_MAXF, min_shared=2
+    )
 
 
 ORACLES["q188_containment_search"] = f"""
@@ -7386,12 +6879,9 @@ ORDER BY g.source, n_occurrences DESC, gram
 # operator under the same parameters, so the oracle is q187's SQL
 # verbatim.
 # ---------------------------------------------------------------------------
-def q192_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q192_ivf_pq_index(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.similarity import build_ivf_pq_index, ivf_pq_index_query
-    from ..pipeline.store import Store
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
@@ -7399,18 +6889,9 @@ def q192_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1).alias("cell_id"), F.col("embedding")
     )
     codebook = emb.filter(F.col("vec_id") < 16)
-    tmp_root = tempfile.mkdtemp(prefix="efiche_ivfpq_")
-    store = Store(spark, tmp_root)
-    try:
-        n = build_ivf_pq_index(emb, store, centroids, codebook, m=8)
-        _require(n > 0, "the build must index vectors")
-        out = ivf_pq_index_query(
-            store, queries, emb, m=8, k=5, nprobe=8, shortlist=20
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    n = build_ivf_pq_index(emb, store, centroids, codebook, m=8)
+    _require(n > 0, "the build must index vectors")
+    return ivf_pq_index_query(store, queries, emb, m=8, k=5, nprobe=8, shortlist=20)
 
 
 ORACLES["q192_ivf_pq_index"] = ORACLES["q187_ivf_pq_topk"]
@@ -7429,31 +6910,23 @@ ORACLES["q192_ivf_pq_index"] = ORACLES["q187_ivf_pq_topk"]
 # grouped per source. Reference anchor: none (beyond-reference tier);
 # search surface q188, per-passage guard q174.
 # ---------------------------------------------------------------------------
-def q193_containment_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q193_containment_coverage(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.dedup import (
         containment_coverage,
         incremental_duplicated_spans,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    tmp_root = tempfile.mkdtemp(prefix="efiche_ccov_")
-    store = Store(spark, tmp_root)
-    try:
-        n = incremental_duplicated_spans(
-            docs.filter(F.col("doc_id") % 3 != 0), store, k=_SPAN_K
-        )
-        _require(n > 0, "the fold must index documents")
-        out = containment_coverage(store, docs, by="source")
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    n = incremental_duplicated_spans(
+        docs.filter(F.col("doc_id") % 3 != 0), store, k=_SPAN_K
+    )
+    _require(n > 0, "the fold must index documents")
+    return containment_coverage(store, docs, by="source")
 
 
 ORACLES["q193_containment_coverage"] = """
@@ -7499,61 +6972,34 @@ def q194_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(docs, _bm25_query_frame(spark), k=10)
 
 
-def q195_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q195_bm25_index(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.retrieval import (
         bm25_index_query,
         incremental_term_postings,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_bm25_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_term_postings(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_term_postings(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must index documents")
-        out = bm25_index_query(store, _bm25_query_frame(spark), k=10)
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_term_postings(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_term_postings(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must index documents")
+    return bm25_index_query(store, _bm25_query_frame(spark), k=10)
 
 
-def q196_bm25_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q196_bm25_forget(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.retrieval import (
         bm25_index_query,
         forget_term_documents,
         incremental_term_postings,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp_root = tempfile.mkdtemp(prefix="efiche_bm25f_")
-    store = Store(spark, tmp_root)
-    try:
-        n = incremental_term_postings(docs, store)
-        _require(n > 0, "the fold must index documents")
-        forget_term_documents(
-            store, docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
-        )
-        out = bm25_index_query(store, _bm25_query_frame(spark), k=10)
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    n = incremental_term_postings(docs, store)
+    _require(n > 0, "the fold must index documents")
+    forget_term_documents(store, docs.filter(F.col("doc_id") % 7 == 0).select("doc_id"))
+    return bm25_index_query(store, _bm25_query_frame(spark), k=10)
 
 
 def _bm25_oracle(where: str = "TRUE") -> str:
@@ -7715,65 +7161,40 @@ def q200_proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q201_proximity_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q201_proximity_index(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.retrieval import (
         incremental_positional_postings,
         proximity_index_query,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_prox_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = incremental_positional_postings(
-            docs.filter(F.col("doc_id") <= split), store
-        )
-        n2 = incremental_positional_postings(
-            docs.filter(F.col("doc_id") > split), store
-        )
-        _require(n1 > 0 and n2 > 0, "both folds must index documents")
-        out = proximity_index_query(
-            store, _prox_query_frame(spark, docs), slop=_PROX_SLOP, k=10
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(docs, "doc_id")
+    n1 = incremental_positional_postings(docs.filter(F.col("doc_id") <= split), store)
+    n2 = incremental_positional_postings(docs.filter(F.col("doc_id") > split), store)
+    _require(n1 > 0 and n2 > 0, "both folds must index documents")
+    return proximity_index_query(
+        store, _prox_query_frame(spark, docs), slop=_PROX_SLOP, k=10
+    )
 
 
-def q202_proximity_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q202_proximity_forget(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.retrieval import (
         forget_positional_documents,
         incremental_positional_postings,
         proximity_index_query,
     )
-    from ..pipeline.store import Store
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp_root = tempfile.mkdtemp(prefix="efiche_proxf_")
-    store = Store(spark, tmp_root)
-    try:
-        n = incremental_positional_postings(docs, store)
-        _require(n > 0, "the fold must index documents")
-        forget_positional_documents(
-            store, docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
-        )
-        out = proximity_index_query(
-            store, _prox_query_frame(spark, docs), slop=_PROX_SLOP, k=10
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    n = incremental_positional_postings(docs, store)
+    _require(n > 0, "the fold must index documents")
+    forget_positional_documents(
+        store, docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    )
+    return proximity_index_query(
+        store, _prox_query_frame(spark, docs), slop=_PROX_SLOP, k=10
+    )
 
 
 ORACLES["q200_proximity_topk"] = _prox_oracle()
@@ -7856,12 +7277,9 @@ ORACLES["q203_bm25_mrr"] = _mrr_oracle()
 # table. Reference anchor: generalizes the reference's skipped-row
 # counting (etl_pipeline.py:110-112) into routed, tagged quarantine.
 # ---------------------------------------------------------------------------
-def q209_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q209_expectations_gate(spark: SparkSession, sf_dir: str, store: Store) -> DataFrame:
     from ..operators.expectations import Rule
-    from ..pipeline.store import Store
     from ..streaming.expectations_stream import expectations_gate_fold
 
     orders = load_table(spark, sf_dir, "orders")
@@ -7875,27 +7293,17 @@ def q209_expectations_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         Rule("cust_ref", "ref", "o_custkey", ref=customer, ref_col="c_custkey"),
     ]
     hard = ("cust_ref", "price_range", "priority_regex", "status_set")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_expgate_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = expectations_gate_fold(
-            orders.filter(F.col("o_orderkey") <= split),
-            store, rules, hard, "o_orderkey",
-        )
-        n2 = expectations_gate_fold(
-            orders.filter(F.col("o_orderkey") > split),
-            store, rules, hard, "o_orderkey",
-        )
-        _require(n1 > 0 and n2 > 0, "both gate folds must process rows")
-        out = store.read("expectations_quarantine").select(
-            "o_orderkey", "broken_rules"
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(orders, "o_orderkey")
+    n1 = expectations_gate_fold(
+        orders.filter(F.col("o_orderkey") <= split),
+        store, rules, hard, "o_orderkey",
+    )
+    n2 = expectations_gate_fold(
+        orders.filter(F.col("o_orderkey") > split),
+        store, rules, hard, "o_orderkey",
+    )
+    _require(n1 > 0 and n2 > 0, "both gate folds must process rows")
+    return store.read("expectations_quarantine").select("o_orderkey", "broken_rules")
 
 
 ORACLES["q209_expectations_gate"] = """
@@ -7933,12 +7341,11 @@ SELECT o_orderkey, broken_rules FROM tagged WHERE broken_rules <> ''
 # uniqueness count does NOT sum to the global one, which is exactly
 # why the gate refuses them as hard rules (the honest-scope rule).
 # ---------------------------------------------------------------------------
-def q212_incremental_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q212_incremental_expectations(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.expectations import Rule
-    from ..pipeline.store import Store
     from ..streaming.expectations_stream import (
         expectations_gate_fold,
         read_expectations_audit,
@@ -7954,33 +7361,25 @@ def q212_incremental_expectations(spark: SparkSession, sf_dir: str) -> DataFrame
         Rule("cust_ref", "ref", "o_custkey", ref=customer, ref_col="c_custkey"),
     ]
     hard = ("price_range", "status_set")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_expinc_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = expectations_gate_fold(
-            orders.filter(F.col("o_orderkey") <= split),
-            store, rules, hard, "o_orderkey",
+    [split] = _cuts(orders, "o_orderkey")
+    n1 = expectations_gate_fold(
+        orders.filter(F.col("o_orderkey") <= split),
+        store, rules, hard, "o_orderkey",
+    )
+    n2 = expectations_gate_fold(
+        orders.filter(F.col("o_orderkey") > split),
+        store, rules, hard, "o_orderkey",
+    )
+    _require(n1 > 0 and n2 > 0, "both gate folds must process rows")
+    return (
+        read_expectations_audit(store)
+        .groupBy("rule_id", "kind", "column")
+        .agg(
+            F.sum("n_rows").cast("long").alias("n_rows"),
+            F.sum("n_violations").cast("long").alias("n_violations"),
         )
-        n2 = expectations_gate_fold(
-            orders.filter(F.col("o_orderkey") > split),
-            store, rules, hard, "o_orderkey",
-        )
-        _require(n1 > 0 and n2 > 0, "both gate folds must process rows")
-        out = (
-            read_expectations_audit(store)
-            .groupBy("rule_id", "kind", "column")
-            .agg(
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("n_violations").cast("long").alias("n_violations"),
-            )
-            .withColumn("ok", F.col("n_violations") == 0)
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+        .withColumn("ok", F.col("n_violations") == 0)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -7992,12 +7391,11 @@ def q212_incremental_expectations(spark: SparkSession, sf_dir: str) -> DataFrame
 # data, and the watermark is what guarantees a forgotten id cannot
 # silently re-enter (its range is behind the committed watermark).
 # ---------------------------------------------------------------------------
-def q213_expectations_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_on_scratch_store
+def q213_expectations_forget(
+    spark: SparkSession, sf_dir: str, store: Store
+) -> DataFrame:
     from ..operators.expectations import Rule
-    from ..pipeline.store import Store
     from ..streaming.expectations_stream import (
         expectations_gate_fold,
         forget_expectation_rows,
@@ -8012,32 +7410,22 @@ def q213_expectations_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         Rule("cust_ref", "ref", "o_custkey", ref=customer, ref_col="c_custkey"),
     ]
     hard = ("cust_ref", "price_range", "priority_regex", "status_set")
-    lo, hi = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
-    split = (int(lo) + int(hi)) // 2
-    tmp_root = tempfile.mkdtemp(prefix="efiche_expfgt_")
-    store = Store(spark, tmp_root)
-    try:
-        n1 = expectations_gate_fold(
-            orders.filter(F.col("o_orderkey") <= split),
-            store, rules, hard, "o_orderkey",
-        )
-        n2 = expectations_gate_fold(
-            orders.filter(F.col("o_orderkey") > split),
-            store, rules, hard, "o_orderkey",
-        )
-        _require(n1 > 0 and n2 > 0, "both gate folds must process rows")
-        forget_expectation_rows(
-            store,
-            orders.filter(F.col("o_orderkey") % 9 == 0).select("o_orderkey"),
-            "o_orderkey",
-        )
-        out = store.read("expectations_quarantine").select(
-            "o_orderkey", "broken_rules"
-        )
-        return _finish_with_store(out, tmp_root)
-    except BaseException:
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        raise
+    [split] = _cuts(orders, "o_orderkey")
+    n1 = expectations_gate_fold(
+        orders.filter(F.col("o_orderkey") <= split),
+        store, rules, hard, "o_orderkey",
+    )
+    n2 = expectations_gate_fold(
+        orders.filter(F.col("o_orderkey") > split),
+        store, rules, hard, "o_orderkey",
+    )
+    _require(n1 > 0 and n2 > 0, "both gate folds must process rows")
+    forget_expectation_rows(
+        store,
+        orders.filter(F.col("o_orderkey") % 9 == 0).select("o_orderkey"),
+        "o_orderkey",
+    )
+    return store.read("expectations_quarantine").select("o_orderkey", "broken_rules")
 
 
 ORACLES["q213_expectations_forget"] = """

@@ -15,6 +15,8 @@ the reference (populate_warehouse.py → run_analytics.py).
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +33,11 @@ _BUILT: dict[str, Store] = {}
 def warehouse_store(spark: SparkSession, sf_dir: str) -> Store:
     store = _BUILT.get(sf_dir)
     if store is None:
-        store = Store(spark, tempfile.mkdtemp(prefix="efiche_wh_"))
+        # A session cache, not scoped to one query: the directory lives
+        # until the process exits.
+        root = tempfile.mkdtemp(prefix="efiche_wh_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        store = Store(spark, root)
         # The operational writes join build_warehouse's dependency
         # graph: each dim build starts the moment its source table
         # lands instead of after ALL operational writes finish.

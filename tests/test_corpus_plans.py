@@ -5,11 +5,23 @@ fails loudly instead of silently degrading at 100×.
 
 Plans are inspected POST-execution (AQE finalizes exchange reuse and
 join strategies only at runtime).
+
+The tests at the end cover ``_on_scratch_store``, the one wrapper that
+runs an incremental query against a throwaway Store, and guard that no
+other code under plans/ makes its own store directory.
 """
 
 from __future__ import annotations
 
+import ast
+import os
+import pathlib
+
+import pytest
+
+from efiche_data_pipeline_spark.plans import corpus
 from efiche_data_pipeline_spark.plans.corpus import (
+    _on_scratch_store,
     q84_weighted_order_sample,
     q86_zorder_orders,
     q88_char_entropy,
@@ -64,3 +76,87 @@ def test_q88_entropy_single_stage_after_repartition(spark):
     plan = _executed(q88_char_entropy(spark, SF_DIR))
     assert plan.count("Exchange") <= 2  # repartition (+AQE read)
     assert "Window" not in plan
+
+
+def _toy_query(fail: bool):
+    roots = []
+
+    @_on_scratch_store
+    def q_toy(spark, sf_dir, store):
+        roots.append(store.root)
+        store.overwrite(spark.range(3).withColumnRenamed("id", "k"), "t")
+        if fail:
+            raise ValueError("boom")
+        return store.read("t")
+
+    return q_toy, roots
+
+
+def test_scratch_store_pins_the_result_before_removing_it(spark):
+    """The result collects after the directory is gone: it was pinned
+    before the delete, because it reads store parquet lazily."""
+    q_toy, roots = _toy_query(fail=False)
+    out = q_toy(spark, SF_DIR)
+    assert q_toy.__name__ == "q_toy"
+    assert os.path.basename(roots[0]).startswith("efiche_q_toy_")
+    assert not os.path.exists(roots[0])
+    assert sorted(r["k"] for r in out.collect()) == [0, 1, 2]
+
+
+def test_scratch_store_is_removed_when_the_body_raises(spark):
+    q_toy, roots = _toy_query(fail=True)
+    with pytest.raises(ValueError, match="boom"):
+        q_toy(spark, SF_DIR)
+    assert roots and not os.path.exists(roots[0])
+
+
+# (module, top-level function) allowed to make a store directory:
+# the per-query wrapper, and the warehouse cache shared by a session
+_STORE_DIR_OWNERS = {
+    ("corpus.py", "_on_scratch_store"),
+    ("pipeline_queries.py", "warehouse_store"),
+}
+
+
+def _makes_store_dir(node: ast.AST) -> bool:
+    """A call to ``mkdtemp`` or ``Store(...)``, however it is named."""
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    return name in ("mkdtemp", "Store")
+
+
+def _cleans_up_by_hand(node: ast.AST) -> bool:
+    """``shutil`` in any form, or an ``except BaseException`` handler:
+    the pieces of a hand-written temp-store skeleton."""
+    if isinstance(node, ast.Name):
+        return node.id == "shutil"
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return "shutil" in {a.name for a in node.names} or getattr(
+            node, "module", None
+        ) == "shutil"
+    return (
+        isinstance(node, ast.ExceptHandler)
+        and isinstance(node.type, ast.Name)
+        and node.type.id == "BaseException"
+    )
+
+
+def test_only_the_scratch_wrapper_makes_a_store_directory():
+    """Queries under plans/ get a throwaway Store from
+    ``_on_scratch_store``; a query that calls ``mkdtemp`` or builds a
+    ``Store`` itself, or cleans one up by hand in corpus.py, copies
+    the skeleton the wrapper replaced."""
+    offenders = []
+    for path in sorted(pathlib.Path(corpus.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text(), str(path)).body:
+            owner = getattr(top, "name", None)
+            if (path.name, owner) in _STORE_DIR_OWNERS:
+                continue
+            for node in ast.walk(top):
+                if _makes_store_dir(node) or (
+                    path.name == "corpus.py" and _cleans_up_by_hand(node)
+                ):
+                    offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders

@@ -224,3 +224,36 @@ def test_audit_forgotten_proves_the_purge(spark, tmp_path):
     # and the versioned estates report their retained-version counts,
     # so a pending physical purge is visible on the sheet
     assert all(r["n_versions"] >= 1 for r in after)
+
+
+@pytest.mark.parametrize("doc", [1, 3], ids=["first_layer", "last_layer"])
+def test_audit_counts_readable_versions_after_vacuum(spark, tmp_path, doc):
+    """``n_versions`` counts the versions a reader can still open. A
+    vacuumed three-layer table keeps the layers its current manifest
+    unions over, but their own older manifests go, so it reports 1
+    and its current view is unchanged; before the vacuum it reports
+    every version."""
+    from efiche_data_pipeline_spark.pipeline.compliance import (
+        audit_forgotten,
+    )
+
+    store = Store(spark, str(tmp_path / "s"))
+    for i in (1, 2, 3):
+        store.append_version(
+            spark.createDataFrame([(i, f"t{i}")], "doc_id long, text string"), "t"
+        )
+    store.delete_keys(
+        "t", spark.createDataFrame([(doc,)], "doc_id long"), "doc_id"
+    )
+
+    def n_versions():
+        (row,) = audit_forgotten(store, [doc]).collect()
+        assert row["n_live_rows"] == 0
+        return row["n_versions"]
+
+    assert n_versions() > 1
+    live = sorted(map(tuple, store.read_union("t").collect()))
+    store.vacuum_versions("t", keep_last=1)
+    assert n_versions() == 1
+    assert store.readable_versions("t") == [store.current_version("t")]
+    assert sorted(map(tuple, store.read_union("t").collect())) == live

@@ -201,7 +201,7 @@ def test_read_version_is_read_union_at_every_version(spark, tmp_path):
     store.delete_keys("t", spark.createDataFrame([(1,)], "id long"), "id")
     store.compact_layers("t")
     store.write_version(_df(spark, 1, "c"), "t")
-    vs = [v for v in store.versions("t") if os.path.exists(store._manifest_file("t", v))]
+    vs = store.readable_versions("t")
     assert len(vs) == 5
     for v in [None, *vs]:
         assert _ids(store.read_version("t", v)) == _ids(store.read_union("t", v))

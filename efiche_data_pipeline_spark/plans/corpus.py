@@ -1557,7 +1557,9 @@ def _on_scratch_store(
 def _cuts(df: DataFrame, key: str, parts: int = 2) -> list[int]:
     """The ``parts - 1`` integer cut points that split ``df``'s
     ``[min(key), max(key)]`` range into ``parts`` batches; batch ``i``
-    holds the keys in ``(cut[i-1], cut[i]]``. One job."""
+    holds the keys in ``(cut[i-1], cut[i]]``. Two jobs under AQE: the
+    ``agg(min, max).first()`` runs a partial-aggregate map job, then a
+    result job."""
     lo, hi = (int(v) for v in df.agg(F.min(key), F.max(key)).first())
     return [lo + (hi - lo) * i // parts for i in range(1, parts)]
 

@@ -569,16 +569,14 @@ def build_warehouse(
             )
 
     done: dict[str, Future] = {}
-    # Post-write DataFrame per table: consumers reuse the one frame the
-    # producer created right after committing, instead of paying parquet
-    # footer/schema inference per store.read on the critical path
-    # (measured ~0.1 s per read × 7 reads ahead of the fact build).
-    # The schema cache behind store.read does not help here: a read
-    # right after a write opens new files, so it still infers.
-    written: dict[str, DataFrame] = {}
+    # The pre-published operational source frames (see below). Every
+    # other table is read back from the store by its consumer: a read
+    # right after a write takes the schema Spark wrote from the parquet
+    # footers (sources/parquet.py), so it launches no inference job.
+    published: dict[str, DataFrame] = {}
 
     def _get(name: str) -> DataFrame:
-        return written[name] if name in written else store.read(name)
+        return published[name] if name in published else store.read(name)
 
     def _submit(
         pool: ThreadPoolExecutor,
@@ -588,19 +586,13 @@ def build_warehouse(
         **write_kw,
     ):
         """Register table ``name``: wait for ``deps`` (tables created
-        earlier in the graph), build, write, publish the read-back
-        frame. Threads only block and submit; Spark's scheduler runs
-        the actual jobs."""
+        earlier in the graph), build, write. Threads only block and
+        submit; Spark's scheduler runs the actual jobs."""
 
         def task():
             for d in deps:
                 done[d].result()
             store.overwrite(builder(), name, **write_kw)
-            # Operational tables pre-publish their SOURCE frame (the
-            # committed copy is byte-identical) — keep that binding so
-            # consumers already planning against it see one frame.
-            if name not in written:
-                written[name] = store.read(name)
 
         done[name] = pool.submit(task)
 
@@ -617,7 +609,7 @@ def build_warehouse(
             # parallel with the real dataflow (guide §2.6, overlap
             # independent jobs; measured ~-1 s at sf0.1/local[32]).
             for name, df in operational.items():
-                written[name] = df
+                published[name] = df
                 _submit(pool, name, (), lambda d=df: d)
 
         # Operational tables are pre-published above, so downstream

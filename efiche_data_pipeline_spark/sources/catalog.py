@@ -6,10 +6,12 @@ Every table is a parquet scan, so Catalyst gets predicate pushdown,
 column pruning, and vectorized scans for free — the replacement for
 the reference's 30 B-tree indexes (reference: sql/01_schema.sql:19-134,
 sql/03_warehouse.sql:15-143). Reads go through
-:func:`sources.parquet.read_parquet`: the first read of a table infers
-its schema with one footer-scan job; a later read of the same,
-unchanged files in the same application reuses that schema and skips
-the job (the files are still listed, so the data is always current).
+:func:`sources.parquet.read_parquet`. The fixtures are written by
+pyarrow and DuckDB, so their footers carry no Spark schema: the first
+read of a table infers its schema with one footer-scan job, and a
+later read of the same, unchanged files in the same application
+reuses that schema and skips the job (the files are still listed, so
+the data is always current).
 """
 
 from __future__ import annotations

@@ -1,11 +1,14 @@
-"""The schema cache behind ``sources.parquet.read_parquet``: a read of
-unchanged files skips Spark's footer-scan (schema-inference) job and
-returns exactly what an inferring read returns; any change to the
-file set infers again."""
+"""The two ways ``sources.parquet.read_parquet`` skips Spark's
+schema-inference job, each returning exactly what an inferring read
+returns: the fingerprinted schema cache (a read of unchanged files),
+and the Spark schema in the parquet footers (a first read of files
+Spark wrote). Any change to the file set misses the cache; any file
+set the footers cannot vouch for is inferred by Spark."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
@@ -28,6 +31,13 @@ def cache(monkeypatch):
     fresh: OrderedDict = OrderedDict()
     monkeypatch.setattr(pq_read, "_cache", fresh)
     return fresh
+
+
+@pytest.fixture
+def no_footer(monkeypatch):
+    """Every cache miss infers with Spark: the footer read is patched
+    out, so the cache tests count the job a miss costs."""
+    monkeypatch.setattr(pq_read, "_footer_schema", lambda *a: None)
 
 
 def _rows(df):
@@ -57,7 +67,7 @@ def _assert_cached_read_matches(spark, inferred, *paths, **options):
     _assert_same(cached, inferred())
 
 
-def test_second_read_of_unchanged_path_launches_no_job(spark, cache, tmp_path):
+def test_second_read_of_unchanged_path_launches_no_job(spark, cache, no_footer, tmp_path):
     p = str(tmp_path / "t")
     _write(spark, p, "SELECT id, CAST(id AS STRING) AS s FROM range(10)")
     first, _ = jobs_launched(spark, lambda: read_parquet(spark, p))
@@ -66,7 +76,9 @@ def test_second_read_of_unchanged_path_launches_no_job(spark, cache, tmp_path):
     assert df.count() == 10
 
 
-def test_cached_single_file_and_directory_match_inferred(spark, cache, tmp_path):
+def test_cached_single_file_and_directory_match_inferred(
+    spark, cache, no_footer, tmp_path
+):
     d = str(tmp_path / "d")
     _write(
         spark, d,
@@ -81,7 +93,9 @@ def test_cached_single_file_and_directory_match_inferred(spark, cache, tmp_path)
     _assert_cached_read_matches(spark, lambda: spark.read.parquet(d), "file://" + d)
 
 
-def test_cached_partitioned_and_base_path_reads_match_inferred(spark, cache, tmp_path):
+def test_cached_partitioned_and_base_path_reads_match_inferred(
+    spark, cache, no_footer, tmp_path
+):
     p = str(tmp_path / "hive")
     _write(
         spark, p, "SELECT id, id % 3 AS k, CAST(id AS STRING) AS s FROM range(30)",
@@ -97,7 +111,7 @@ def test_cached_partitioned_and_base_path_reads_match_inferred(spark, cache, tmp
     )
 
 
-def test_cached_layered_read_union_matches_inferred(spark, cache, tmp_path):
+def test_cached_layered_read_union_matches_inferred(spark, cache, no_footer, tmp_path):
     store = Store(spark, str(tmp_path / "store"))
     for lo in (0, 10, 20):
         store.append_version(
@@ -132,7 +146,7 @@ def _miss_then_hit(spark, path):
     return df
 
 
-def test_cache_misses_after_overwrite_with_new_column(spark, cache, tmp_path):
+def test_cache_misses_after_overwrite_with_new_column(spark, cache, no_footer, tmp_path):
     p = str(tmp_path / "t")
     _write(spark, p, "SELECT id FROM range(5)")
     read_parquet(spark, p)
@@ -140,7 +154,7 @@ def test_cache_misses_after_overwrite_with_new_column(spark, cache, tmp_path):
     assert _miss_then_hit(spark, p).columns == ["id", "extra"]
 
 
-def test_cache_misses_after_append_of_new_file(spark, cache, tmp_path):
+def test_cache_misses_after_append_of_new_file(spark, cache, no_footer, tmp_path):
     p = str(tmp_path / "t")
     _write(spark, p, "SELECT id FROM range(5)")
     read_parquet(spark, p)
@@ -148,7 +162,7 @@ def test_cache_misses_after_append_of_new_file(spark, cache, tmp_path):
     assert _miss_then_hit(spark, p).count() == 9
 
 
-def test_cache_misses_after_new_partition_value(spark, cache, tmp_path):
+def test_cache_misses_after_new_partition_value(spark, cache, no_footer, tmp_path):
     p = str(tmp_path / "t")
     _write(spark, p, "SELECT id, id % 2 AS k FROM range(6)", partition_by=["k"])
     assert dict(read_parquet(spark, p).dtypes)["k"] == "int"
@@ -160,7 +174,7 @@ def test_cache_misses_after_new_partition_value(spark, cache, tmp_path):
     assert dict(_miss_then_hit(spark, p).dtypes)["k"] == "string"
 
 
-def test_cache_misses_after_deleted_file(spark, cache, tmp_path):
+def test_cache_misses_after_deleted_file(spark, cache, no_footer, tmp_path):
     p = str(tmp_path / "t")
     _write(spark, p, "SELECT id FROM range(8)")
     _write(spark, p, "SELECT id FROM range(8, 10)", mode="append")
@@ -241,3 +255,196 @@ def test_concurrent_reads_return_the_right_schema(spark, cache, tmp_path, monkey
     for f, cols in got:
         assert cols == paths[f]
     assert len(cache) == 3
+
+
+# The footer path: a first read of Spark-written files takes the
+# schema Spark stored in their footers and launches no job.
+
+
+def _assert_footer_read_matches(spark, *paths, **options):
+    """A first read launches no job and equals a plain inferring read;
+    the next read of the same files hits the cache."""
+    n, df = jobs_launched(spark, lambda: read_parquet(spark, *paths, **options))
+    assert n == 0
+    _assert_same(df, spark.read.options(**options).parquet(*paths))
+    again, _ = jobs_launched(spark, lambda: read_parquet(spark, *paths, **options))
+    assert again == 0
+    return df
+
+
+def test_footer_read_of_every_type_matches_inferred(spark, cache, tmp_path):
+    from pyspark.sql import types as T
+
+    nested = str(tmp_path / "nested")
+    _write(
+        spark, nested,
+        "SELECT id, named_struct('a', id, 'b', array(id, id + 1)) AS st, "
+        "map(CAST(id AS STRING), named_struct('x', id)) AS m, "
+        "array(named_struct('y', CAST(id AS STRING))) AS arr, "
+        "CAST(id * 1.5 AS DECIMAL(38,6)) AS dec, "
+        "DATE'2024-01-01' + CAST(id AS INT) AS day, "
+        "TIMESTAMP'2024-01-01 01:02:03' + make_interval(0, 0, 0, 0, id) AS ts, "
+        "TIMESTAMP_NTZ'2024-01-01 01:02:03' AS ts_ntz, "
+        "CAST(CAST(id AS STRING) AS BINARY) AS bin FROM range(6)",
+    )
+    df = _assert_footer_read_matches(spark, nested)
+    assert dict(df.dtypes)["ts_ntz"] == "timestamp_ntz"
+
+    strict = str(tmp_path / "strict")
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False, {"comment": "key"}),
+        T.StructField("tags", T.ArrayType(T.StringType(), False), False),
+        T.StructField("v", T.MapType(T.StringType(), T.LongType(), False), True),
+    ])
+    spark.createDataFrame([(1, ["a"], {"x": 1})], schema).write.parquet(strict)
+    df = _assert_footer_read_matches(spark, strict)
+    assert df.schema["k"].metadata == {"comment": "key"}
+
+    parts = str(tmp_path / "parts")
+    _write(
+        spark, parts,
+        "SELECT id, id % 3 AS big, CAST(id % 2 AS STRING) AS num, "
+        "DATE'2024-01-01' + CAST(id % 2 AS INT) AS day FROM range(12)",
+        partition_by=["big", "num"],
+    )
+    df = _assert_footer_read_matches(spark, parts)
+    # bigint and numeric-string partition values both read back as int
+    assert dict(df.dtypes)["big"] == "int" and dict(df.dtypes)["num"] == "int"
+
+    dates = str(tmp_path / "dates")
+    _write(
+        spark, dates,
+        "SELECT id, DATE'2024-01-01' + CAST(id % 2 AS INT) AS day FROM range(6)",
+        partition_by=["day"],
+    )
+    _assert_footer_read_matches(spark, dates)
+
+
+def test_footer_read_after_overwrite_with_new_column(spark, cache, tmp_path):
+    p = str(tmp_path / "t")
+    _write(spark, p, "SELECT id FROM range(5)")
+    read_parquet(spark, p)
+    _write(spark, p, "SELECT id, id + 1 AS extra FROM range(5)")
+    assert _assert_footer_read_matches(spark, p).columns == ["id", "extra"]
+
+
+def test_footer_read_after_append_new_partition_and_deleted_file(
+    spark, cache, tmp_path
+):
+    p = str(tmp_path / "t")
+    _write(spark, p, "SELECT id, id % 2 AS k FROM range(6)", partition_by=["k"])
+    read_parquet(spark, p)
+    _write(
+        spark, p, "SELECT id, id % 2 AS k FROM range(6, 9)", mode="append",
+        partition_by=["k"],
+    )
+    assert _assert_footer_read_matches(spark, p).count() == 9
+    _write(
+        spark, p, "SELECT id, 'x' AS k FROM range(2)", mode="append",
+        partition_by=["k"],
+    )
+    assert dict(_assert_footer_read_matches(spark, p).dtypes)["k"] == "string"
+    shutil.rmtree(os.path.join(p, "k=x"))
+    part = next(
+        os.path.join(p, "k=0", x)
+        for x in sorted(os.listdir(os.path.join(p, "k=0")))
+        if x.endswith(".parquet")
+    )
+    os.remove(part)
+    assert dict(_assert_footer_read_matches(spark, p).dtypes)["k"] == "int"
+
+
+def test_footer_read_of_a_copied_store(spark, cache, tmp_path):
+    store = Store(spark, str(tmp_path / "store"))
+    store.overwrite(spark.range(10).selectExpr("id", "id % 3 AS k"), "t", ["k"])
+    store.read("t")
+    copy = str(tmp_path / "copy")
+    shutil.copytree(store.root, copy)
+    n, df = jobs_launched(spark, lambda: Store(spark, copy).read("t"))
+    assert n == 0
+    _assert_same(df, spark.read.parquet(os.path.join(copy, "t")))
+
+
+def test_footer_read_of_layered_union_and_base_path(spark, cache, tmp_path):
+    store = Store(spark, str(tmp_path / "store"))
+    for lo in (0, 10, 20):
+        store.append_version(
+            spark.range(lo, lo + 10).selectExpr("id", "id * 3 AS v"), "layers"
+        )
+    cur = store.current_version("layers")
+    dirs = [store._vdir("layers", x) for x in store._layers("layers", cur)]
+    n, df = jobs_launched(spark, lambda: store.read_union("layers"))
+    assert n == 0
+    _assert_same(df, spark.read.parquet(*dirs))
+    assert df.count() == 30
+
+    for lo in (0, 10):
+        store.append_version(
+            spark.range(lo, lo + 10).selectExpr("id", "id % 4 AS g"), "hive", ["g"]
+        )
+    n, df = jobs_launched(spark, lambda: store.read_union("hive"))
+    assert n == 0
+    assert sorted(r["id"] for r in df.collect()) == list(range(20))
+
+    p = str(tmp_path / "base")
+    _write(spark, p, "SELECT id, id % 3 AS k FROM range(9)", partition_by=["k"])
+    _assert_footer_read_matches(spark, os.path.join(p, "k=1"), basePath=p)
+
+
+# Fallbacks: a file set the footers cannot vouch for is inferred by
+# Spark (at least one job), with the same result as a plain read.
+
+
+def _assert_inferred(spark, *paths, **options):
+    n, df = jobs_launched(spark, lambda: read_parquet(spark, *paths, **options))
+    assert n >= 1
+    _assert_same(df, spark.read.options(**options).parquet(*paths))
+    return df
+
+
+def test_pyarrow_written_file_is_inferred(spark, cache, tmp_path):
+    f = str(tmp_path / "a.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", None]}), f)
+    _assert_inferred(spark, f)
+
+
+def test_files_that_disagree_are_inferred(spark, cache, tmp_path):
+    p = str(tmp_path / "t")
+    _write(spark, p, "SELECT id FROM range(5)")
+    _write(spark, p, "SELECT id, id + 1 AS extra FROM range(5, 8)", mode="append")
+    _assert_inferred(spark, p)
+
+
+def test_summary_metadata_file_is_inferred(spark, cache, tmp_path):
+    p = str(tmp_path / "t")
+    _write(spark, p, "SELECT id, CAST(id AS STRING) AS s FROM range(5)")
+    part = next(x for x in sorted(os.listdir(p)) if x.endswith(".parquet"))
+    shutil.copy(os.path.join(p, part), os.path.join(p, "_metadata"))
+    _assert_inferred(spark, p)
+
+
+def test_merge_schema_option_and_conf_are_inferred(spark, cache, tmp_path):
+    p = str(tmp_path / "t")
+    _write(spark, p, "SELECT id FROM range(5)")
+    _assert_inferred(spark, p, mergeSchema="true")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        _assert_inferred(spark, p)
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_non_parquet_file_raises_as_a_plain_read(spark, cache, tmp_path):
+    p = str(tmp_path / "t")
+    _write(spark, p, "SELECT id FROM range(5)")
+    with open(os.path.join(p, "junk.txt"), "w") as f:
+        f.write("not parquet")
+
+    def error(read):
+        with pytest.raises(Exception) as e:
+            read().collect()
+        return type(e.value)
+
+    assert error(lambda: read_parquet(spark, p)) is error(
+        lambda: spark.read.parquet(p)
+    )

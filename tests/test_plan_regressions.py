@@ -219,11 +219,13 @@ def test_heavy_hitter_recount_broadcasts_candidates(spark):
         assert "SortMergeJoin" not in plan, plan
 
 
-# Job budgets: re-opening unchanged parquet costs 0 jobs. Every
-# inferring ``spark.read.parquet`` launches a footer-scan job; the
-# schema cache behind load_table and the Store reads skips it while
-# the files are unchanged. A refactor that routes these reads around
-# the cache brings that job back on every query of a session.
+# Job budgets: re-opening unchanged parquet costs 0 jobs, and so does
+# a first read of files Spark wrote. Every inferring
+# ``spark.read.parquet`` launches a footer-scan job; the schema cache
+# behind load_table and the Store reads skips it while the files are
+# unchanged, and the Spark schema in the footers skips it on a miss. A
+# refactor that routes these reads around sources.parquet brings that
+# job back on every read of a session.
 
 
 def test_reloading_fixture_table_launches_no_job(spark):
@@ -244,11 +246,34 @@ def test_rereading_unchanged_store_table_launches_no_job(spark, tmp_path):
     assert n == 0
 
 
+def test_store_read_right_after_a_write_launches_no_job(spark, tmp_path):
+    import shutil
+
+    from efiche_data_pipeline_spark.pipeline.store import Store
+
+    store = Store(spark, str(tmp_path / "store"))
+    df = spark.range(10).selectExpr("id", "id % 3 AS k")
+    store.overwrite(df, "t")
+    assert jobs_launched(spark, lambda: store.read("t"))[0] == 0
+    store.overwrite(df, "p", partition_by=["k"])
+    assert jobs_launched(spark, lambda: store.read("p"))[0] == 0
+    store.append(df, "t")
+    assert jobs_launched(spark, lambda: store.read("t"))[0] == 0
+    store.append_version(spark.range(3), "v")
+    store.read_union("v")
+    store.append_version(spark.range(3, 5), "v")
+    assert jobs_launched(spark, lambda: store.read_union("v"))[0] == 0
+    copy = str(tmp_path / "copy")
+    shutil.copytree(store.root, copy)
+    assert jobs_launched(spark, lambda: Store(spark, copy).read("p"))[0] == 0
+
+
 # Set-union folds write the unseen tuples through one
 # ``Store.append_new`` with no eager pin in front of it. The budgets
-# are the measured first- and second-fold job counts; an eager
-# ``localCheckpoint`` put back before the append costs one job more
-# per fold (4 and 5).
+# are the measured first- and second-fold job counts; the second fold
+# reads the table the first one wrote, which takes its schema from the
+# parquet footers. An eager ``localCheckpoint`` put back before the
+# append costs one job more per fold (3 and 4).
 def _fold_jobs(spark, fold, first, second):
     return [jobs_launched(spark, lambda b=b: fold(b))[0] for b in (first, second)]
 
@@ -270,7 +295,7 @@ def test_incremental_retention_job_budget(spark, tmp_path):
         ev.filter("event_id < 6"),
         ev.filter("event_id >= 6"),
     )
-    assert jobs == [3, 4]
+    assert jobs == [2, 3]
 
 
 def test_incremental_source_overlap_job_budget(spark, tmp_path):
@@ -290,13 +315,14 @@ def test_incremental_source_overlap_job_budget(spark, tmp_path):
         docs.filter("doc_id <= 2"),
         docs.filter("doc_id > 2"),
     )
-    assert jobs == [3, 4]
+    assert jobs == [2, 3]
 
 
 def test_layered_delete_keys_job_budget(spark, tmp_path):
     """delete_keys on a two-layer table where one layer holds the key:
     one job pins the keys, the locate scan and the cleaned layer's
-    write take the rest. The rewrite reads the affected layer and
+    write take the rest; reading the committed version back takes its
+    schema from the footers. The rewrite reads the affected layer and
     writes a freshly claimed directory, so it needs no pin of its own;
     putting one back costs one job more."""
     from efiche_data_pipeline_spark.pipeline.store import Store
@@ -307,8 +333,54 @@ def test_layered_delete_keys_job_budget(spark, tmp_path):
     store.read_union("t")
     keys = spark.createDataFrame([(5,)], "id long")
     n, v = jobs_launched(spark, lambda: store.delete_keys("t", keys, "id"))
-    assert n == 8
+    assert n == 7
     assert store._layers("t", v) == [1, 3]
     assert sorted(r["id"] for r in store.read_union("t").collect()) == [
         0, 1, 2, 3, 4, 6, 7
     ]
+
+
+# Whole-stage budgets (measured solo: 64 and 11/19 jobs in each of 3
+# runs). Most of the warehouse's jobs are AQE query-stage and
+# broadcast jobs of its 11 table builds; a read-back put back after
+# each write would not show here (the footers make it free), but an
+# extra action or a lost broadcast would.
+
+
+def test_build_warehouse_job_budget(spark, tmp_path):
+    from efiche_data_pipeline_spark.pipeline.generate import generate_operational
+    from efiche_data_pipeline_spark.pipeline.store import Store
+    from efiche_data_pipeline_spark.pipeline.warehouse import build_warehouse
+
+    store = Store(spark, str(tmp_path / "wh"))
+    for name, df in generate_operational(spark, n_patients=120, seed=5).items():
+        store.overwrite(df, name)
+    n, _ = jobs_launched(spark, lambda: build_warehouse(store, stats=False))
+    assert n == 64
+
+
+def test_staging_to_production_job_budget(spark, tmp_path):
+    """Two 300-row micro-batches: the second also anti-joins the
+    parents the first one wrote."""
+    from efiche_data_pipeline_spark.pipeline.generate import (
+        gen_facilities,
+        gen_patients,
+        gen_staging,
+    )
+    from efiche_data_pipeline_spark.pipeline.ingest import (
+        load_to_staging,
+        process_staging_to_production,
+    )
+    from efiche_data_pipeline_spark.pipeline.store import Store
+
+    store = Store(spark, str(tmp_path / "s"))
+    store.overwrite(gen_patients(spark, 200, seed=1), "patients")
+    store.overwrite(gen_facilities(spark, 8, seed=1), "facilities")
+    load_to_staging(store, gen_staging(spark, 1000, seed=42))
+    jobs = [
+        jobs_launched(
+            spark, lambda: process_staging_to_production(store, batch_limit=300)
+        )[0]
+        for _ in range(2)
+    ]
+    assert jobs == [11, 19]
